@@ -55,9 +55,17 @@ object QueryJobDiag {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val name = args(1)
-    val fn = SparkEntry.queries(name)
+    val usage = "usage: QueryJobDiag <sfDir> <queryName>"
+    if (args.length != 2) {
+      System.err.println(usage)
+      sys.exit(2)
+    }
+    val Array(sfDir, name) = args
+    val fn = SparkEntry.queries.getOrElse(name, {
+      System.err.println(s"$usage\nunknown query '$name'; known queries:\n  " +
+        SparkEntry.queries.keys.toSeq.sorted.mkString("\n  "))
+      sys.exit(2)
+    })
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val b = SparkSession.builder()
       .master(s"local[$cpus]")

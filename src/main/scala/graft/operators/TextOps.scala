@@ -1293,10 +1293,11 @@ object TextOps {
       val s = mb.sparkSession
       val mbDocs = mb.select(col("doc_id"), col("lang"), col("sh"), col("sk"))
         .persist()
-      // persist WITHOUT an eager count (the r14 perplexity lesson): the
-      // first action through here is probeClassify's own groups.count(),
-      // which pulls mbDocs into cache as a side effect; a dedicated
-      // count() was one more fixed-cost job per trigger for nothing
+      // persist WITHOUT an eager count (the r14 perplexity lesson): AQE is
+      // off in the micro-batch session, so probeClassify's eager
+      // groups.count() does not run either — mbDocs fills lazily inside
+      // the trigger's single write action (under BlockManager cache
+      // locks); a dedicated count() would be one more job per trigger
       val corpusIdx = corpusIdx0
       val seen =
         if (new java.io.File(seenDir).exists())

@@ -381,7 +381,7 @@ object VectorOps {
     * embeds it so a width change invalidates the persisted index.
     */
   private[graft] def corpusSignatureBits(spark: SparkSession, sfDir: String): Int = {
-    val n = Tables.embeddings(spark, sfDir).count()
+    val n = Tables.embeddingsCount(spark, sfDir)
     adaptiveSignatureBits(n * ArrivingBucketMin / 100)
   }
 

@@ -86,7 +86,7 @@ object AnnZone {
     */
   private[pipeline] def ivfqListsVersion(spark: SparkSession, sfDir: String,
       knownN: Option[Long] = None): String = {
-    val n = knownN.getOrElse(graft.Tables.embeddings(spark, sfDir).count())
+    val n = knownN.getOrElse(graft.Tables.embeddingsCount(spark, sfDir))
     s"ivfq-k${VectorOps.ivfqK(n)}-r${VectorOps.IvfReplication}" +
       s"-sqrtk-int8-v2"
   }
@@ -125,12 +125,9 @@ object AnnZone {
     * the catalog's no-build freshness probe (both must derive the SAME
     * adaptive width or freshness is judged against the wrong version).
     */
-  private[pipeline] def corpusLshBucketsVersion(spark: SparkSession,
-      sfDir: String): String = {
-    val bits = VectorOps.corpusSignatureBits(spark, sfDir)
+  private[pipeline] def corpusLshBucketsVersion(bits: Int): String =
     s"signlsh-t${graft.functions.SignLshBuckets.Tables}-b$bits-v2" +
       s"+$CorpusSubsetVersion"
-  }
 
   def ensureCorpusLshBuckets(spark: SparkSession, sfDir: String): DataFrame = {
     // Corpus-ADAPTIVE signature width (VERDICT r11 item 1): both the index
@@ -140,7 +137,7 @@ object AnnZone {
     // than probing a stale-width posting table.
     val bits = VectorOps.corpusSignatureBits(spark, sfDir)
     ArtifactZone.ensure(spark, s"${zoneDir(sfDir)}/lsh_buckets_corpus",
-      src(sfDir), corpusLshBucketsVersion(spark, sfDir)) {
+      src(sfDir), corpusLshBucketsVersion(bits)) {
       dir =>
         VectorOps.lshBuckets(spark,
             VectorOps.embFrame(spark, sfDir).filter(!VectorOps.isArrivingVec),

@@ -12,11 +12,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Layout (the Delta/Iceberg snapshot shape, scaled to a pointer file):
   * {{{
   *   <dir>/v-<token>/          version dirs: parquet + _SUCCESS + _GRAFT_SRC
+  *                             + _GRAFT_SCHEMA (the parquet's schema, DDL)
   *   <dir>/_GRAFT_PTR.<seq>    pointer files; content = version dir name
   * }}}
   * Readers resolve the HIGHEST-sequence pointer to a version dir and scan
-  * that. A build lands in a fresh uniquely-named version dir (never
-  * touching the committed one) and COMMITS by creating the next-sequence
+  * that under its stored schema ([[read]]: no footer inference, so a fresh
+  * `ensure` runs no Spark job). A build lands in a fresh uniquely-named
+  * version dir (never touching the committed one), records its schema, and
+  * COMMITS by creating the next-sequence
   * pointer via hard-link creation — atomic and EXCLUSIVE (link(2) fails on
   * an existing name), so the pointer slot is a true compare-and-swap:
   * two racing committers of the same sequence cannot both win, a commit
@@ -76,6 +79,27 @@ private[pipeline] object ArtifactZone {
     else Some(new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
   }
 
+  /** A version is fresh when its fingerprint matches AND it carries its
+    * schema — a version dir without `_GRAFT_SCHEMA` is rebuilt, never read
+    * by inference.
+    */
+  private def isFresh(versionPath: String, want: String): Boolean =
+    committedFp(versionPath).contains(want) &&
+      new java.io.File(versionPath, ZoneSchema.FileName).isFile
+
+  /** Scan a committed version dir under its stored schema. The single
+    * DataFrame read path for artifacts ([[ensure]], [[Catalog]]).
+    */
+  def read(spark: SparkSession, versionPath: String): DataFrame =
+    spark.read.schema(ZoneSchema.committed(versionPath)).parquet(versionPath)
+
+  /** Record a built version dir's schema — the one footer read an artifact
+    * pays, at build time, before the pointer CAS publishes it.
+    */
+  private[pipeline] def commitSchema(spark: SparkSession, versionPath: String): Unit =
+    ZoneSchema.write(new java.io.File(versionPath),
+      spark.read.parquet(versionPath).schema)
+
   /** Resolve only if committed AND fresh — fingerprint (source + algorithm
     * version) matches the current source. The no-build catalog registration
     * uses this so a committed-but-STALE zone (fixture regenerated since the
@@ -85,7 +109,7 @@ private[pipeline] object ArtifactZone {
       version: String = ""): Option[String] = {
     val want = RawZone.sourceFingerprint(source) +
       (if (version.isEmpty) "" else s"|$version")
-    resolve(dir).filter(p => committedFp(p).contains(want))
+    resolve(dir).filter(isFresh(_, want))
   }
 
   /** The pointer CAS: publish `vname` as `dir`'s current version at
@@ -154,8 +178,7 @@ private[pipeline] object ArtifactZone {
       version: String = "")(build: String => Unit): DataFrame = {
     def fingerprint(): String = RawZone.sourceFingerprint(source) +
       (if (version.isEmpty) "" else s"|$version")
-    def upToDate(want: String): Boolean =
-      resolve(dir).exists(p => committedFp(p).contains(want))
+    def upToDate(want: String): Boolean = resolve(dir).exists(isFresh(_, want))
     val lock = locks.computeIfAbsent(dir, _ => new Object)
     lock.synchronized {
       var want = fingerprint()
@@ -170,6 +193,7 @@ private[pipeline] object ArtifactZone {
         // pages on; locally it is target/ litter that survives rounds.
         try {
           build(vpath)
+          commitSchema(spark, vpath)
           java.nio.file.Files.write(
             new java.io.File(vpath, "_GRAFT_SRC").toPath, want.getBytes("UTF-8"))
         } catch {
@@ -221,7 +245,7 @@ private[pipeline] object ArtifactZone {
               "deployment bug (builds belong to one scheduled job), not a race")
         }
       }
-      spark.read.parquet(resolve(dir).getOrElse(throw new IllegalStateException(
+      read(spark, resolve(dir).getOrElse(throw new IllegalStateException(
         s"ArtifactZone: $dir reported up-to-date but resolves to no version")))
     }
   }

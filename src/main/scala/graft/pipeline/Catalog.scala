@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.Tables
+import graft.operators.VectorOps
 
 /** Session-catalog surface over the whole engine (VERDICT r12 residual gap
   * #4): one call registers the 10 base tables AND every committed zone
@@ -95,7 +96,8 @@ object Catalog {
         () => AnnZone.LshBucketsVersion,
         () => AnnZone.ensureLshBuckets(spark, sfDir)),
       ZoneView("lsh_buckets_corpus", s"$az/lsh_buckets_corpus", asrc,
-        () => AnnZone.corpusLshBucketsVersion(spark, sfDir),
+        () => AnnZone.corpusLshBucketsVersion(
+          VectorOps.corpusSignatureBits(spark, sfDir)),
         () => AnnZone.ensureCorpusLshBuckets(spark, sfDir)),
       ZoneView("pq_codebook", s"$az/pq_codebook", asrc,
         () => AnnZone.PqVersion,
@@ -143,7 +145,7 @@ object Catalog {
         // skipped like an uncommitted one, never silently served stale
         val committed = views.flatMap { v =>
           ArtifactZone.resolveFresh(v.dir, v.src, v.version())
-            .map(p => v.name -> spark.read.parquet(p))
+            .map(p => v.name -> ArtifactZone.read(spark, p))
         }
         val compactedDir = CompactedZone.compactedDir(sfDir)
         val compacted =
@@ -159,7 +161,7 @@ object Catalog {
     ArtifactZone.commitListeners.put(
       s"catalog-${System.identityHashCode(spark)}-$sfDir",
       (dir, versionPath) => byDir.get(dir).foreach { name =>
-        spark.read.parquet(versionPath).createOrReplaceTempView(name)
+        ArtifactZone.read(spark, versionPath).createOrReplaceTempView(name)
       })
     (base ++ zones).map { case (name, df) =>
       df.createOrReplaceTempView(name)
@@ -168,8 +170,8 @@ object Catalog {
   }
 
   /** The compacted zone's no-build freshness probe: committed
-    * (_GRAFT_MERGED present) and keyed to the raw zone's CURRENT
-    * fingerprint — the compacted `_GRAFT_SRC` mirrors the raw zone's, so a
+    * (_GRAFT_MERGED and _GRAFT_SCHEMA present) and keyed to the raw zone's
+    * CURRENT fingerprint — the compacted `_GRAFT_SRC` mirrors the raw zone's, so a
     * regenerated fixture (or an absent/stale raw zone) skips the view
     * instead of serving pre-regeneration merges.
     */
@@ -178,6 +180,7 @@ object Catalog {
     val fp = new java.io.File(compactedDir, "_GRAFT_SRC")
     val rawFp = new java.io.File(RawZone.rawZoneDir(sfDir), "_GRAFT_SRC")
     merged.isFile && fp.isFile && rawFp.isFile &&
+      new java.io.File(compactedDir, ZoneSchema.FileName).isFile &&
       java.util.Arrays.equals(
         java.nio.file.Files.readAllBytes(fp.toPath),
         java.nio.file.Files.readAllBytes(rawFp.toPath))

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 
 import graft.operators.EtlOps
 
@@ -13,27 +14,43 @@ import graft.operators.EtlOps
   * at 100 TB cannot: history grows without bound while the fresh slice per
   * arrival is tiny. This module maintains a COMPACTED zone — the
   * latest-wins resolution of all snapshots seen so far — that advances
-  * incrementally: each new snapshot partition is merged by touching ONLY
-  *   (a) that snapshot's raw-zone partition (partition-pruned JSON scan:
-  *       `extracted_at = <snap>` never lists other snapshot dirs), and
+  * incrementally: the pending snapshot partitions are merged by touching
+  * ONLY
+  *   (a) those snapshots' raw-zone partitions (partition-pruned JSON scan:
+  *       `extracted_at IN (<pending>)` never lists other snapshot dirs), and
   *   (b) the compacted buckets holding updated keys.
   *
   * Layout: parquet partitioned by `bucket = pmod(id, NumBuckets)` — the
-  * Spark-native MERGE substrate. An upsert rewrites the touched bucket
-  * directories wholesale (read base buckets ∪ updates → latest-per-key →
-  * swap), which is precisely how Delta/Iceberg-less parquet MERGE works at
-  * scale: cost ∝ |touched buckets| + |updates|, never ∝ history. Bucket
-  * count scales with the table (16 here ≈ test SFs; a 100 TB deployment
-  * raises it so a bucket stays executor-sized — the algebra is unchanged).
+  * Spark-native MERGE substrate — plus metadata files beside the buckets:
+  * {{{
+  *   bucket=<b>/       one parquet file per bucket
+  *   _GRAFT_MERGED     snapshots folded in, one per line
+  *   _GRAFT_SRC        the raw zone's source fingerprint
+  *   _GRAFT_SCHEMA     the physical schema (DDL) — a superset of every
+  *                     bucket file's; readers pass it with `.schema`
+  *   _GRAFT_RENAMES    column mapping, physical=logical (if any)
+  *   _GRAFT_DROPS      tombstoned physical columns (if any)
+  * }}}
+  * An upsert rewrites the touched bucket directories wholesale (read base
+  * buckets ∪ updates → latest-per-key → swap), which is precisely how
+  * Delta/Iceberg-less parquet MERGE works at scale: cost ∝ |touched
+  * buckets| + |updates|, never ∝ history. Bucket count scales with the
+  * table (16 here ≈ test SFs; a 100 TB deployment raises it so a bucket
+  * stays executor-sized — the algebra is unchanged).
   *
   * The swap is write-to-temp + per-bucket directory rename — atomic per
   * bucket on HDFS/posix; an object-store deployment would commit via
   * manifest instead. A type-WIDENING rewrite commits at ZONE granularity
   * (one directory swap) because its buckets are not mutually
-  * schema-compatible mid-rewrite (see [[mergeUpdates]]). `_GRAFT_MERGED` records which snapshots are already
-  * folded in (temp+rename, same torn-write defense as the cursor manifest),
-  * and a source fingerprint invalidates the whole zone when the fixture
-  * parquet is regenerated (ADVICE r3 rule, same as [[RawZone]]).
+  * schema-compatible mid-rewrite (see [[mergeUpdates]]). `_GRAFT_MERGED`
+  * records which snapshots are already folded in (temp+rename, same
+  * torn-write defense as the cursor manifest), and a source fingerprint
+  * invalidates the whole zone when the fixture parquet is regenerated
+  * (ADVICE r3 rule, same as [[RawZone]]). `_GRAFT_SCHEMA` is written
+  * before the per-bucket swap (a superset is safe: columns a file lacks
+  * read as null) and, for the widening swap, inside the staged dir so one
+  * rename commits both; a zone without it is stale and rebuilt — there is
+  * no inferring read path.
   *
   * Equivalence contract: after every snapshot is merged, the compacted
   * zone's projection is row-identical to the full recompute
@@ -81,15 +98,15 @@ object CompactedZone {
       .distinct.sorted
   }
 
-  /** ONE snapshot's runs, flattened to upsert rows — the partition-pruned
-    * incremental read (the equality filter on the partition column prunes
-    * at directory level; `CompactionSpec` asserts via `input_file_name`
-    * that no other snapshot's files are opened).
+  /** The given snapshots' runs, flattened to upsert rows — the
+    * partition-pruned incremental read (the IN filter on the partition
+    * column prunes at directory level; `CompactionSpec` asserts via
+    * `input_file_name` that no other snapshot's files are opened).
     */
   private[graft] def snapshotUpdates(spark: SparkSession, rawDir: String,
-      snap: String): DataFrame =
+      snaps: String*): DataFrame =
     spark.read.schema(RawZone.pageSchema).json(rawDir)
-      .filter(col("extracted_at") === snap)
+      .filter(col("extracted_at").isin(snaps: _*))
       .select(col("extracted_at"), explode(col("workflow_runs")).as("run"))
       .select(
         col("run.id").as("id"),
@@ -172,8 +189,9 @@ object CompactedZone {
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 
-  /** Read the zone under its LOGICAL schema: the mergeSchema scan (files
-    * may be schema-heterogeneous after additive evolution) with dropped
+  /** Read the zone under its LOGICAL schema: a scan under the stored
+    * `_GRAFT_SCHEMA` (files may be schema-heterogeneous after additive
+    * evolution; columns a file lacks read as null) with dropped
     * physical columns masked and the column-mapping renames applied as ONE
     * atomic projection. Every consumer reads through this so a rename or
     * drop is visible everywhere at once.
@@ -189,7 +207,7 @@ object CompactedZone {
   private[graft] def readZone(spark: SparkSession, dir: String): DataFrame = {
     val renames = readRenames(dir)
     val drops = readDrops(dir)
-    val scan = spark.read.option("mergeSchema", "true").parquet(dir)
+    val scan = spark.read.schema(ZoneSchema.committed(dir)).parquet(dir)
     scan.select(scan.schema.fieldNames.toSeq
       .filterNot(drops.contains)
       .map(p => col(p).as(renames.getOrElse(p, p))): _*)
@@ -239,12 +257,15 @@ object CompactedZone {
     // write and a batch-side projection — never a data rewrite
     val existing = readRenames(dir)
     val dropped0 = readDrops(dir)
-    val zoneFiles = Option(zone.listFiles()).toSeq.flatten
-      .exists(f => f.isDirectory && f.getName.startsWith("bucket="))
-    val physSchema: Seq[String] =
-      if (zoneFiles) spark.read.option("mergeSchema", "true")
-        .parquet(dir).schema.fieldNames.toSeq
-      else Seq.empty
+    val existingBuckets = Option(zone.listFiles()).toSeq.flatten
+      .filter(f => f.isDirectory && f.getName.startsWith("bucket="))
+      .map(_.getName.stripPrefix("bucket=").toInt)
+    val zoneFiles = existingBuckets.nonEmpty
+    // the zone's physical schema as its last commit recorded it — no
+    // footer scan; bucket files without it are a zone to rebuild
+    val zoneSchema: StructType =
+      if (zoneFiles) ZoneSchema.committed(dir) else new StructType()
+    val physSchema: Seq[String] = zoneSchema.fieldNames.toSeq
     var mapping: Map[String, String] = existing
     var droppedPhys: Set[String] = dropped0
     if (renames.nonEmpty || drops.nonEmpty) {
@@ -308,14 +329,14 @@ object CompactedZone {
     if (droppedPhys != dropped0) writeDrops(zone, droppedPhys)
     val updates = updates0.select(batchCols.map { case (l, p) =>
       col(l).as(p) }: _*)
-    val existingBuckets = Option(zone.listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("bucket="))
-      .map(_.getName.stripPrefix("bucket=").toInt)
 
     // the buckets this snapshot's keys land in — a ≤ NumBuckets-row driver
-    // list; everything outside it is untouched by the merge
-    val touchedByKeys: Seq[Int] = updates.select(col("bucket")).distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
+    // list; everything outside it is untouched by the merge. Deduplicated
+    // per partition, then on the driver: one single-stage job, where
+    // distinct() would add a shuffle stage (a second job under AQE)
+    val touchedByKeys: Seq[Int] = updates.select(col("bucket")).rdd
+      .mapPartitions(rows => rows.map(_.getInt(0)).toSet.iterator)
+      .collect().distinct.toSeq.sorted
     if (touchedByKeys.isEmpty) return Seq.empty // empty batch: nothing to rewrite
 
     // TYPE-WIDENING EVOLUTION (r13, one notch past r12's additive rule):
@@ -332,26 +353,21 @@ object CompactedZone {
     // touched set. ANY other retype (narrowing, cross-family) is rejected
     // loudly — that is a zone rebuild decision, never a silent merge
     // (the Delta/Iceberg stance). Pinned in CompactionSpec.
-    import org.apache.spark.sql.types.{IntegerType, LongType}
     val widened: Set[String] =
-      if (existingBuckets.isEmpty) Set.empty
-      else {
-        val zoneSchema = spark.read.option("mergeSchema", "true").parquet(dir).schema
-        zoneSchema.fields.flatMap { zf =>
-          updates.schema.fields.find(_.name == zf.name).flatMap { uf =>
-            (zf.dataType, uf.dataType) match {
-              case (a, b) if a == b => None
-              case (IntegerType, LongType) => Some(zf.name) // widen the zone
-              case (LongType, IntegerType) => None // older-schema batch: coerces up
-              case (a, b) => throw new IllegalStateException(
-                s"CompactedZone: column '${zf.name}' retype $a -> $b is not a " +
-                  "merge — only int->long widening evolves in place; " +
-                  "narrowing or cross-family retypes are a zone REBUILD and " +
-                  "must be an explicit operator decision, never a silent merge")
-            }
+      zoneSchema.fields.flatMap { zf =>
+        updates.schema.fields.find(_.name == zf.name).flatMap { uf =>
+          (zf.dataType, uf.dataType) match {
+            case (a, b) if a == b => None
+            case (IntegerType, LongType) => Some(zf.name) // widen the zone
+            case (LongType, IntegerType) => None // older-schema batch: coerces up
+            case (a, b) => throw new IllegalStateException(
+              s"CompactedZone: column '${zf.name}' retype $a -> $b is not a " +
+                "merge — only int->long widening evolves in place; " +
+                "narrowing or cross-family retypes are a zone REBUILD and " +
+                "must be an explicit operator decision, never a silent merge")
           }
-        }.toSet
-      }
+        }
+      }.toSet
     // ADVICE r14 low #4: the widening swap's crash-recovery contract (an
     // ABSENT zone, rebuilt by ensureCompacted from the raw zone) does NOT
     // compose with a checkpointed streaming caller — the stream's
@@ -367,14 +383,25 @@ object CompactedZone {
     val touched: Seq[Int] =
       if (widened.isEmpty) touchedByKeys
       else (existingBuckets ++ touchedByKeys).distinct.sorted
+    // an OLDER-schema batch (int where the zone is already long) is cast up
+    // before the merge, so the files it writes carry the zone's type even
+    // where no base bucket joins the union to coerce it
+    val aligned = zoneSchema.fields.foldLeft(updates) { (df, zf) =>
+      df.schema.find(_.name == zf.name) match {
+        case Some(uf) if uf.dataType == IntegerType && zf.dataType == LongType =>
+          df.withColumn(zf.name, col(zf.name).cast(LongType))
+        case _ => df
+      }
+    }
 
     val base: Option[DataFrame] = {
       val present = existingBuckets.toSet.intersect(touched.toSet)
       if (present.isEmpty) None
-      // mergeSchema: after an additive-column merge (below) bucket files
-      // can carry heterogeneous schemas; the union of all file schemas is
-      // the zone's schema, exactly Delta/Iceberg's additive-evolution rule
-      else Some(spark.read.option("mergeSchema", "true").parquet(dir)
+      // the stored schema: after an additive-column merge (below) bucket
+      // files can carry heterogeneous schemas; the union of all file
+      // schemas is the zone's schema, exactly Delta/Iceberg's
+      // additive-evolution rule, and _GRAFT_SCHEMA records that union
+      else Some(spark.read.schema(zoneSchema).parquet(dir)
         .filter(col("bucket").isin(present.toSeq.map(Integer.valueOf): _*)))
     }
     // latest-wins within the batch too (a streaming batch can carry the
@@ -388,18 +415,36 @@ object CompactedZone {
     // Delta/Iceberg additive rule — declared drops are metadata-only via
     // `drops`, int→long widening rewrites in place below, everything else
     // throws). Pinned in CompactionSpec.
+    //
+    // ONE shuffle: repartition by bucket (one file per bucket dir, not
+    // tasks × buckets), then latest-per-key on (bucket, id). bucket is a
+    // function of id, so the groups are the same rows as keying on id
+    // alone, and the aggregate WindowDedupToMaxBy plans reuses the bucket
+    // partitioning instead of shuffling again.
     val merged = EtlOps.latestPerKey(
-      base.fold(updates)(_.unionByName(updates, allowMissingColumns = true)),
-      Seq(col("id")), Seq(col("extracted_at")))
+      base.fold(aligned)(_.unionByName(aligned, allowMissingColumns = true))
+        .repartition(col("bucket")),
+      Seq(col("bucket"), col("id")), Seq(col("extracted_at")))
+    // the new physical schema: the old one (a superset of every untouched
+    // file) with the rewritten buckets' types and new columns folded in,
+    // the partition column last as a parquet scan reports it
+    val nextSchema: StructType = {
+      val written = merged.schema.filterNot(_.name == "bucket")
+      val kept = zoneSchema.filterNot(_.name == "bucket").map(zf =>
+        written.find(_.name == zf.name).getOrElse(zf))
+      StructType(kept ++ written.filterNot(f => kept.exists(_.name == f.name)) ++
+        merged.schema.filter(_.name == "bucket"))
+    }
 
     // write-to-temp + swap: Spark refuses to overwrite a path that feeds
     // the plan being written, and rightly so — the temp dir makes the
     // merge all-or-nothing per bucket
     val tmp = dir + ".tmp-merge"
-    merged
-      .repartition(col("bucket")) // one file per bucket dir, not tasks × buckets
-      .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(tmp)
+    merged.write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(tmp)
     if (widened.isEmpty) {
+      // the schema commits BEFORE the swap: a crash mid-loop leaves it a
+      // superset of the files, and a missing column reads as null
+      ZoneSchema.write(zone, nextSchema)
       // per-bucket swap — atomic per bucket; a crash mid-loop leaves some
       // buckets updated and some not, which is SAFE here: the snapshot is
       // not yet recorded in _GRAFT_MERGED, and latest-wins makes the replay
@@ -435,6 +480,9 @@ object CompactedZone {
           new java.io.File(tmpDir, f.getName).toPath,
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       }
+      // the widened schema rides in the staged dir: one rename commits
+      // the homogeneous files and the schema that describes them
+      ZoneSchema.write(tmpDir, nextSchema)
       val old = new java.io.File(dir + ".old-widen")
       org.apache.commons.io.FileUtils.deleteQuietly(old)
       java.nio.file.Files.move(zone.toPath, old.toPath)
@@ -467,8 +515,11 @@ object CompactedZone {
       if (raw.isFile) new String(java.nio.file.Files.readAllBytes(raw.toPath), "UTF-8")
       else "unfingerprinted"
     }
+    // a zone without a committed schema is stale too: it is rebuilt,
+    // never read by footer inference
     val stale = zone.isDirectory && !(fpFile.isFile &&
-      new String(java.nio.file.Files.readAllBytes(fpFile.toPath), "UTF-8") == srcFp)
+      new String(java.nio.file.Files.readAllBytes(fpFile.toPath), "UTF-8") == srcFp &&
+      new java.io.File(zone, ZoneSchema.FileName).isFile)
     if (stale) org.apache.commons.io.FileUtils.deleteQuietly(zone)
     // sweep staging debris a crashed merge/widening may have left (the
     // recovery contract: a crash leaves an absent-or-valid zone plus
@@ -479,14 +530,15 @@ object CompactedZone {
 
     val merged = readState(zone)
     val pending = rawSnapshots(rawDir).filterNot(merged.contains)
-    // one merge job per arriving snapshot — the incremental contract; a
-    // backlog replays in arrival order and lands on the same answer
-    if (pending.nonEmpty) ZoneBuildTally.builds.incrementAndGet()
-    pending.foldLeft(merged) { (done, snap) =>
-      mergeSnapshot(spark, rawDir, dir, snap)
-      val now = done :+ snap
-      writeState(zone, now)
-      now
+    // the whole pending backlog in ONE merge: resolution is latest-wins per
+    // (id, extracted_at), never arrival order, so folding every pending
+    // snapshot at once lands on the same zone as merging them one by one
+    // (pinned in CompactionSpec) — and pays one merge's jobs, not one per
+    // snapshot
+    if (pending.nonEmpty) {
+      ZoneBuildTally.builds.incrementAndGet()
+      mergeUpdates(spark, dir, snapshotUpdates(spark, rawDir, pending: _*))
+      writeState(zone, merged ++ pending)
     }
     if (!fpFile.isFile || stale)
       java.nio.file.Files.write(fpFile.toPath, srcFp.getBytes("UTF-8"))
@@ -500,8 +552,8 @@ object CompactedZone {
     */
   def compactedZoneRuns(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = ensureCompacted(spark, sfDir)
-    // readZone: the mergeSchema scan (buckets may be heterogeneous after
-    // additive evolution) under the LOGICAL schema (column-mapping
+    // readZone: the stored-schema scan (buckets may be heterogeneous
+    // after additive evolution) under the LOGICAL schema (column-mapping
     // renames applied); the projection below pins the contract columns
     readZone(spark, dir)
       .select(col("id"), col("user_id"), col("event_type"), col("value"))

@@ -37,9 +37,11 @@ import graft.operators.TextOps
   * run in Bench's prebuild pre-phase (`prebuild_sec`), never in a timed
   * window.
   *
-  * Layout: target/dedupzone/<sf>/{pairs,clusters,contamination} — each a
-  * parquet dir with the committer's _SUCCESS plus a _GRAFT_SRC fingerprint
-  * (underscore-prefixed ⇒ invisible to Spark's file discovery).
+  * Layout: target/dedupzone/<sf>/{pairs,clusters,contamination} — each an
+  * [[ArtifactZone]] whose version dirs hold the parquet with the
+  * committer's _SUCCESS plus a _GRAFT_SRC fingerprint and the _GRAFT_SCHEMA
+  * readers scan under (underscore-prefixed ⇒ invisible to Spark's file
+  * discovery).
   *
   *   - pairs:          (doc_a, doc_b, jacc)        — exact Jaccard ≥ 0.3
   *   - clusters:       (doc_id, cluster_rep)       — CC over pairs,

@@ -60,7 +60,7 @@ object RawZone {
     * testdata invalidates them instead of being silently served stale
     * (ADVICE r3).
     */
-  private[pipeline] def sourceFingerprint(path: java.io.File): String =
+  private[graft] def sourceFingerprint(path: java.io.File): String =
     if (path.isFile) s"${path.length}:${path.lastModified}"
     else Option(path.listFiles()).map(_.filter(_.isFile).sortBy(_.getName)
       .map(f => s"${f.getName}=${f.length}:${f.lastModified}").mkString(","))

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.pipeline.{CompactedZone, RawZone}
+import graft.pipeline.{CompactedZone, RawZone, ZoneBuildTally, ZoneSchema}
 
 /** Incremental MERGE-style compaction (VERDICT r9 item 4): the compacted
   * zone must equal the full recompute while reading only NEW snapshot
@@ -17,11 +17,24 @@ class CompactionSpec extends AnyFunSuite with SparkFixture {
     dir
   }
 
+  /** The zone's committed `_GRAFT_SCHEMA` must equal what a mergeSchema
+    * footer scan infers — the stored schema replaces that scan everywhere.
+    */
+  private def assertStoredSchemaIsInferred(dir: String): Unit = {
+    val stored = ZoneSchema.read(dir)
+    assert(stored.isDefined, s"$dir has no committed schema")
+    val inferred = spark.read.option("mergeSchema", "true").parquet(dir).schema
+    assert(stored.get.fields.sortBy(_.name).toSeq ===
+      inferred.fields.sortBy(_.name).toSeq,
+      s"stored ${stored.get.toDDL} != inferred ${inferred.toDDL}")
+  }
+
   test("incremental compaction equals the full recompute, snapshot by snapshot") {
     freshZone()
     val got = CompactedZone.compactedZoneRuns(spark, sf0001).collect().toSeq
     val want = RawZone.pipelineRuns(spark, sf0001).collect().toSeq
     assert(got === want, "merged zone must equal the re-read-everything pipeline")
+    assertStoredSchemaIsInferred(CompactedZone.compactedDir(sf0001))
     // idempotent: a second call merges nothing and answers identically
     assert(CompactedZone.compactedZoneRuns(spark, sf0001).collect().toSeq === want)
   }
@@ -94,6 +107,7 @@ class CompactionSpec extends AnyFunSuite with SparkFixture {
         .withColumn("bucket",
           pmod(col("id"), lit(CompactedZone.NumBuckets)).cast("int"))
       CompactedZone.mergeUpdates(spark, dir, evolved)
+      assertStoredSchemaIsInferred(dir)
       val zone = spark.read.option("mergeSchema", "true").parquet(dir)
       // the evolved rows carry the new field AND won latest-wins
       val won = zone.filter(col("id").isin(12L, 17L))
@@ -111,6 +125,7 @@ class CompactionSpec extends AnyFunSuite with SparkFixture {
         .withColumn("bucket",
           pmod(col("id"), lit(CompactedZone.NumBuckets)).cast("int"))
       CompactedZone.mergeUpdates(spark, dir, regressed)
+      assertStoredSchemaIsInferred(dir)
       val after = spark.read.option("mergeSchema", "true").parquet(dir)
         .filter(col("id") === 12L)
         .select(col("value"), col("region")).collect()
@@ -137,6 +152,7 @@ class CompactionSpec extends AnyFunSuite with SparkFixture {
       CompactedZone.mergeUpdates(spark, dir, bucketed(Seq(
         (12L, 7L, "click", 1.0, "20240104-000000Z", 41))
         .toDF("id", "user_id", "event_type", "value", "extracted_at", "score")))
+      assertStoredSchemaIsInferred(dir)
       val t0 = spark.read.option("mergeSchema", "true").parquet(dir)
       assert(t0.schema("score").dataType ===
         org.apache.spark.sql.types.IntegerType)
@@ -146,6 +162,7 @@ class CompactionSpec extends AnyFunSuite with SparkFixture {
       CompactedZone.mergeUpdates(spark, dir, bucketed(Seq(
         (17L, 7L, "click", 2.0, "20240105-000000Z", big))
         .toDF("id", "user_id", "event_type", "value", "extracted_at", "score")))
+      assertStoredSchemaIsInferred(dir)
       val t1 = spark.read.option("mergeSchema", "true").parquet(dir)
       assert(t1.schema("score").dataType ===
         org.apache.spark.sql.types.LongType,
@@ -176,6 +193,7 @@ class CompactionSpec extends AnyFunSuite with SparkFixture {
       CompactedZone.mergeUpdates(spark, dir, bucketed(Seq(
         (12L, 7L, "click", 3.0, "20240106-000000Z", 43))
         .toDF("id", "user_id", "event_type", "value", "extracted_at", "score")))
+      assertStoredSchemaIsInferred(dir)
       val t2 = spark.read.option("mergeSchema", "true").parquet(dir)
       assert(t2.schema("score").dataType ===
         org.apache.spark.sql.types.LongType)
@@ -191,6 +209,7 @@ class CompactionSpec extends AnyFunSuite with SparkFixture {
       assert(spark.read.option("mergeSchema", "true").parquet(dir)
         .filter(col("id") === 12L).select("value").first().getDouble(0) === 3.0,
         "a rejected retype must leave the zone exactly as it was")
+      assertStoredSchemaIsInferred(dir)
     } finally freshZone()
   }
 
@@ -234,6 +253,7 @@ class CompactionSpec extends AnyFunSuite with SparkFixture {
         .select("id", "user_id", "event_type", "value").orderBy("id").collect().toSeq
       val got = rebuilt.collect().toSeq
       assert(got === want, "rebuilt zone must equal the full recompute")
+      assertStoredSchemaIsInferred(dir)
     } finally {
       CompactedZone.widenSwapHook = prodHook
       freshZone()
@@ -267,6 +287,7 @@ class CompactionSpec extends AnyFunSuite with SparkFixture {
         (17L, 7L, "click", 2.0, "20240105-000000Z", 55L))
         .toDF("id", "user_id", "event_type", "value", "extracted_at", "points")),
         renames = Map("score" -> "points"))
+      assertStoredSchemaIsInferred(dir)
       val after = bucketFiles()
       assert(before.filter(_.startsWith("bucket=12/")) ===
         after.filter(_.startsWith("bucket=12/")),
@@ -286,6 +307,7 @@ class CompactionSpec extends AnyFunSuite with SparkFixture {
         (19L, 7L, "click", 3.0, "20240106-000000Z", 66L))
         .toDF("id", "user_id", "event_type", "value", "extracted_at", "pts")),
         renames = Map("points" -> "pts"))
+      assertStoredSchemaIsInferred(dir)
       val t2 = CompactedZone.readZone(spark, dir)
       assert(t2.columns.contains("pts") && !t2.columns.contains("points"))
       assert(t2.filter(col("id") === 12L).select("pts").first().getLong(0) === 41L)
@@ -293,6 +315,7 @@ class CompactionSpec extends AnyFunSuite with SparkFixture {
       CompactedZone.mergeUpdates(spark, dir, bucketed(Seq(
         (23L, 7L, "click", 4.0, "20240107-000000Z", 9L))
         .toDF("id", "user_id", "event_type", "value", "extracted_at", "grade")))
+      assertStoredSchemaIsInferred(dir)
       val t3 = CompactedZone.readZone(spark, dir)
       assert(t3.columns.contains("pts") && t3.columns.contains("grade"),
         "a batch with a fresh column name is ADDITIVE; renames need a declaration")
@@ -335,6 +358,7 @@ class CompactionSpec extends AnyFunSuite with SparkFixture {
         (17L, 7L, "click", 2.0, "20240105-000000Z", 55L))
         .toDF("id", "user_id", "event_type", "v0", "extracted_at", "value")),
         renames = Map("score" -> "value", "value" -> "v0"))
+      assertStoredSchemaIsInferred(dir)
       val t = CompactedZone.readZone(spark, dir)
       assert(t.columns.count(_ == "value") === 1 &&
         t.columns.count(_ == "v0") === 1 && !t.columns.contains("score"),
@@ -377,6 +401,7 @@ class CompactionSpec extends AnyFunSuite with SparkFixture {
       CompactedZone.mergeUpdates(spark, dir, bucketed(Seq(
         (19L, 7L, "click", 3.0, "20240106-000000Z", 77L))
         .toDF("id", "user_id", "event_type", "value", "extracted_at", "score")))
+      assertStoredSchemaIsInferred(dir)
       val t = CompactedZone.readZone(spark, dir)
       assert(t.columns.contains("points") && t.columns.contains("score"),
         s"the reborn 'score' must be a NEW logical column, saw ${t.columns.toSeq}")
@@ -413,6 +438,7 @@ class CompactionSpec extends AnyFunSuite with SparkFixture {
         (17L, 7L, "click", 2.0, "20240105-000000Z"))
         .toDF("id", "user_id", "event_type", "value", "extracted_at")),
         drops = Seq("score"))
+      assertStoredSchemaIsInferred(dir)
       assert(before.filter(_.startsWith("bucket=12/")) ===
         bucketFiles().filter(_.startsWith("bucket=12/")),
         "a declared drop is METADATA-only: buckets not touched by the " +
@@ -425,6 +451,7 @@ class CompactionSpec extends AnyFunSuite with SparkFixture {
       CompactedZone.mergeUpdates(spark, dir, bucketed(Seq(
         (19L, 7L, "click", 3.0, "20240106-000000Z", 99L))
         .toDF("id", "user_id", "event_type", "value", "extracted_at", "score")))
+      assertStoredSchemaIsInferred(dir)
       val t2 = CompactedZone.readZone(spark, dir)
       val re = t2.filter(col("id").isin(12L, 19L))
         .select(col("id"), col("score")).collect()
@@ -455,6 +482,30 @@ class CompactionSpec extends AnyFunSuite with SparkFixture {
       val runs = CompactedZone.compactedZoneRuns(spark, sf0001)
       assert(runs.columns.toSeq === Seq("id", "user_id", "event_type", "value"))
     } finally freshZone()
+  }
+
+  test("an OLDER-schema batch (int where the zone is long) landing only in " +
+      "buckets the zone lacks is written at the zone's type") {
+    val dir = "target/compactedzone-olderbatch/sf0.001"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    try {
+      import spark.implicits._
+      def bucketed(df: org.apache.spark.sql.DataFrame) = df.withColumn(
+        "bucket", pmod(col("id"), lit(CompactedZone.NumBuckets)).cast("int"))
+      CompactedZone.mergeUpdates(spark, dir, bucketed(Seq(
+        (12L, 7L, "click", 1.0, "20240104-000000Z", 41L))
+        .toDF("id", "user_id", "event_type", "value", "extracted_at", "score")))
+      // id 17 lands in bucket 1, which holds no file yet: no base side
+      // joins the union to coerce the batch's int up
+      CompactedZone.mergeUpdates(spark, dir, bucketed(Seq(
+        (17L, 7L, "click", 2.0, "20240105-000000Z", 43))
+        .toDF("id", "user_id", "event_type", "value", "extracted_at", "score")))
+      assert(ZoneSchema.committed(dir)("score").dataType ===
+        org.apache.spark.sql.types.LongType)
+      assertStoredSchemaIsInferred(dir)
+      assert(CompactedZone.readZone(spark, dir).orderBy("id").select("score")
+        .collect().map(_.getLong(0)).toSeq === Seq(41L, 43L))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
   }
 
   test("a widening batch through a caller that forbids it (the checkpointed " +
@@ -535,6 +586,73 @@ class CompactionSpec extends AnyFunSuite with SparkFixture {
     } finally freshZone()
   }
 
+  test("a 3-snapshot backlog merged in ONE call equals snapshot-by-snapshot " +
+      "merging, with one key re-extracted in every snapshot") {
+    freshZone()
+    val rawDir = RawZone.ensureBuilt(spark, sf0001)
+    // a third snapshot re-extracting id 12, which snapshot 1 holds and
+    // snapshot 2 re-extracts (12 % 3 == 0), plus one id only snapshot 1 has
+    val snap3 = "20240103-000000Z"
+    val repoDir = new java.io.File(s"$rawDir/repo=click/extracted_at=$snap3")
+    repoDir.mkdirs()
+    java.nio.file.Files.write(new java.io.File(repoDir, "part-late.txt").toPath,
+      ("""{"workflow_runs":[{"id":12,"type":"click","value":31.5,"user":{"id":7}},""" +
+        """{"id":17,"type":"click","value":32.5,"user":{"id":7}}]}""" + "\n")
+        .getBytes("UTF-8"))
+    val serialDir = "target/compactedzone-serial/sf0.001"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(serialDir))
+    try {
+      val snaps = Seq("20240101-000000Z", "20240102-000000Z", snap3)
+      val ids12 = snaps.map(s => CompactedZone.snapshotUpdates(spark, rawDir, s)
+        .filter(col("id") === 12L).count())
+      assert(ids12 === Seq(1L, 1L, 1L), "id 12 must be re-extracted in every snapshot")
+      val builds0 = ZoneBuildTally.builds.get
+      val dir = CompactedZone.ensureCompacted(spark, sf0001) // all 3 pending
+      assert(ZoneBuildTally.builds.get - builds0 === 1L)
+      assert(java.nio.file.Files.readAllLines(
+        new java.io.File(dir, "_GRAFT_MERGED").toPath).toArray.toSeq === snaps,
+        "the one merge must record the whole backlog")
+      snaps.foreach(s => CompactedZone.mergeSnapshot(spark, rawDir, serialDir, s))
+      def rows(d: String) = CompactedZone.readZone(spark, d)
+        .select("id", "user_id", "event_type", "value", "extracted_at", "bucket")
+        .orderBy("id").collect().toSeq
+      val once = rows(dir)
+      assert(once === rows(serialDir),
+        "one backlog merge must equal merging snapshot by snapshot")
+      assert(once.filter(_.getLong(0) == 12L).map(r => (r.getDouble(3), r.getString(4))) ===
+        Seq((31.5, snap3)), "the newest extraction must win")
+      assert(ZoneSchema.read(dir) === ZoneSchema.read(serialDir))
+      assertStoredSchemaIsInferred(dir)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteQuietly(repoDir)
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(serialDir))
+      freshZone()
+    }
+  }
+
+  test("a zone without _GRAFT_SCHEMA is stale: ensureCompacted rebuilds it, " +
+      "and no read or merge falls back to footer inference") {
+    freshZone()
+    val dir = CompactedZone.ensureCompacted(spark, sf0001)
+    try {
+      val schemaFile = new java.io.File(dir, ZoneSchema.FileName)
+      assert(schemaFile.delete())
+      intercept[IllegalStateException](CompactedZone.readZone(spark, dir))
+      import spark.implicits._
+      intercept[IllegalStateException](CompactedZone.mergeUpdates(spark, dir,
+        Seq((12L, 7L, "click", 1.0, "20240104-000000Z")).toDF(
+          "id", "user_id", "event_type", "value", "extracted_at")
+          .withColumn("bucket",
+            pmod(col("id"), lit(CompactedZone.NumBuckets)).cast("int"))))
+      val builds0 = ZoneBuildTally.builds.get
+      val got = CompactedZone.compactedZoneRuns(spark, sf0001).collect().toSeq
+      assert(ZoneBuildTally.builds.get - builds0 === 1L, "the zone must be rebuilt")
+      assert(schemaFile.isFile)
+      assert(got === RawZone.pipelineRuns(spark, sf0001).collect().toSeq)
+      assertStoredSchemaIsInferred(dir)
+    } finally freshZone()
+  }
+
   test("streaming compaction: micro-batched foreachBatch merges equal the " +
       "batch latest-wins answer, drained over several triggers") {
     val rawDir = RawZone.ensureBuilt(spark, sf0001)
@@ -556,6 +674,7 @@ class CompactionSpec extends AnyFunSuite with SparkFixture {
       .select("id", "user_id", "event_type", "value").orderBy("id").collect().toSeq
     assert(got === want,
       "stream-built zone must equal the batch latest-wins resolution")
+    assertStoredSchemaIsInferred(zoneDir)
     // incrementality, not one giant batch: maxFilesPerTrigger split the
     // backlog across several merges (mixed/split snapshots are the point)
     assert(q.recentProgress.count(_.numInputRows > 0) > 1,

@@ -34,6 +34,7 @@ class ArtifactZoneSpec extends AnyFunSuite with SparkFixture {
     java.nio.file.Files.write(
       new java.io.File(new java.io.File(dir, vname), "_GRAFT_SRC").toPath,
       RawZone.sourceFingerprint(source).getBytes("UTF-8"))
+    ArtifactZone.commitSchema(spark, new java.io.File(dir, vname).getPath)
     assert(ArtifactZone.casCommit(dir.getPath, vname))
   }
 
@@ -342,5 +343,50 @@ class ArtifactZoneSpec extends AnyFunSuite with SparkFixture {
       "a regenerated source must read as stale")
     assert(ArtifactZone.resolve(dir.getPath).isDefined,
       "resolve (committed, freshness-agnostic) still sees the zone")
+  }
+
+  test("a version dir without _GRAFT_SCHEMA is not fresh: resolveFresh " +
+      "skips it and ensure rebuilds instead of inferring its schema") {
+    val dir = new java.io.File("target/artifactzone-spec/schemaless")
+    org.apache.commons.io.FileUtils.deleteQuietly(dir.getParentFile)
+    val source = new java.io.File(sf0001, "documents.parquet")
+    import spark.implicits._
+    var builds = 0
+    def ensure() = ArtifactZone.ensure(spark, dir.getPath, source, "s-v1") { tmp =>
+      builds += 1
+      Seq(builds.toLong).toDF("v")
+        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp)
+    }
+    ensure()
+    val v1 = ArtifactZone.resolve(dir.getPath).get
+    assert(ArtifactZone.resolveFresh(dir.getPath, source, "s-v1").contains(v1))
+    assert(new java.io.File(v1, ZoneSchema.FileName).delete())
+    assert(ArtifactZone.resolveFresh(dir.getPath, source, "s-v1").isEmpty,
+      "a version without its schema must read as stale")
+    intercept[IllegalStateException](ArtifactZone.read(spark, v1))
+    assert(ensure().collect().map(_.getLong(0)).toSeq === Seq(2L))
+    assert(builds === 2, "the schemaless version must be rebuilt")
+    assert(ArtifactZone.resolve(dir.getPath).exists(_ != v1))
+  }
+
+  test("the stored schema equals footer inference and survives its DDL " +
+      "round trip, for the partitioned ingest_arrivals artifact (shard " +
+      "column) and plain ones") {
+    val versions = Seq(
+      DedupZone.ensureIngestArrivals(spark, sf0001),
+      { DedupZone.ensureLshIndex(spark, sf0001)
+        ArtifactZone.resolve(s"${DedupZone.zoneDir(sf0001)}/lsh_index").get },
+      { AnnZone.ensureIvfLists(spark, sf0001)
+        ArtifactZone.resolve(s"${AnnZone.zoneDir(sf0001)}/ivf_lists").get })
+    versions.foreach { v =>
+      val stored = ZoneSchema.committed(v)
+      val inferred = spark.read.parquet(v).schema
+      assert(stored === inferred, s"$v: stored ${stored.toDDL}, inferred ${inferred.toDDL}")
+      assert(org.apache.spark.sql.types.StructType.fromDDL(stored.toDDL) === stored)
+      assert(ArtifactZone.read(spark, v).schema === inferred)
+    }
+    assert(ZoneSchema.committed(versions.head).fieldNames.contains("shard"))
+    assert(ArtifactZone.read(spark, versions.head).count() ===
+      spark.read.parquet(versions.head).count())
   }
 }
