@@ -5,12 +5,9 @@ import java.nio.file.{Files, Paths}
 import java.util.Locale
 import java.util.concurrent.TimeUnit
 
-import java.util.concurrent.atomic.AtomicLong
-
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: times each SparkEntry query at the SF pointed to by
@@ -45,9 +42,9 @@ import org.apache.spark.sql.SparkSession
   *     artifact showing wall ≫ cpu_sec exonerates the plan and indicts the
   *     measurement environment (the r3–r5 forensics gap).
   *
-  * Escape hatch: SPARK_GRAFT_BENCH_FORK=0 falls back to in-process mode
-  * (fresh session per query + System.gc() between queries) — used by quick
-  * interactive runs where JVM spin-up isn't worth it.
+  * Every measurement runs in a forked child; for an interactive look at one
+  * query, `graft.QueryJobDiag <sfDir> <query>` runs it cold and twice
+  * steady on the same child session and attributes each Spark job.
   *
   * Args: optional query names to bench just those; `--child <n1,n2,...>` is
   * the internal per-child entry point.
@@ -175,7 +172,12 @@ object Bench {
     total > 2 * anchor &&
       gateBandVerdict(totalCpu, jobsTotal, sfName).contains("contended-window")
 
-  private def newSession(): SparkSession = {
+  /** The child session: local[$SPARK_GRAFT_CPUS] under the conf tier
+    * GRAFT_CHILD_CONF names, executors and codegen already spun up.
+    * [[QueryJobDiag]] runs on it too, so a diagnosed query sees the conf it
+    * is measured under.
+    */
+  private[graft] def newSession(): SparkSession = {
     val b = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -213,8 +215,7 @@ object Bench {
     sys.env.get("GRAFT_CHILD_CONF") match {
       case Some("light") =>
         b.config("spark.sql.adaptive.enabled", "false")
-        b.config("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("GRAFT_LIGHT_SHUFFLE", "8"))
+        b.config("spark.sql.shuffle.partitions", "8")
       case Some("light2") => // trivial batches: 2-wide matches AQE-on wall
         b.config("spark.sql.adaptive.enabled", "false")
         b.config("spark.sql.shuffle.partitions", "2")
@@ -239,10 +240,14 @@ object Bench {
     * blame three ways: sec ≫ runSec/cores → tasks starved of scheduling;
     * runSec ≫ cpuSec → tasks descheduled by the OS (host contention — the
     * r5 failure signature); cpuSec ≈ sec·cores → the plan itself is the
-    * cost (VERDICT r5 item 2). `warmSec` is the UNTIMED warm-up executions'
-    * wall — plan, IO-cache and JIT cost paid before the timed window, kept
-    * visible so amortized overhead is reported, never hidden (VERDICT r9
-    * item 5).
+    * cost (VERDICT r5 item 2). `jobs`/`stages` make a subtree RECOMPUTE
+    * self-attributing: when cpu_sec explodes with run ≈ cpu, a count far
+    * above the quiet-floor budget says "a subtree re-ran", a normal count
+    * says "the host thrashed" (VERDICT r10). All counts come from an
+    * unscoped [[graft.obs.JobLedger]], every event between the run's two
+    * drains. `warmSec` is the UNTIMED warm-up executions' wall — plan,
+    * IO-cache and JIT cost paid before the timed window, kept visible so
+    * amortized overhead is reported, never hidden (VERDICT r9 item 5).
     *
     * Min-of-two (VERDICT r12 item 1b): every query runs its timed action
     * TWICE in steady state and BOOKS the smaller wall — host contention
@@ -259,66 +264,10 @@ object Bench {
       altSec: Double = 0.0, altCpuSec: Double = 0.0, zoneBuilds: Long = 0L,
       extraRuns: Long = 0L)
 
-  /** Sums executor CPU (ns) / run (ms) time + task/job/stage counts over
-    * every event that lands while registered. Job and stage counts
-    * (VERDICT r10 "What's missing" #3) make a subtree RECOMPUTE
-    * self-attributing in the artifact: when a query's cpu_sec explodes with
-    * run ≈ cpu, a job/stage count far above its quiet-floor budget says
-    * "codegen re-ran a subtree", a normal count says "the host thrashed" —
-    * the distinction r10's minhash anomaly needed forensics to make.
-    * Listener bus delivery is async, so readers must drain first (see
-    * [[timeQuery]]).
-    */
-  private final class CpuTally extends SparkListener {
-    val cpuNs = new AtomicLong(0L)
-    val runMs = new AtomicLong(0L)
-    val tasks = new AtomicLong(0L)
-    val jobs = new AtomicLong(0L)
-    val stages = new AtomicLong(0L)
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) { cpuNs.addAndGet(m.executorCpuTime); runMs.addAndGet(m.executorRunTime) }
-      tasks.incrementAndGet()
-    }
-    override def onJobStart(js: SparkListenerJobStart): Unit =
-      jobs.incrementAndGet()
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-      stages.incrementAndGet()
-  }
-
-  /** Waits for the async listener bus to go quiet as seen by `tally`: poll
-    * until the task+job+stage counters are JOINTLY stable for 3 consecutive
-    * 20 ms reads, capped at 2 s. Stability must cover all three (r11
-    * review): StageCompleted/JobStart events ride the bus BEHIND the last
-    * TaskEnd, so a tasks-only drain could zero the tally while a warm-up
-    * stage completion is still in flight — inflating the timed run's
-    * job/stage attribution, the exact signal those counters exist for.
-    * Runs outside the timed window.
-    */
-  private def drainListenerBus(tally: CpuTally): Unit = {
-    var last = -1L
-    var stable = 0
-    var spins = 0
-    // 5 ms polls (r13; was 20 ms): each timed run brackets itself with two
-    // drains, so at 114 queries × 2–3 runs the old 60 ms-minimum drain put
-    // ~45 s of pure polling on the board's wall — window exposure for
-    // nothing. 3 consecutive stable 5 ms reads still out-waits the bus's
-    // per-event dispatch; the 2 s cap is unchanged.
-    while (stable < 3 && spins < 400) {
-      val c = tally.tasks.get + tally.jobs.get + tally.stages.get
-      if (c == last) stable += 1 else { stable = 0; last = c }
-      try Thread.sleep(5L)
-      catch { // same contract as RetryPolicy: restore the flag, stop waiting
-        case _: InterruptedException => Thread.currentThread().interrupt(); stable = 3
-      }
-      spins += 1
-    }
-  }
-
   /** Warm-up + timed run of one query in THIS JVM. Straggler task-end
     * events ride the async listener bus on BOTH edges: drain before zeroing
-    * the tally (so warm-up leftovers aren't attributed to the timed run)
-    * and drain again after the timed action (so its own stragglers are).
+    * the [[graft.obs.JobLedger]] (so warm-up leftovers aren't attributed to
+    * the timed run) and drain again after the timed action (so its own stragglers are).
     *
     * `warmups` > 1 is for the FIRST query of a fresh child JVM (VERDICT r9
     * item 5): its timed run was paying JVM-cold costs no later query pays —
@@ -359,21 +308,20 @@ object Bench {
     var w = 0
     while (w < warmups) { exec(fn(spark, sfDir)); w += 1 } // plan + IO + JIT
     val warmSec = (System.nanoTime() - w0) / 1e9
-    val tally = new CpuTally
-    spark.sparkContext.addSparkListener(tally)
+    val ledger = graft.obs.JobLedger.attach(spark.sparkContext)
+    val t = ledger.totals
     def timedOnce(): Meas = {
-      drainListenerBus(tally) // absorb the previous run's stragglers...
-      tally.cpuNs.set(0L); tally.runMs.set(0L); tally.tasks.set(0L) // ...then zero
-      tally.jobs.set(0L); tally.stages.set(0L)
+      ledger.drain() // absorb the previous run's stragglers...
+      ledger.reset() // ...then zero
       val zb0 = graft.pipeline.ZoneBuildTally.builds.get
       val gc0 = gcMillis()
       val t0 = System.nanoTime()
       exec(fn(spark, sfDir)) // steady-state timed run
       val wall = (System.nanoTime() - t0) / 1e9
       val gcSec = (gcMillis() - gc0) / 1e3
-      drainListenerBus(tally)
-      Meas(wall, gcSec, tally.cpuNs.get / 1e9, tally.runMs.get / 1e3,
-        tally.tasks.get, warmSec, tally.jobs.get, tally.stages.get,
+      ledger.drain()
+      Meas(wall, gcSec, t.cpuSec, t.runSec, t.tasks.get, warmSec,
+        t.jobs.get, t.stages.get,
         zoneBuilds = graft.pipeline.ZoneBuildTally.builds.get - zb0)
     }
     try {
@@ -419,7 +367,7 @@ object Bench {
       book.copy(altSec = alt.sec, altCpuSec = alt.cpuSec,
         zoneBuilds = runs.map(_.zoneBuilds).sum,
         extraRuns = runs.size - 2)
-    } finally spark.sparkContext.removeSparkListener(tally)
+    } finally ledger.detach()
   }
 
   /** 2-decimal for the tail-parsed contract line (headroom: ADVICE r5 noted
@@ -765,8 +713,7 @@ object Bench {
     if (!resolvable) sys.error(
       "graft.Bench is not resolvable from java.class.path — fork-mode children " +
         "would die with ClassNotFoundException. Launch with `sbt runMain` " +
-        "(run/fork := true) or a java -cp that includes the compiled classes, " +
-        "or set SPARK_GRAFT_BENCH_FORK=0 for in-process mode.")
+        "(run/fork := true) or a java -cp that includes the compiled classes.")
   }
 
   /** One timed pass over the board: every per-query map the artifact
@@ -883,7 +830,6 @@ object Bench {
       runPrebuildChild(); return
     }
 
-    val fork = sys.env.getOrElse("SPARK_GRAFT_BENCH_FORK", "1") != "0"
     val only = args.toSet
     // a mistyped name would otherwise select NOTHING and print a parseable
     // total=0 contract line with exit 0 — a silent bogus success, the exact
@@ -893,53 +839,25 @@ object Bench {
       s"unknown quer${if (unknown.size == 1) "y" else "ies"}: ${unknown.toSeq.sorted.mkString(", ")} — " +
         "valid names are the keys of SparkEntry.queries")
 
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.isEmpty || only(name) }
-    val selectedNames = selected.map(_._1)
+    val selectedNames = SparkEntry.queries.keys.toSeq.sorted
+      .filter(name => only.isEmpty || only(name))
 
-    var prebuildSec = 0.0
-    var prebuilt = 0L
-    var board: BoardMaps = null
-    var units: Seq[(Seq[String], String)] = Seq.empty
-    if (fork) {
-      requireForkableClasspath()
-      // heavyGroups must PARTITION heavyQueries: a heavy query missing from
-      // every group would silently land in a light batch; one in two groups
-      // would be double-measured. Checked here so the invariant holds on
-      // the real board, not only under test.
-      val grouped = SparkEntry.heavyGroups.flatten
-      require(grouped.distinct.size == grouped.size &&
-        grouped.toSet == soloQueries,
-        "SparkEntry.heavyGroups must partition SparkEntry.heavyQueries — " +
-          s"diff: ${(grouped.toSet diff soloQueries) ++ (soloQueries diff grouped.toSet)}")
-      // pre-phase (full board only): build all zone artifacts serially in
-      // one child so no timed child's warm run pays a build
-      if (only.isEmpty) {
-        val (pSec, pN) = forkPrebuild()
-        prebuildSec = pSec; prebuilt = pN
-      }
-      units = buildUnits(selectedNames)
-      board = runForkBoard(units)
-    } else {
-      board = new BoardMaps
-      selected.foreach { case (name, fn) =>
-        val s0 = System.nanoTime()
-        val spark = newSession()
-        board.sessionSecs += (System.nanoTime() - s0) / 1e9
-        try {
-          board.record(name, timeQuery(spark, fn))
-        } catch {
-          case e: Throwable =>
-            board.errors(name) = e.getClass.getSimpleName
-            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-        } finally {
-          spark.stop()
-          SparkSession.clearActiveSession()
-          SparkSession.clearDefaultSession()
-          System.gc() // drain heap debt before the next query's timing
-        }
-      }
-    }
+    requireForkableClasspath()
+    // heavyGroups must PARTITION heavyQueries: a heavy query missing from
+    // every group would silently land in a light batch; one in two groups
+    // would be double-measured. Checked here so the invariant holds on
+    // the real board, not only under test.
+    val grouped = SparkEntry.heavyGroups.flatten
+    require(grouped.distinct.size == grouped.size &&
+      grouped.toSet == soloQueries,
+      "SparkEntry.heavyGroups must partition SparkEntry.heavyQueries — " +
+        s"diff: ${(grouped.toSet diff soloQueries) ++ (soloQueries diff grouped.toSet)}")
+    // pre-phase (full board only): build all zone artifacts serially in
+    // one child so no timed child's warm run pays a build
+    val (prebuildSec, prebuilt) =
+      if (only.isEmpty) forkPrebuild() else (0.0, 0L)
+    val units = buildUnits(selectedNames)
+    var board = runForkBoard(units)
     val sfName = sfDir.replaceAll("/+$", "").split('/').last
     // The anchor the gate evaluates against, None when no gate applies:
     // noop boards are a different protocol; subset totals are partial by
@@ -951,13 +869,13 @@ object Bench {
       else anchorOverride.orElse(
         if (only.isEmpty) anchorSec.get(sfName) else None)
 
-    // Contention-aware retry (VERDICT r8 item 2): only a FULL fork-mode board
+    // Contention-aware retry (VERDICT r8 item 2): only a FULL board
     // that would trip the 2× gate re-measures its descheduling suspects, once
     // each, before the artifact is built — see contentionSuspects for the
     // policy and thresholds.
     val firstSec = scala.collection.mutable.LinkedHashMap[String, Double]()
     val retrySec = scala.collection.mutable.LinkedHashMap[String, Double]()
-    if (fork && only.isEmpty && board.errors.isEmpty && !noopAction) {
+    if (only.isEmpty && board.errors.isEmpty && !noopAction) {
       anchorSec.get(sfName).foreach { anchor =>
         val timings = board.timings
         val cpuSecs = board.cpuSecs
@@ -1037,7 +955,7 @@ object Bench {
     // (re-measuring cannot un-move moved work).
     var boardFirstTotal: Option[Double] = None
     var boardRetryTotal: Option[Double] = None
-    if (fork && board.errors.isEmpty && anchor.exists(a =>
+    if (board.errors.isEmpty && anchor.exists(a =>
         shouldRetryBoard(board.total, a, board.totalCpu, board.jobsTotal, sfName))) {
       System.err.println(f"[bench] gate tripped at ${board.total}%.2f s with " +
         "a contended-window diagnosis — re-running the timed phase once " +
@@ -1076,7 +994,6 @@ object Bench {
     val tm = jlong(taskCounts)
     val total = timings.values.sum
     val totalCpu = cpuSecs.values.sum
-    val mode = if (fork) "fork" else "shared"
     // 2× regression gate, evaluated on the BOOKED board. r17 rc semantics
     // (VERDICT r16 item 2): a tripped gate no longer exits nonzero — two
     // consecutive rounds lost every per-query number to sbt's [error]
@@ -1119,7 +1036,7 @@ object Bench {
     // prebuild pre-phase — a nonzero entry marks that row "rebuild", its
     // absence marks an inflated row "noise": VERDICT r12 item 4)
     val detail =
-      s"""{"bench_detail":{"gc_sec":${jmap(gcs, fmt)},"cpu_sec":${jmap(cpuSecs, fmt)},"run_sec":${jmap(runSecs, fmt)},"warm_sec":${jmap(warmSecs, fmt)},"alt_sec":${jmap(altSecs, fmt)},"zone_builds":${jlong(zoneBuilds)},"xruns":${jlong(xRuns)},"prebuild_sec":${fmt(prebuildSec)},"prebuilt":$prebuilt,"session_warmup_sec":${fmt(sessionSecs.sum)},"n_children":${sessionSecs.size},"tasks":$tm,"jobs":${jlong(jobCounts)},"stages":${jlong(stageCounts)},"errors":$es$retriedJson$boardRetryJson,"n_ok":${timings.size},"n_err":${errors.size},"mode":"$mode","cpus":$cpus,"procs":${Runtime.getRuntime.availableProcessors}}}"""
+      s"""{"bench_detail":{"gc_sec":${jmap(gcs, fmt)},"cpu_sec":${jmap(cpuSecs, fmt)},"run_sec":${jmap(runSecs, fmt)},"warm_sec":${jmap(warmSecs, fmt)},"alt_sec":${jmap(altSecs, fmt)},"zone_builds":${jlong(zoneBuilds)},"xruns":${jlong(xRuns)},"prebuild_sec":${fmt(prebuildSec)},"prebuilt":$prebuilt,"session_warmup_sec":${fmt(sessionSecs.sum)},"n_children":${sessionSecs.size},"tasks":$tm,"jobs":${jlong(jobCounts)},"stages":${jlong(stageCounts)},"errors":$es$retriedJson$boardRetryJson,"n_ok":${timings.size},"n_err":${errors.size},"mode":"fork","cpus":$cpus,"procs":${Runtime.getRuntime.availableProcessors}}}"""
     Files.createDirectories(Paths.get("target"))
     // Gate-trip SELF-DIAGNOSIS (r15 — the r12/r13 lesson made machine-
     // readable): wall alone cannot distinguish a plan regression from a

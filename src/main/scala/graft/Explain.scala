@@ -1,26 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints the formatted physical plan of one or all declared
   * queries. Usage:
-  *   sbt "runMain graft.Explain <sfDir> [queryName]"
+  *   sbt "runMain graft.Explain <sfDir> [queryName...]"
   * The scale checklist per plan: filters/columns pushed into the parquet
   * scan (PushedFilters / ReadSchema), broadcast where a side is small,
   * WholeStageCodegen spans wide, no CartesianProduct in a hot path, no
-  * unexpected extra Exchange.
+  * unexpected extra Exchange. Naming a zone-backed query and its cold twin
+  * (`bm25_index_topk bm25_topk`) puts both plans side by side.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val only = args.drop(1).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Verify.session()
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.isEmpty || only(name) }

@@ -1,58 +1,17 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
+import graft.obs.JobLedger
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
-
-/** Scratch per-job attribution for ANY declared query (dev tool, not a
-  * declared query): runs the named query cold + steady under the session
-  * conf GRAFT_CHILD_CONF selects (mirroring the bench child), printing one
-  * line per Spark job (wall, Σ task CPU, Σ task wall, tasks, call site).
+/** The run-and-attribute dev tool for ANY declared query: runs it cold and
+  * twice steady on Bench's child session (so GRAFT_CHILD_CONF selects the
+  * same conf tier the board measures it under), printing one line per Spark
+  * job from the [[JobLedger]] (wall, stages, tasks, Σ task CPU, Σ task
+  * wall, call site) and a total per run. To price a zone build, remove the
+  * fixture's zone dir (`target/{dedup,ann,lexical}zone/<sf>`) first: the
+  * cold run then carries the build's jobs.
   * Usage: sbt "runMain graft.QueryJobDiag <sfDir> <queryName>"
   */
 object QueryJobDiag {
-
-  private final class JobTally extends SparkListener {
-    final class Acc(val t0: Long, val site: String) {
-      var cpuNs: Long = 0L; var runMs: Long = 0L
-      var tasks: Long = 0L; var wallMs: Long = -1L
-    }
-    val jobs = new ConcurrentHashMap[Int, Acc]()
-    val stageToJob = new ConcurrentHashMap[Int, Int]()
-    override def onJobStart(js: SparkListenerJobStart): Unit = {
-      val site = Option(js.properties)
-        .flatMap(p => Option(p.getProperty("callSite.short"))).getOrElse("?")
-      jobs.put(js.jobId, new Acc(System.nanoTime(), site))
-      js.stageIds.foreach(sid => stageToJob.put(sid, js.jobId))
-    }
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-      if (!stageToJob.containsKey(te.stageId)) return
-      val acc = jobs.get(stageToJob.get(te.stageId))
-      if (acc != null && te.taskMetrics != null) acc.synchronized {
-        acc.cpuNs += te.taskMetrics.executorCpuTime
-        acc.runMs += te.taskMetrics.executorRunTime
-        acc.tasks += 1
-      }
-    }
-    override def onJobEnd(je: SparkListenerJobEnd): Unit = {
-      val acc = jobs.get(je.jobId)
-      if (acc != null) acc.wallMs = (System.nanoTime() - acc.t0) / 1000000L
-    }
-    def report(label: String): Unit = {
-      println(s"==== $label: ${jobs.size} jobs ====")
-      jobs.asScala.toSeq.sortBy(_._1).foreach { case (id, a) =>
-        val flag = if (a.wallMs < 0) " (running)" else ""
-        println(f"job $id%3d wall ${a.wallMs / 1e3}%6.2f s  cpu ${a.cpuNs / 1e9}%6.2f s  run ${a.runMs / 1e3}%6.2f s  tasks ${a.tasks}%4d  ${a.site}%s$flag%s")
-      }
-      val w = jobs.asScala.values.filter(_.wallMs >= 0).map(_.wallMs).sum / 1e3
-      val c = jobs.asScala.values.map(_.cpuNs).sum / 1e9
-      println(f"==== $label total: job-wall $w%.2f s, cpu $c%.2f s ====")
-      jobs.clear(); stageToJob.clear()
-    }
-  }
 
   def main(args: Array[String]): Unit = {
     val usage = "usage: QueryJobDiag <sfDir> <queryName>"
@@ -66,41 +25,31 @@ object QueryJobDiag {
         SparkEntry.queries.keys.toSeq.sorted.mkString("\n  "))
       sys.exit(2)
     })
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"query-job-diag-$name")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    sys.env.get("GRAFT_CHILD_CONF") match {
-      case Some("light") =>
-        b.config("spark.sql.adaptive.enabled", "false")
-        b.config("spark.sql.shuffle.partitions", "8")
-      case Some("light2") =>
-        b.config("spark.sql.adaptive.enabled", "false")
-        b.config("spark.sql.shuffle.partitions", "2")
-      case Some("light16") =>
-        b.config("spark.sql.adaptive.enabled", "false")
-        b.config("spark.sql.shuffle.partitions", "16")
-      case _ => ()
-    }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.configure(spark)
-    val tally = new JobTally
-    spark.sparkContext.addSparkListener(tally)
+    val spark = Bench.newSession()
+    val ledger = JobLedger.attach(spark.sparkContext)
     def once(label: String): Unit = {
+      ledger.drain()
+      ledger.reset()
       val t0 = System.nanoTime()
       fn(spark, sfDir).count()
       val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(500)
+      ledger.drain()
+      val jobs = ledger.jobs
       println(f"---- $label end-to-end wall: $wall%.2f s ----")
-      tally.report(label)
+      println(s"==== $label: ${jobs.size} jobs ====")
+      jobs.foreach { j =>
+        val c = j.counts
+        val flag = if (j.endMs < 0) " (running)" else ""
+        println(f"job ${j.id}%3d wall ${j.wallSec}%6.2f s  stages ${c.stages.get}%2d  " +
+          f"tasks ${c.tasks.get}%4d  cpu ${c.cpuSec}%6.2f s  run ${c.runSec}%6.2f s  " +
+          s"${j.site}$flag")
+      }
+      val t = ledger.totals
+      println(f"==== $label total: job-wall ${jobs.map(_.wallSec).sum}%.2f s, " +
+        f"cpu ${t.cpuSec}%.2f s, run ${t.runSec}%.2f s, jobs ${t.jobs.get}, " +
+        s"stages ${t.stages.get}, tasks ${t.tasks.get} ====")
     }
-    once("cold")
-    once("steady")
-    once("steady2")
-    spark.stop()
+    try Seq("cold", "steady", "steady2").foreach(once)
+    finally { ledger.detach(); spark.stop() }
   }
 }

@@ -66,6 +66,14 @@ object TextOps {
     manager.register(hook)
   }
 
+  /** Whether AQE is on for this session (Spark's default: on). The eager
+    * cache counts are gated on it: under AQE each branch over a
+    * not-yet-materialized cache replans it, while without AQE the caller's
+    * one action fills the cache once and the count is an extra job.
+    */
+  private[operators] def aqeEnabled(spark: SparkSession): Boolean =
+    spark.conf.get("spark.sql.adaptive.enabled", "true").toBoolean
+
   /** doc_id, lang, and the 3-word shingle set as 64-bit fingerprints —
     * the standard production shrink (Broder '97): set algebra on longs, and
     * the shuffled pair payload drops from ~20 bytes/shingle to 8. Collision
@@ -1085,7 +1093,7 @@ object TextOps {
   private[graft] def probeClassifyAndIndex(spark: SparkSession, batch: DataFrame,
       idx: DataFrame): (DataFrame, DataFrame) = {
     GraftExtensions.register(spark)
-    val aqeOn = spark.conf.get("spark.sql.adaptive.enabled", "true").toBoolean
+    val aqeOn = aqeEnabled(spark)
     def jaccOk(a: Column, b: Column, inter: Column): Column =
       round(inter.cast("double") / (size(a) + size(b) - inter), 6) >= 0.8
     // probe 1 — identity rung: identical set ⇒ J = 1, exact
@@ -1198,8 +1206,7 @@ object TextOps {
     // AQE the caller's single action computes the cache once under the
     // BlockManager's per-block locks, and the count is one extra job
     // (see probeClassifyAndIndex's scaladoc).
-    if (spark.conf.get("spark.sql.adaptive.enabled", "true").toBoolean)
-      batch.count()
+    if (aqeEnabled(spark)) batch.count()
     val idx = graft.pipeline.DedupZone.ensureLshIndex(spark, sfDir)
       .withColumn("is_corpus", lit(true))
     val result = ingestLedger(probeClassify(spark, batch, idx))
@@ -1571,29 +1578,6 @@ object TextOps {
     val result = containmentPairs(testPost, trainPost)
     unpersistAfterAction(spark, testDocs)
     result
-  }
-
-  /** Screening of ONE eval release — an id-bucket slice of the test split —
-    * against the training corpus, via either the persisted postings
-    * artifact (`useIndex = true`, the [[contaminationIndexPairs]] path) or
-    * a full inline re-tokenize of train (`useIndex = false`, the
-    * [[decontaminationPairs]] path). Exists for the amortization rehearsal
-    * ([[graft.ContamRehearsal]]): the index's claim is that release N+1
-    * screens in O(eval) CPU while the cold path re-pays the corpus
-    * tokenize every release — this is the probe that measures it. Same
-    * [[containmentPairs]] kernel as both declared queries, so the
-    * rehearsal measures the real dispatch, not a lookalike.
-    */
-  private[graft] def contaminationScreen(spark: SparkSession, sfDir: String,
-      bucketLo: Int, bucketHi: Int, useIndex: Boolean): DataFrame = {
-    val trainPost =
-      if (useIndex) graft.pipeline.DedupZone.ensureTrainPostings(spark, sfDir)
-      else trainShinglePostings(spark, sfDir)
-    val testPost = hashedShingleDocs(spark, sfDir)
-      .filter(Splits.bucket >= bucketLo && Splits.bucket < bucketHi)
-      .select(col("doc_id").as("test_doc"), col("lang"),
-        size(col("sh")).as("nt"), explode(col("sh")).as("s"))
-    containmentPairs(testPost, trainPost)
   }
 
   /** Contamination REMOVAL ledger — the train-side edit
@@ -2883,7 +2867,7 @@ object TextOps {
     */
   def bm25IndexTopk(spark: SparkSession, sfDir: String): DataFrame = {
     // Re-establish the agg-friendly partitioning the COLD path gets for
-    // free (r13 x10 forensics, Bm25Diag): the cold postingScores side
+    // free (r13 x10 plan forensics): the cold postingScores side
     // carries hashpartitioning(train_doc) out of its docLen join, so the
     // (query_doc, train_doc) aggregation over the fan-out runs IN PLACE —
     // partitioning by a subset of the grouping keys satisfies the
@@ -3124,13 +3108,6 @@ object TextOps {
         .select(col("query_doc"), col("train_doc"),
           round(col("raw"), 6).as("score"))
     }
-    // dispatch observability: one stderr line with every measured quantity
-    // and the chosen branch — the r13 x10 forensics needed exactly this
-    if (sys.env.contains("GRAFT_BM25_DEBUG")) System.err.println(
-      s"[bm25-dispatch] vocab=$vocab nQ=$nQ nTrain=$nTrain fanout=$fanout " +
-        s"densePairs=$densePairs denseSafe=$denseSafe " +
-        s"branch=${if (denseSafe && densePairs * Bm25DensePairCostRatio <= fanout.toDouble) "dense"
-        else if (fanout <= postingsBudget) "postings" else "REJECT"}")
     if (denseSafe &&
         densePairs * Bm25DensePairCostRatio <= fanout.toDouble) {
       rankTail(denseScores())

@@ -554,7 +554,7 @@ object VectorOps {
 
   /** EXACT-ORACLE IVF twin (r15 groundwork for VERDICT r14 item 8;
     * ADMITTED to the registry in r16 per VERDICT r15 item 2, after two
-    * rounds of hash-green AnnOracleRehearsal validation at both SFs —
+    * rounds of hash-green oracle validation at both SFs —
     * the ANN family's third exact-oracle member): the same coarse-quantize →
     * closure-assign → probe → exact-rerank pipeline as [[annIvfTopk]], run
     * entirely in the int8-QUANTIZED integer domain
@@ -565,9 +565,9 @@ object VectorOps {
     * documents. Every comparison in the query — centroid assignment, probe
     * selection, rerank order — is integer dot / (sqrt·sqrt) arithmetic,
     * bit-identical in any engine, so the whole ANN query has an exact DuckDB
-    * twin ([[annIvfqTopkSql]]) instead of a recall envelope. Validated
-    * end-to-end by `graft.AnnOracleRehearsal` + tools/check.py; admission to
-    * the registry is the r16 decision.
+    * twin ([[annIvfqTopkSql]]) instead of a recall envelope, which
+    * `graft.VerifySubset <sf> <out> ann_ivfq_topk` + tools/check.py grade
+    * on its own.
     *
     * Constants: K = max([[IvfK]], ⌈√n⌉) (see [[ivfqK]] — the FAISS-style
     * sizing, r17) so the probed fraction replication·nprobe/K = 4/√n
@@ -1647,8 +1647,8 @@ object VectorOps {
     "ann_lsh_topk" -> (annLshTopk(_, _)),
     "ann_ivf_topk" -> (annIvfTopk(_, _)),
     // r16 admission (VERDICT r15 item 2): the integer-exact seed-quantizer
-    // IVF twin, validated hash-green at sf0.01 + sf0.1 by AnnOracleRehearsal
-    // through two rounds before registration
+    // IVF twin, validated hash-green at sf0.01 + sf0.1 through two rounds
+    // before registration
     "ann_ivfq_topk" -> (annIvfqTopk(_, _)),
     "ann_pq_topk" -> (annPqTopk(_, _)),
     "ann_ivfpq_topk" -> (annIvfPqTopk(_, _)),

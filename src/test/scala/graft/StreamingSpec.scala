@@ -175,4 +175,22 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
       .collect().map(_.toSeq).toSeq
     assert(streamed === batch)
   }
+
+  test("the fused probe's shard index is row-identical to lshIndexRows " +
+      "(uncapped) over the same batch") {
+    import graft.operators.TextOps
+    val batch = TextOps.arrivingBatch(spark, sf0001).persist()
+    try {
+      val idx = graft.pipeline.DedupZone.ensureLshIndex(spark, sf0001)
+        .withColumn("is_corpus", lit(true))
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select("lang", "rep", "sk", "sh", "band", "bkey").collect()
+          .map(_.toSeq).groupBy(identity).view.mapValues(_.length).toMap
+      val fused = rows(TextOps.probeClassifyAndIndex(spark, batch, idx)._2)
+      val direct = rows(TextOps.lshIndexRows(spark, batch, capBuckets = false))
+      assert(fused.keys.exists(_(4) == -1) && fused.keys.exists(_(4) != -1),
+        "the fixture batch must yield both identity-rung and banded rows")
+      assert(fused === direct)
+    } finally batch.unpersist()
+  }
 }

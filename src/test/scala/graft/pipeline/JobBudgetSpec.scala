@@ -1,41 +1,31 @@
 package graft.pipeline
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkFixture
+import graft.obs.JobLedger
 
 /** Spark-job budgets for the zone hot paths at sf0.001, counted by a
-  * listener. Zones carry their own schema (`_GRAFT_SCHEMA`), so opening a
-  * fresh zone plans from metadata alone; a change that brings back a
+  * [[JobLedger]] scoped to the calling thread. Zones carry their own
+  * schema (`_GRAFT_SCHEMA`), so opening a fresh zone plans from metadata
+  * alone; a change that brings back a
   * footer-inference read or a second merge shuffle fails here instead of
   * showing up later as benchmark drift.
   */
 class JobBudgetSpec extends AnyFunSuite with SparkFixture {
 
-  /** Jobs `body` starts from this thread (the local property rides along
-    * to every job it submits, AQE stage jobs included).
+  /** Jobs `body` starts from this thread: the ledger's scope tag rides
+    * along to every job it submits, AQE stage jobs included.
     */
   private def jobsOf(body: => Unit): Int = {
-    val tag = "graft.jobBudget"
-    val count = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (Option(js.properties).exists(_.getProperty(tag) == "on"))
-          count.incrementAndGet()
-    }
+    val tag = "jobBudget"
     val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(tag, "on")
-    try body
-    finally {
-      sc.setLocalProperty(tag, null)
-      org.apache.spark.ListenerBusDrain(sc)
-      sc.removeSparkListener(listener)
-    }
-    count.get
+    val ledger = JobLedger.attach(sc, scope = Some(tag))
+    try {
+      JobLedger.scoped(sc, tag)(body)
+      ledger.drain()
+      ledger.totals.jobs.get.toInt
+    } finally ledger.detach()
   }
 
   private def freshCompacted(): String = {
