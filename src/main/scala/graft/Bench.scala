@@ -245,7 +245,11 @@ object Bench {
     * above the quiet-floor budget says "a subtree re-ran", a normal count
     * says "the host thrashed" (VERDICT r10). All counts come from an
     * unscoped [[graft.obs.JobLedger]], every event between the run's two
-    * drains. `warmSec` is the UNTIMED warm-up executions' wall — plan,
+    * drains. `compiles`/`compileMs` are the generated classes Janino
+    * compiled during the run and their summed compile time (JVM-wide, so
+    * driver-side planning compiles count too): a steady run that still
+    * compiles says its plan differs from run to run or the code cache
+    * thrashes. `warmSec` is the UNTIMED warm-up executions' wall — plan,
     * IO-cache and JIT cost paid before the timed window, kept visible so
     * amortized overhead is reported, never hidden (VERDICT r9 item 5).
     *
@@ -262,7 +266,7 @@ object Bench {
       runSec: Double, tasks: Long, warmSec: Double = 0.0,
       jobs: Long = 0L, stages: Long = 0L,
       altSec: Double = 0.0, altCpuSec: Double = 0.0, zoneBuilds: Long = 0L,
-      extraRuns: Long = 0L)
+      extraRuns: Long = 0L, compiles: Long = 0L, compileMs: Double = 0.0)
 
   /** Warm-up + timed run of one query in THIS JVM. Straggler task-end
     * events ride the async listener bus on BOTH edges: drain before zeroing
@@ -322,7 +326,8 @@ object Bench {
       ledger.drain()
       Meas(wall, gcSec, t.cpuSec, t.runSec, t.tasks.get, warmSec,
         t.jobs.get, t.stages.get,
-        zoneBuilds = graft.pipeline.ZoneBuildTally.builds.get - zb0)
+        zoneBuilds = graft.pipeline.ZoneBuildTally.builds.get - zb0,
+        compiles = ledger.compiles, compileMs = ledger.compileMs)
     }
     try {
       // min-of-two, third-on-evidence: run 1 is plan-cold by design (the
@@ -466,7 +471,7 @@ object Bench {
               // whole-JVM compile debt; later queries go straight to the
               // timed pair.
               val m = timeQuery(spark, fn, warmups = if (idx == 0) 1 else 0)
-              println(s"""$ChildResultPrefix{"name":"$name","sec":${fmt(m.sec)},"gc_sec":${fmt(m.gcSec)},"cpu_sec":${fmt(m.cpuSec)},"run_sec":${fmt(m.runSec)},"tasks":${m.tasks},"warm_sec":${fmt(m.warmSec)},"jobs":${m.jobs},"stages":${m.stages},"alt_sec":${fmt(m.altSec)},"alt_cpu_sec":${fmt(m.altCpuSec)},"zone_builds":${m.zoneBuilds},"xruns":${m.extraRuns}}""")
+              println(s"""$ChildResultPrefix{"name":"$name","sec":${fmt(m.sec)},"gc_sec":${fmt(m.gcSec)},"cpu_sec":${fmt(m.cpuSec)},"run_sec":${fmt(m.runSec)},"tasks":${m.tasks},"warm_sec":${fmt(m.warmSec)},"jobs":${m.jobs},"stages":${m.stages},"alt_sec":${fmt(m.altSec)},"alt_cpu_sec":${fmt(m.altCpuSec)},"zone_builds":${m.zoneBuilds},"xruns":${m.extraRuns},"compiles":${m.compiles},"compile_ms":${fmt(m.compileMs)}}""")
             } catch {
               case e: Throwable =>
                 println(s"""$ChildResultPrefix{"name":"$name","error":"${e.getClass.getSimpleName}"}""")
@@ -543,7 +548,9 @@ object Bench {
                 numField(body, "alt_sec").getOrElse(0.0),
                 numField(body, "alt_cpu_sec").getOrElse(0.0),
                 numField(body, "zone_builds").map(_.toLong).getOrElse(0L),
-                numField(body, "xruns").map(_.toLong).getOrElse(0L)))
+                numField(body, "xruns").map(_.toLong).getOrElse(0L),
+                numField(body, "compiles").map(_.toLong).getOrElse(0L),
+                numField(body, "compile_ms").getOrElse(0.0)))
             case _ => Left(strField(body, "error").getOrElse("unparseable child result"))
           }
         case None if timedOut => Left("timeout")
@@ -734,6 +741,8 @@ object Bench {
     val taskCounts = LinkedHashMap[String, Long]()
     val jobCounts = LinkedHashMap[String, Long]()
     val stageCounts = LinkedHashMap[String, Long]()
+    val compiles = LinkedHashMap[String, Long]()
+    val compileMs = LinkedHashMap[String, Double]()
     val errors = LinkedHashMap[String, String]()
     val sessionSecs = ArrayBuffer[Double]()
     def record(name: String, m: Meas): Unit = {
@@ -741,6 +750,7 @@ object Bench {
       cpuSecs(name) = m.cpuSec; runSecs(name) = m.runSec
       warmSecs(name) = m.warmSec; taskCounts(name) = m.tasks
       jobCounts(name) = m.jobs; stageCounts(name) = m.stages
+      compiles(name) = m.compiles; compileMs(name) = m.compileMs
       altSecs(name) = m.altSec
       if (m.zoneBuilds > 0) zoneBuilds(name) = m.zoneBuilds
       if (m.extraRuns > 0) xRuns(name) = m.extraRuns
@@ -985,8 +995,8 @@ object Bench {
 
     val b = board
     import b.{timings, gcs, cpuSecs, runSecs, warmSecs, altSecs,
-      zoneBuilds, xRuns, taskCounts, jobCounts, stageCounts, errors,
-      sessionSecs}
+      zoneBuilds, xRuns, taskCounts, jobCounts, stageCounts, compiles,
+      compileMs, errors, sessionSecs}
     val es = errors.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
       .mkString("{", ",", "}")
     def jlong(m: collection.Map[String, Long]): String =
@@ -1036,7 +1046,7 @@ object Bench {
     // prebuild pre-phase — a nonzero entry marks that row "rebuild", its
     // absence marks an inflated row "noise": VERDICT r12 item 4)
     val detail =
-      s"""{"bench_detail":{"gc_sec":${jmap(gcs, fmt)},"cpu_sec":${jmap(cpuSecs, fmt)},"run_sec":${jmap(runSecs, fmt)},"warm_sec":${jmap(warmSecs, fmt)},"alt_sec":${jmap(altSecs, fmt)},"zone_builds":${jlong(zoneBuilds)},"xruns":${jlong(xRuns)},"prebuild_sec":${fmt(prebuildSec)},"prebuilt":$prebuilt,"session_warmup_sec":${fmt(sessionSecs.sum)},"n_children":${sessionSecs.size},"tasks":$tm,"jobs":${jlong(jobCounts)},"stages":${jlong(stageCounts)},"errors":$es$retriedJson$boardRetryJson,"n_ok":${timings.size},"n_err":${errors.size},"mode":"fork","cpus":$cpus,"procs":${Runtime.getRuntime.availableProcessors}}}"""
+      s"""{"bench_detail":{"gc_sec":${jmap(gcs, fmt)},"cpu_sec":${jmap(cpuSecs, fmt)},"run_sec":${jmap(runSecs, fmt)},"warm_sec":${jmap(warmSecs, fmt)},"alt_sec":${jmap(altSecs, fmt)},"zone_builds":${jlong(zoneBuilds)},"xruns":${jlong(xRuns)},"prebuild_sec":${fmt(prebuildSec)},"prebuilt":$prebuilt,"session_warmup_sec":${fmt(sessionSecs.sum)},"n_children":${sessionSecs.size},"tasks":$tm,"jobs":${jlong(jobCounts)},"stages":${jlong(stageCounts)},"compiles":${jlong(compiles)},"compile_ms":${jmap(compileMs, fmt)},"errors":$es$retriedJson$boardRetryJson,"n_ok":${timings.size},"n_err":${errors.size},"mode":"fork","cpus":$cpus,"procs":${Runtime.getRuntime.availableProcessors}}}"""
     Files.createDirectories(Paths.get("target"))
     // Gate-trip SELF-DIAGNOSIS (r15 — the r12/r13 lesson made machine-
     // readable): wall alone cannot distinguish a plan regression from a

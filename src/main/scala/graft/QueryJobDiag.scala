@@ -6,7 +6,8 @@ import graft.obs.JobLedger
   * twice steady on Bench's child session (so GRAFT_CHILD_CONF selects the
   * same conf tier the board measures it under), printing one line per Spark
   * job from the [[JobLedger]] (wall, stages, tasks, Σ task CPU, Σ task
-  * wall, call site) and a total per run. To price a zone build, remove the
+  * wall, call site) and a total per run, with the run's codegen compiles
+  * and their summed compile time. To price a zone build, remove the
   * fixture's zone dir (`target/{dedup,ann,lexical}zone/<sf>`) first: the
   * cold run then carries the build's jobs.
   * Usage: sbt "runMain graft.QueryJobDiag <sfDir> <queryName>"
@@ -47,7 +48,8 @@ object QueryJobDiag {
       val t = ledger.totals
       println(f"==== $label total: job-wall ${jobs.map(_.wallSec).sum}%.2f s, " +
         f"cpu ${t.cpuSec}%.2f s, run ${t.runSec}%.2f s, jobs ${t.jobs.get}, " +
-        s"stages ${t.stages.get}, tasks ${t.tasks.get} ====")
+        s"stages ${t.stages.get}, tasks ${t.tasks.get}, " +
+        f"compiles ${ledger.compiles} (${ledger.compileMs}%.0f ms) ====")
     }
     try Seq("cold", "steady", "steady2").foreach(once)
     finally { ledger.detach(); spark.stop() }

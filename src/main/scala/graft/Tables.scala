@@ -51,6 +51,23 @@ object Tables {
     // cache-level).
     spark.conf.set(
       "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+    // Two confs that let a stage reuse its compiled code across runs.
+    // Spark's compiled-class cache is keyed on (class loader, generated
+    // source), so a run misses it when either key part changes:
+    //   - the source: whole-stage classes carry the codegen stage id in
+    //     their name, and AQE numbers stages in planning order, which
+    //     differs from run to run. Named without it, the same stage emits
+    //     the same source;
+    //   - the loader: every persist() plans its cache in a clone of the
+    //     session (Spark turns auto bucketed scan off there), and with
+    //     artifact isolation on each clone is a new isolated session whose
+    //     tasks run in a class loader of their own. So every cache build
+    //     compiled its stages afresh. No engine session adds jars or files,
+    //     so sessions sharing the executor's default loader changes
+    //     nothing else. Read when a session first needs it: it takes for
+    //     the clones even when this session already decided.
+    spark.conf.set("spark.sql.codegen.useIdInClassName", "false")
+    spark.conf.set("spark.sql.artifact.isolation.enabled", "false")
     // Engine optimizer rules: window-dedup → partial-aggregating max_by
     // (plans/WindowDedupToMaxBy.scala) — validated engine-wide by the
     // differential oracle gate.

@@ -6,7 +6,9 @@ import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.SparkContext
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Job, completed-stage and task counts with summed executor CPU (ns) and
   * executor run time (ms).
@@ -40,6 +42,12 @@ final class JobCounts {
   * threads and the SQL broadcast pool inherit it) and their stages and
   * tasks.
   *
+  * [[compiles]] and [[compileMs]] count the generated classes Janino
+  * compiled since attach or the last [[reset]], with their summed compile
+  * time. Spark keeps these per JVM and compiles on driver and task threads
+  * alike, so they cover the ledger's time window, scoped or not: run one
+  * measured thing per window.
+  *
   * Bus delivery is asynchronous: read after [[drain]].
   */
 final class JobLedger private (sc: SparkContext, scope: Option[String])
@@ -53,7 +61,18 @@ final class JobLedger private (sc: SparkContext, scope: Option[String])
   /** The jobs recorded since the last [[reset]], in submission order. */
   def jobs: Seq[Job] = byId.values.asScala.toSeq.sortBy(_.id)
 
-  def reset(): Unit = { totals.reset(); byId.clear(); stageJob.clear() }
+  @volatile private var codegen0 = JobLedger.codegenNow()
+
+  def reset(): Unit = {
+    totals.reset(); byId.clear(); stageJob.clear()
+    codegen0 = JobLedger.codegenNow()
+  }
+
+  /** Classes compiled (cache misses of Spark's generated-code cache). */
+  def compiles: Long = JobLedger.codegenNow()._1 - codegen0._1
+
+  /** Summed Janino compile time of [[compiles]], in milliseconds. */
+  def compileMs: Double = (JobLedger.codegenNow()._2 - codegen0._2) / 1e6
 
   def detach(): Unit = sc.removeSparkListener(this)
 
@@ -123,6 +142,10 @@ object JobLedger {
   val ScopeKey = "graft.ledger.scope"
 
   private val DrainCapMs = 2000L
+
+  /** (classes compiled, summed compile ns) in this JVM so far. */
+  private def codegenNow(): (Long, Long) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
 
   /** One job as the ledger saw it; `endMs` stays -1 while it runs. */
   final class Job(val id: Int, val scope: Option[String], val site: String,

@@ -1,11 +1,12 @@
 package graft.operators
 
-import java.util.concurrent.atomic.AtomicBoolean
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.Tables
@@ -40,10 +41,14 @@ object TextOps {
     call_function("intersect_size", a, b)
   }
 
-  /** Unpersists `cached` once the NEXT action on this session completes
-    * (success or failure), then unregisters itself — lets a lazily-returned
-    * query own a `persist()` without leaking cached blocks past the action
-    * that consumes it (ADVICE r4 item 3 / VERDICT r5 item 4). Each fresh
+  /** Unpersists `cached` once the next Dataset action on this session
+    * completes (success or failure), then unregisters itself — lets a
+    * lazily-returned query own a `persist()` without leaking cached blocks
+    * past the action that consumes it (ADVICE r4 item 3 / VERDICT r5
+    * item 4). "Next" is whichever action the session runs next: normally
+    * the caller's action on the returned frame, but an action another
+    * builder runs first (a collect, a `Dataset.count()`) fires it too, and
+    * the cache is then rebuilt by the caller's action. Each fresh
     * invocation of a query builder re-persists and re-arms the hook, so
     * repeated executions stay self-contained; the trade is that every
     * execution pays its own cache build — the honest cold-query cost.
@@ -65,14 +70,6 @@ object TextOps {
     }
     manager.register(hook)
   }
-
-  /** Whether AQE is on for this session (Spark's default: on). The eager
-    * cache counts are gated on it: under AQE each branch over a
-    * not-yet-materialized cache replans it, while without AQE the caller's
-    * one action fills the cache once and the count is an extra job.
-    */
-  private[operators] def aqeEnabled(spark: SparkSession): Boolean =
-    spark.conf.get("spark.sql.adaptive.enabled", "true").toBoolean
 
   /** doc_id, lang, and the 3-word shingle set as 64-bit fingerprints —
     * the standard production shrink (Broder '97): set algebra on longs, and
@@ -1018,16 +1015,14 @@ object TextOps {
     */
   private[graft] def lshIndexRows(spark: SparkSession, docs: DataFrame,
       capBuckets: Boolean = true): DataFrame = {
-    // persist + eager count: BOTH union branches below (banded + identity
-    // rung) reference this aggregation — unmaterialized, AQE compiles each
-    // as its own sub-query with no guaranteed cross-branch reuse, the
-    // double-execution mode r10/r11 fixed in dedupClusters and
-    // neardupMinhashLsh (r11 review caught this one in the same diff)
+    // persisted: BOTH union branches below (banded + identity rung) read
+    // this aggregation. No eager fill: AQE fills the cache as one stage
+    // both branches share (sf0.001 index build: same 8 jobs and 12 tasks
+    // with or without a count)
     val reps = docs
       .groupBy(col("lang"), col("sk"))
       .agg(min(col("doc_id")).as("rep"), min(col("sh")).as("sh"))
       .persist()
-    reps.count()
     val w = Window.partitionBy(col("band"), col("bkey"))
     val banded0 = withBandKeys(reps, Seq("lang", "rep", "sk", "sh"))
     val banded =
@@ -1082,18 +1077,15 @@ object TextOps {
     * persisted `groups` relation the classification already builds, so a
     * single downstream action computes the aggregation once via the cache.
     *
-    * The eager groups.count() is AQE-gated: it exists because AQE compiles
-    * each branch referencing a not-yet-materialized cache as its own
-    * sub-query with no cross-branch reuse (the r10 dedupClusters lesson).
-    * With AQE off (the streaming child session, the bench light tiers) the
-    * caller's single action computes the DAG once under the BlockManager's
-    * per-block cache locks, and the count is one pure-overhead job per
-    * micro-batch.
+    * `groups` is filled by the caller's action, not an eager count: under
+    * AQE the cache becomes one stage both self-join sides read (sf0.001:
+    * same jobs and tasks with or without the count), and without AQE (the
+    * streaming child session, the bench light tiers) the one action
+    * computes the DAG once, where a count was one more job per trigger.
     */
   private[graft] def probeClassifyAndIndex(spark: SparkSession, batch: DataFrame,
       idx: DataFrame): (DataFrame, DataFrame) = {
     GraftExtensions.register(spark)
-    val aqeOn = aqeEnabled(spark)
     def jaccOk(a: Column, b: Column, inter: Column): Column =
       round(inter.cast("double") / (size(a) + size(b) - inter), 6) >= 0.8
     // probe 1 — identity rung: identical set ⇒ J = 1, exact
@@ -1126,9 +1118,6 @@ object TextOps {
       .agg(min(col("doc_id")).as("rep"), min(col("sh")).as("sh"),
         sort_array(collect_list(col("doc_id"))).as("members"))
       .persist()
-    // materialize before the x/y self-join references it twice (the
-    // banded-relation lesson, VERDICT r10 item 2) — AQE-gated, see scaladoc
-    if (aqeOn) groups.count()
     val gBand = withBandKeys(groups, Seq("lang", "rep", "sk", "sh"))
     val nbrMin = gBand.as("x")
       .join(gBand.as("y"),
@@ -1168,6 +1157,10 @@ object TextOps {
     * OR an earlier id in the same batch), then admitted.
     */
   private[graft] def ingestLedger(classified: DataFrame): DataFrame =
+    ingestCounts(classified).orderBy(col("lang"))
+
+  /** [[ingestLedger]] without its ordering. */
+  private def ingestCounts(classified: DataFrame): DataFrame =
     classified.groupBy(col("lang"))
       .agg(count(lit(1)).as("n_new"),
         sum(col("dup_corpus").cast("long")).as("dup_of_corpus"),
@@ -1175,7 +1168,6 @@ object TextOps {
           .cast("long")).as("dup_within_batch"),
         sum((!col("dup_corpus") && !col("dup_stream") && !col("near_batch"))
           .cast("long")).as("admitted"))
-      .orderBy(col("lang"))
 
   /** Ingest-time NEAR-dup classification of an arriving batch (the md5
     * test split) against the EXISTING corpus — the O(batch) probe shape
@@ -1200,13 +1192,9 @@ object TextOps {
     */
   def incrementalNeardupStats(spark: SparkSession, sfDir: String): DataFrame = {
     val batch = arrivingBatch(spark, sfDir).persist()
-    // eager materialization: probe 1, probe 2, and the group aggregate all
-    // reference this cache — the deferred-materialization AQE recompute
-    // mode this round's fixes keep paying for. AQE-gated (r19): without
-    // AQE the caller's single action computes the cache once under the
-    // BlockManager's per-block locks, and the count is one extra job
-    // (see probeClassifyAndIndex's scaladoc).
-    if (aqeEnabled(spark)) batch.count()
+    // probe 1, probe 2 and the group aggregate all read this cache; AQE
+    // fills it as one stage they share (no eager count: sf0.001 and sf0.01
+    // runs show the same jobs and tasks without it)
     val idx = graft.pipeline.DedupZone.ensureLshIndex(spark, sfDir)
       .withColumn("is_corpus", lit(true))
     val result = ingestLedger(probeClassify(spark, batch, idx))
@@ -1251,7 +1239,15 @@ object TextOps {
     // partitions inside the stream only; results are exact aggregates and
     // joins, identical under any partitioning (the shared oracle and the
     // StreamingSpec parity test re-prove it).
+    //
+    // A new session starts from the SparkContext conf, not the caller's, so
+    // the two codegen-reuse confs of Tables.configure are set here too,
+    // before the first query: with artifact isolation on, each call's child
+    // ran its tasks in a class loader of its own and compiled all their
+    // generated code again (~130 Janino compiles per call at sf0.001).
     val ss = spark.newSession()
+    ss.conf.set("spark.sql.artifact.isolation.enabled", "false")
+    ss.conf.set("spark.sql.codegen.useIdInClassName", "false")
     ss.conf.set("spark.sql.adaptive.enabled", "false")
     ss.conf.set("spark.sql.shuffle.partitions", "4")
     GraftExtensions.register(ss)
@@ -1295,25 +1291,26 @@ object TextOps {
     // Bound to the CHILD session — everything inside the fold must live in
     // one session.
     val corpusIdx0 = graft.pipeline.DedupZone.ensureLshIndex(ss, sfDir)
+    new java.io.File(seenDir).mkdirs()
     val seenSchema = corpusIdx0.schema
+    // the classification rows' schema, recorded by the fold for the
+    // closing ledger read
+    val clsSchema = new AtomicReference[StructType]()
     val fold: (DataFrame, Long) => Unit = (mb, _) => {
       val s = mb.sparkSession
       val mbDocs = mb.select(col("doc_id"), col("lang"), col("sh"), col("sk"))
         .persist()
       // persist WITHOUT an eager count (the r14 perplexity lesson): AQE is
-      // off in the micro-batch session, so probeClassify's eager
-      // groups.count() does not run either — mbDocs fills lazily inside
-      // the trigger's single write action (under BlockManager cache
-      // locks); a dedicated count() would be one more job per trigger
+      // off in the micro-batch session, so mbDocs fills lazily inside the
+      // trigger's single write action (under BlockManager cache locks); a
+      // count would be one more job per trigger
       val corpusIdx = corpusIdx0
-      val seen =
-        if (new java.io.File(seenDir).exists())
-          // idx-partition files carry the unified schema; the explicit
-          // 6-column schema both projects down to the index relation
-          // (cls-side columns are null there) and skips per-trigger
-          // schema inference
-          s.read.schema(seenSchema).parquet(seenDir)
-        else corpusIdx.limit(0)
+      // idx-partition files carry the unified schema; the explicit
+      // 6-column schema both projects down to the index relation (cls-side
+      // columns are null there) and skips per-trigger schema inference.
+      // seenDir exists, empty, from the start: the first trigger plans the
+      // same scan as the later ones, so their generated code is shared
+      val seen = s.read.schema(seenSchema).parquet(seenDir)
       val idx = corpusIdx.withColumn("is_corpus", lit(true))
         .unionByName(seen.withColumn("is_corpus", lit(false)))
       // ONE partitioned append per trigger: the classification rows and
@@ -1332,6 +1329,7 @@ object TextOps {
       // the cross-shard rule must equal the batch operator's uncapped
       // within-batch banding (ADVICE r11).
       val (cls0, shardIdx0) = probeClassifyAndIndex(s, mbDocs, idx)
+      clsSchema.set(cls0.schema)
       val cls = cls0.withColumn("kind", lit("cls"))
       val shardIdx = shardIdx0.withColumn("kind", lit("idx"))
       // repartition by the partition column: ONE file per kind per trigger
@@ -1354,15 +1352,18 @@ object TextOps {
       .foreachBatch(fold)
       .start()
     q.awaitTermination()
-    // Eager materialization (ADVICE r12): the ledger is a ≤n_langs-row
-    // aggregate, but a lazy frame over clsDir dies when the NEXT invocation
-    // at the same SF clears the fixed work dir before the caller's first
-    // action. Collect it (rows are per-lang counts) and hand back a local
-    // relation that owns no files.
-    val ledger = ingestLedger(spark.read.parquet(clsDir))
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(ledger.collect().toIndexedSeq, 1),
-      ledger.schema)
+    // The ledger is computed here, not left lazy: a lazy frame over clsDir
+    // dies when the NEXT invocation at the same SF clears the fixed work
+    // dir before the caller's first action. One job: the read runs in the
+    // AQE-off child under the schema the fold recorded (no footer
+    // inference), and the ≤ n_langs rows are sorted on the driver, not by a
+    // range-partitioned orderBy. The result is a local relation that owns
+    // no files.
+    val schema = Option(clsSchema.get).getOrElse(throw new IllegalStateException(
+      s"streamingNeardupIngest: no arrival shard under $arrivals reached the fold"))
+    val ledger = ingestCounts(ss.read.schema(schema).parquet(clsDir))
+    val rows = ledger.collect().sortBy(r => Option(r.getString(0)))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), ledger.schema)
   }
 
   /** Exact oracle: batch docs against (corpus ∪ earlier batch docs) at the
@@ -1752,7 +1753,7 @@ object TextOps {
     // is sized by the PAIR data, not the artifact's file layout; AQE
     // coalesces it to ~1 partition at test SF (79 rows at sf0.1) and to
     // byte-sized partitions on a real pair volume. [[clusterAssignment]]'s
-    // dispatch count is the materializing action.
+    // bounded dispatch collect is the first action over it.
     val pairs = graft.pipeline.DedupZone.ensurePairs(spark, sfDir)
       .select(col("doc_a"), col("doc_b"))
       .repartition(col("doc_a")).persist()
@@ -1772,32 +1773,41 @@ object TextOps {
     */
   private[graft] val SmallGraphEdgeBudget = 100000L
 
-  /** The min-label-propagation CC kernel over an already-MATERIALIZED
-    * (persisted + counted) pair relation — factored out of [[dedupClusters]]
-    * so [[graft.pipeline.DedupZone]] can drive the same kernel from the
-    * disk-materialized pair artifact instead of a freshly recomputed Jaccard
-    * subtree (VERDICT r10 item 1a). Returns the UNORDERED (doc_id,
+  /** The min-label-propagation CC kernel over a persisted pair relation —
+    * factored out of [[dedupClusters]] so [[graft.pipeline.DedupZone]] can
+    * drive the same kernel from the disk-materialized pair artifact instead
+    * of a freshly recomputed Jaccard subtree (VERDICT r10 item 1a). Returns the UNORDERED (doc_id,
     * cluster_rep) assignment over `docs`; `pairs` and every internal cache
     * unpersist after the first action on the result (or on failure).
-    * Callers PERSIST `pairs` (the loop / the collect references it); the
-    * dispatch count below is the single materializing action, so callers
-    * must not add their own.
+    * Callers PERSIST `pairs` (the loop reads it every iteration) and add
+    * no eager action of their own.
     *
     * MEASURED small-graph dispatch (VERDICT r13 item 1b): under
     * [[SmallGraphEdgeBudget]] the labeling runs as a driver-side union-find
     * over the collected pairs and broadcasts the (node → component-min) map
     * back for the docs join — the same cost-before-commitment shape as the
-    * ANN probe-volume pre-gate: the count is already being paid to size the
-    * cache, and 4–6 distributed barrier rounds over a dim-sized graph buy
-    * nothing but scheduler-noise exposure. Both arms are pinned equivalent
-    * on randomized graphs in DedupPropertySpec via the injectable budget.
+    * ANN probe-volume pre-gate. One `limit(budget + 1)` collect decides the
+    * arm and is the small arm's edge list; 4–6 distributed barrier rounds
+    * over a dim-sized graph would buy nothing but scheduler-noise
+    * exposure. Both arms are pinned equivalent on randomized graphs in
+    * DedupPropertySpec via the injectable budget.
     */
   private[graft] def clusterAssignment(spark: SparkSession, pairs: DataFrame,
       docs: DataFrame,
       smallGraphBudget: Long = SmallGraphEdgeBudget): DataFrame = {
-    val nPairs = pairs.count() // materializes the caller's persist + sizes the dispatch
-    if (nPairs <= smallGraphBudget)
-      return smallGraphAssignment(spark, pairs, docs)
+    // one bounded collect both sizes the dispatch and, for a small graph,
+    // is the edge list: at most budget + 1 rows reach the driver
+    val head = {
+      import spark.implicits._
+      pairs.select(col("doc_a").cast("long"), col("doc_b").cast("long"))
+        .as[(Long, Long)]
+        .limit((math.max(0L, math.min(smallGraphBudget, Int.MaxValue - 1L)) + 1).toInt)
+        .collect()
+    }
+    if (head.length <= smallGraphBudget) {
+      pairs.unpersist(false)
+      return smallGraphAssignment(spark, head, docs)
+    }
     val edges = pairs.unionByName(
         pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
       .persist()
@@ -1903,20 +1913,17 @@ object TextOps {
     result
   }
 
-  /** The ≤[[SmallGraphEdgeBudget]] arm of [[clusterAssignment]]: collect the
-    * (already cache-materialized) pair list, label components with a
-    * path-compressing union-find on the driver, and broadcast the
-    * (node → component-min) relation back for the left join against `docs`.
+  /** The ≤[[SmallGraphEdgeBudget]] arm of [[clusterAssignment]]: label the
+    * components of the collected pair list with a path-compressing
+    * union-find on the driver, and broadcast the (node → component-min)
+    * relation back for the left join against `docs`.
     * Semantics are identical to the distributed arm — component rep = min
     * doc_id over the component, singletons map to themselves — pinned by
     * DedupPropertySpec running both arms over randomized graphs.
     */
-  private def smallGraphAssignment(spark: SparkSession, pairs: DataFrame,
-      docs: DataFrame): DataFrame = {
+  private def smallGraphAssignment(spark: SparkSession,
+      edges: Array[(Long, Long)], docs: DataFrame): DataFrame = {
     import spark.implicits._
-    val edges = pairs.select(col("doc_a").cast("long"), col("doc_b").cast("long"))
-      .as[(Long, Long)].collect()
-    pairs.unpersist(false)
     val parent = scala.collection.mutable.HashMap.empty[Long, Long]
     def find(x: Long): Long = {
       var r = x
@@ -2058,8 +2065,8 @@ object TextOps {
   private[graft] def mergeClusterAssignment(spark: SparkSession,
       corpusAssign: DataFrame, deltaPairs: DataFrame,
       batchDocs: DataFrame): DataFrame = {
+    // persisted, not counted: the two label joins share one cache stage
     val delta = deltaPairs.repartition(col("doc_a")).persist()
-    delta.count()
     val assignA = corpusAssign
       .select(col("doc_id").as("doc_a"), col("cluster_rep").as("la0"))
     val assignB = corpusAssign

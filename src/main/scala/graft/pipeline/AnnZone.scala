@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.VectorOps
 
@@ -54,8 +54,8 @@ object AnnZone {
     ArtifactZone.ensure(spark, s"${zoneDir(sfDir)}/ivf_centroids", src(sfDir),
       IvfCentroidsVersion) {
       dir =>
-        VectorOps.ivfCentroids(spark, VectorOps.embFrame(spark, sfDir))
-          .write.mode(SaveMode.Overwrite).parquet(dir)
+        ArtifactZone.write(
+          VectorOps.ivfCentroids(spark, VectorOps.embFrame(spark, sfDir)), dir)
     }
 
   /** Lists build reads the centroid ARTIFACT (ensuring it first), so a
@@ -67,9 +67,8 @@ object AnnZone {
       IvfListsVersion) {
       dir =>
         val cents = ensureIvfCentroids(spark, sfDir)
-        VectorOps.ivfLists(spark, VectorOps.embFrame(spark, sfDir), cents)
-          .repartition(spark.sparkContext.defaultParallelism)
-          .write.mode(SaveMode.Overwrite).parquet(dir)
+        ArtifactZone.write(VectorOps.ivfLists(spark, VectorOps.embFrame(spark, sfDir), cents)
+          .repartition(spark.sparkContext.defaultParallelism), dir)
     }
 
   /** IVFQ (integer-exact seed-quantizer IVF) posting lists for
@@ -100,9 +99,8 @@ object AnnZone {
     ArtifactZone.ensure(spark, s"${zoneDir(sfDir)}/ivfq_lists", src(sfDir),
       ivfqListsVersion(spark, sfDir, knownN)) {
       dir =>
-        VectorOps.ivfqLists(spark, sfDir)
-          .repartition(spark.sparkContext.defaultParallelism)
-          .write.mode(SaveMode.Overwrite).parquet(dir)
+        ArtifactZone.write(VectorOps.ivfqLists(spark, sfDir)
+          .repartition(spark.sparkContext.defaultParallelism), dir)
     }
 
   /** CORPUS-SUBSET sign-LSH posting index for ingest-time ANN
@@ -139,11 +137,10 @@ object AnnZone {
     ArtifactZone.ensure(spark, s"${zoneDir(sfDir)}/lsh_buckets_corpus",
       src(sfDir), corpusLshBucketsVersion(bits)) {
       dir =>
-        VectorOps.lshBuckets(spark,
+        ArtifactZone.write(VectorOps.lshBuckets(spark,
             VectorOps.embFrame(spark, sfDir).filter(!VectorOps.isArrivingVec),
             bits)
-          .repartition(spark.sparkContext.defaultParallelism)
-          .write.mode(SaveMode.Overwrite).parquet(dir)
+          .repartition(spark.sparkContext.defaultParallelism), dir)
     }
   }
 
@@ -160,16 +157,14 @@ object AnnZone {
   def ensurePqCodebook(spark: SparkSession, sfDir: String): DataFrame =
     ArtifactZone.ensure(spark, s"${zoneDir(sfDir)}/pq_codebook", src(sfDir),
       PqVersion) { dir =>
-      VectorOps.pqCodebook(spark, sfDir)
-        .write.mode(SaveMode.Overwrite).parquet(dir)
+      ArtifactZone.write(VectorOps.pqCodebook(spark, sfDir), dir)
     }
 
   def ensurePqCodes(spark: SparkSession, sfDir: String): DataFrame =
     ArtifactZone.ensure(spark, s"${zoneDir(sfDir)}/pq_codes", src(sfDir),
       PqVersion + "+files-v2") { dir =>
-      VectorOps.pqCodes(spark, sfDir)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .write.mode(SaveMode.Overwrite).parquet(dir)
+      ArtifactZone.write(VectorOps.pqCodes(spark, sfDir)
+        .repartition(spark.sparkContext.defaultParallelism), dir)
     }
 
   /** Lloyd-REFINED PQ artifact pair (VERDICT r11 item 8): same geometry,
@@ -185,24 +180,22 @@ object AnnZone {
   def ensurePqCodebookRefined(spark: SparkSession, sfDir: String): DataFrame =
     ArtifactZone.ensure(spark, s"${zoneDir(sfDir)}/pq_codebook_refined",
       src(sfDir), PqRefinedVersion) { dir =>
-      VectorOps.pqCodebookRefined(spark, sfDir)
-        .write.mode(SaveMode.Overwrite).parquet(dir)
+      ArtifactZone.write(VectorOps.pqCodebookRefined(spark, sfDir), dir)
     }
 
   def ensurePqCodesRefined(spark: SparkSession, sfDir: String): DataFrame =
     ArtifactZone.ensure(spark, s"${zoneDir(sfDir)}/pq_codes_refined",
       src(sfDir), PqRefinedVersion + "+files-v2") { dir =>
-      VectorOps.pqCodesRefined(spark, sfDir)
-        .repartition(spark.sparkContext.defaultParallelism)
-        .write.mode(SaveMode.Overwrite).parquet(dir)
+      ArtifactZone.write(VectorOps.pqCodesRefined(spark, sfDir)
+        .repartition(spark.sparkContext.defaultParallelism), dir)
     }
 
   def ensureLshBuckets(spark: SparkSession, sfDir: String): DataFrame =
     ArtifactZone.ensure(spark, s"${zoneDir(sfDir)}/lsh_buckets", src(sfDir),
       LshBucketsVersion) {
       dir =>
-        VectorOps.lshBuckets(spark, VectorOps.embFrame(spark, sfDir))
-          .repartition(spark.sparkContext.defaultParallelism)
-          .write.mode(SaveMode.Overwrite).parquet(dir)
+        ArtifactZone.write(
+          VectorOps.lshBuckets(spark, VectorOps.embFrame(spark, sfDir))
+            .repartition(spark.sparkContext.defaultParallelism), dir)
     }
 }

@@ -1,6 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** The build-if-stale artifact commit shared by [[DedupZone]] (text dedup
   * artifacts keyed on documents.parquet), [[AnnZone]] (vector index
@@ -18,7 +19,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Readers resolve the HIGHEST-sequence pointer to a version dir and scan
   * that under its stored schema ([[read]]: no footer inference, so a fresh
   * `ensure` runs no Spark job). A build lands in a fresh uniquely-named
-  * version dir (never touching the committed one), records its schema, and
+  * version dir (never touching the committed one), records the schema its
+  * builder returns (the written frame's, no footer read), and
   * COMMITS by creating the next-sequence
   * pointer via hard-link creation — atomic and EXCLUSIVE (link(2) fails on
   * an existing name), so the pointer slot is a true compare-and-swap:
@@ -93,12 +95,17 @@ private[pipeline] object ArtifactZone {
   def read(spark: SparkSession, versionPath: String): DataFrame =
     spark.read.schema(ZoneSchema.committed(versionPath)).parquet(versionPath)
 
-  /** Record a built version dir's schema — the one footer read an artifact
-    * pays, at build time, before the pointer CAS publishes it.
+  /** Writes `df` as the parquet of a version dir and returns the schema a
+    * reader of that dir sees: the frame's own, with partition columns moved
+    * last as partition discovery orders them. Builders hand it to
+    * [[ensure]], which commits it, so no build runs a footer-inference job
+    * to learn a schema its frame already had.
     */
-  private[pipeline] def commitSchema(spark: SparkSession, versionPath: String): Unit =
-    ZoneSchema.write(new java.io.File(versionPath),
-      spark.read.parquet(versionPath).schema)
+  def write(df: DataFrame, versionPath: String, partitionBy: String*): StructType = {
+    df.write.mode(SaveMode.Overwrite).partitionBy(partitionBy: _*).parquet(versionPath)
+    StructType(df.schema.filterNot(f => partitionBy.contains(f.name)) ++
+      partitionBy.map(df.schema(_)))
+  }
 
   /** Resolve only if committed AND fresh — fingerprint (source + algorithm
     * version) matches the current source. The no-build catalog registration
@@ -164,7 +171,10 @@ private[pipeline] object ArtifactZone {
       .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
   }
 
-  /** `version` names the ALGORITHM the artifact was built with (index
+  /** `build` writes the artifact into the version dir it is given and
+    * returns the dir's schema, normally through [[write]].
+    *
+    * `version` names the ALGORITHM the artifact was built with (index
     * parameters, decoder revision, thresholds) and is part of the staleness
     * fingerprint. This matters for artifacts that must AGREE with
     * query-time computation — an LSH posting table probed by query-side
@@ -175,7 +185,7 @@ private[pipeline] object ArtifactZone {
     * bump their version string whenever the build semantics change.
     */
   def ensure(spark: SparkSession, dir: String, source: java.io.File,
-      version: String = "")(build: String => Unit): DataFrame = {
+      version: String = "")(build: String => StructType): DataFrame = {
     def fingerprint(): String = RawZone.sourceFingerprint(source) +
       (if (version.isEmpty) "" else s"|$version")
     def upToDate(want: String): Boolean = resolve(dir).exists(isFresh(_, want))
@@ -192,8 +202,7 @@ private[pipeline] object ArtifactZone {
         // at scale a failed offline index job's debris is storage someone
         // pages on; locally it is target/ litter that survives rounds.
         try {
-          build(vpath)
-          commitSchema(spark, vpath)
+          ZoneSchema.write(new java.io.File(vpath), build(vpath))
           java.nio.file.Files.write(
             new java.io.File(vpath, "_GRAFT_SRC").toPath, want.getBytes("UTF-8"))
         } catch {

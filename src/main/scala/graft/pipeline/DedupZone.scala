@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.Tables
 import graft.operators.TextOps
@@ -76,7 +77,7 @@ object DedupZone {
     * independent concurrent Spark apps on one stale zone.
     */
   private def ensureArtifact(spark: SparkSession, sfDir: String, name: String,
-      version: String)(build: String => Unit): DataFrame =
+      version: String)(build: String => StructType): DataFrame =
     ArtifactZone.ensure(spark, s"${zoneDir(sfDir)}/$name", src(sfDir),
       version)(build)
 
@@ -100,8 +101,7 @@ object DedupZone {
     */
   def ensurePairs(spark: SparkSession, sfDir: String): DataFrame =
     ensureArtifact(spark, sfDir, "pairs", PairsVersion) { dir =>
-      TextOps.neardupJaccardPairsUnordered(spark, sfDir)
-        .write.mode(SaveMode.Overwrite).parquet(dir)
+      ArtifactZone.write(TextOps.neardupJaccardPairsUnordered(spark, sfDir), dir)
     }
 
   /** The cluster assignment (doc_id, cluster_rep), materialized: CC over
@@ -115,10 +115,8 @@ object DedupZone {
       val pairs = ensurePairs(spark, sfDir)
         .select(col("doc_a"), col("doc_b"))
         .repartition(col("doc_a")).persist()
-      // clusterAssignment's dispatch count materializes the cache
-      TextOps.clusterAssignment(spark, pairs,
-          Tables.documents(spark, sfDir).select(col("doc_id")))
-        .write.mode(SaveMode.Overwrite).parquet(dir)
+      ArtifactZone.write(TextOps.clusterAssignment(spark, pairs,
+          Tables.documents(spark, sfDir).select(col("doc_id"))), dir)
     }
 
   /** The CORPUS-SUBSET cluster assignment (doc_id, cluster_rep) — CC over
@@ -143,11 +141,9 @@ object DedupZone {
         .filter(isCorpus(col("doc_a")) && isCorpus(col("doc_b")))
         .select(col("doc_a"), col("doc_b"))
         .repartition(col("doc_a")).persist()
-      // clusterAssignment's dispatch count materializes the cache
-      TextOps.clusterAssignment(spark, pairs,
+      ArtifactZone.write(TextOps.clusterAssignment(spark, pairs,
           Tables.documents(spark, sfDir).select(col("doc_id"))
-            .filter(Splits.bucket < Splits.ValMax))
-        .write.mode(SaveMode.Overwrite).parquet(dir)
+            .filter(Splits.bucket < Splits.ValMax)), dir)
     }
 
   /** The contamination detection relation (test_doc, train_doc,
@@ -156,8 +152,7 @@ object DedupZone {
     */
   def ensureContamination(spark: SparkSession, sfDir: String): DataFrame =
     ensureArtifact(spark, sfDir, "contamination", ContaminationVersion) { dir =>
-      TextOps.decontaminationPairs(spark, sfDir)
-        .write.mode(SaveMode.Overwrite).parquet(dir)
+      ArtifactZone.write(TextOps.decontaminationPairs(spark, sfDir), dir)
     }
 
   /** TRAIN-side shingle posting index (lang_tr, s_tr, train_doc) — the
@@ -174,10 +169,9 @@ object DedupZone {
       // single-file artifact caps the probe scan at ONE task (measured —
       // the index path had 1.7x less CPU than the cold rebuild but lost on
       // wall because the scan serialized)
-      TextOps.trainShinglePostings(spark, sfDir)
+      ArtifactZone.write(TextOps.trainShinglePostings(spark, sfDir)
         .repartition(spark.sparkContext.defaultParallelism,
-          col("lang_tr"), col("s_tr"))
-        .write.mode(SaveMode.Overwrite).parquet(dir)
+          col("lang_tr"), col("s_tr")), dir)
     }
 
   /** The corpus-side LSH probe index (lang, rep, sk, sh, band, bkey) —
@@ -188,8 +182,7 @@ object DedupZone {
     */
   def ensureLshIndex(spark: SparkSession, sfDir: String): DataFrame =
     ensureArtifact(spark, sfDir, "lsh_index", LshIndexVersion) { dir =>
-      TextOps.corpusLshIndex(spark, sfDir)
-        .write.mode(SaveMode.Overwrite).parquet(dir)
+      ArtifactZone.write(TextOps.corpusLshIndex(spark, sfDir), dir)
     }
 
   /** Staged ARRIVAL shards for the streaming-ingest twin
@@ -224,17 +217,17 @@ object DedupZone {
     ensureArtifact(spark, sfDir, "ingest_arrivals", IngestArrivalsVersion) { tmp =>
       val shards = 2
       import org.apache.spark.sql.expressions.Window
-      TextOps.arrivingBatch(spark, sfDir)
+      val schema = ArtifactZone.write(TextOps.arrivingBatch(spark, sfDir)
         .withColumn("shard",
           ntile(shards).over(Window.orderBy(col("doc_id"))) - 1)
-        .repartition(col("shard"))
-        .write.mode(SaveMode.Overwrite).partitionBy("shard").parquet(tmp)
+        .repartition(col("shard")), tmp, "shard")
       (0 until shards).foreach { k =>
         val d = new java.io.File(tmp, s"shard=$k")
         Option(d.listFiles()).foreach(_.foreach(f =>
           if (!f.getName.startsWith("_") && !f.getName.startsWith("."))
             f.setLastModified(1000000000000L + k * 60000L)))
       }
+      schema
     }
     // the stream needs the CURRENT VERSION directory (r15 pointer layout),
     // not the zone root — resolve through the same read path as everyone

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, count, countDistinct, lit}
 
 import graft.operators.TextOps
@@ -53,9 +53,8 @@ object LexicalZone {
       // repartition(8, term) wrote 1 file, repartition(8) wrote 8. Disk
       // bucketing carries no metadata for path-addressed parquet anyway;
       // the probe re-partitions at query time (bm25IndexTopk).
-      try postingScores
-        .repartition(spark.sparkContext.defaultParallelism)
-        .write.mode(SaveMode.Overwrite).parquet(dir)
+      try ArtifactZone.write(
+        postingScores.repartition(spark.sparkContext.defaultParallelism), dir)
       finally postings.unpersist(false)
     }
 
@@ -75,9 +74,8 @@ object LexicalZone {
     ArtifactZone.ensure(spark, s"${zoneDir(sfDir)}/bm25_df", src(sfDir),
       Bm25Version) { dir =>
       val ps = ensureBm25Postings(spark, sfDir)
-      ps.groupBy(col("term")).agg(count(lit(1)).as("df"))
+      ArtifactZone.write(ps.groupBy(col("term")).agg(count(lit(1)).as("df"))
         .crossJoin(broadcast(
-          ps.agg(countDistinct(col("train_doc")).as("n_train"))))
-        .write.mode(SaveMode.Overwrite).parquet(dir)
+          ps.agg(countDistinct(col("train_doc")).as("n_train")))), dir)
     }
 }

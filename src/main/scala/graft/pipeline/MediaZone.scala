@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.MultimodalOps
 
@@ -43,9 +43,8 @@ object MediaZone {
     ArtifactZone.ensure(spark, s"${zoneDir(sfDir)}/image_features", src(sfDir),
       FeatureVersion) {
       dir =>
-        MultimodalOps
+        ArtifactZone.write(MultimodalOps
           .featurizeMedia(spark, MultimodalOps.contentMediaTable(spark, sfDir), 64)
-          .toDF()
-          .write.mode(SaveMode.Overwrite).parquet(dir)
+          .toDF(), dir)
     }
 }

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkFixture
@@ -28,13 +29,10 @@ class ArtifactZoneSpec extends AnyFunSuite with SparkFixture {
       rows: Seq[Long]): Unit = {
     import spark.implicits._
     val vname = s"v-winner-${rows.hashCode.abs}"
-    rows.toDF("v").write
-      .mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(new java.io.File(dir, vname).getPath)
-    java.nio.file.Files.write(
-      new java.io.File(new java.io.File(dir, vname), "_GRAFT_SRC").toPath,
+    val vdir = new java.io.File(dir, vname)
+    ZoneSchema.write(vdir, ArtifactZone.write(rows.toDF("v"), vdir.getPath))
+    java.nio.file.Files.write(new java.io.File(vdir, "_GRAFT_SRC").toPath,
       RawZone.sourceFingerprint(source).getBytes("UTF-8"))
-    ArtifactZone.commitSchema(spark, new java.io.File(dir, vname).getPath)
     assert(ArtifactZone.casCommit(dir.getPath, vname))
   }
 
@@ -69,8 +67,7 @@ class ArtifactZoneSpec extends AnyFunSuite with SparkFixture {
     def ensure(version: String) =
       ArtifactZone.ensure(spark, dir.getPath, source, version) { tmp =>
         builds += 1
-        Seq(builds.toLong).toDF("v")
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp)
+        ArtifactZone.write(Seq(builds.toLong).toDF("v"), tmp)
       }
     ensure("algo-v1").count()
     ensure("algo-v1").count()
@@ -104,9 +101,8 @@ class ArtifactZoneSpec extends AnyFunSuite with SparkFixture {
     org.apache.commons.io.FileUtils.deleteQuietly(dir.getParentFile)
     val source = new java.io.File(sf0001, "documents.parquet")
     import spark.implicits._
-    def build(rows: Seq[Long])(tmp: String): Unit =
-      rows.toDF("v").write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp)
+    def build(rows: Seq[Long])(tmp: String): StructType =
+      ArtifactZone.write(rows.toDF("v"), tmp)
     ArtifactZone.ensure(spark, dir.getPath, source, "w-v1")(build(Seq(1L, 2L)))
     val oldPath = ArtifactZone.resolve(dir.getPath).get
     val prodCommit = ArtifactZone.commitHook
@@ -137,9 +133,8 @@ class ArtifactZoneSpec extends AnyFunSuite with SparkFixture {
     org.apache.commons.io.FileUtils.deleteQuietly(dir.getParentFile)
     val source = new java.io.File(sf0001, "documents.parquet")
     import spark.implicits._
-    def build(rows: Seq[Long])(tmp: String): Unit =
-      rows.toDF("v").write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp)
+    def build(rows: Seq[Long])(tmp: String): StructType =
+      ArtifactZone.write(rows.toDF("v"), tmp)
     ArtifactZone.ensure(spark, dir.getPath, source, "c-v1")(build(Seq(1L)))
     val oldPath = ArtifactZone.resolve(dir.getPath).get
     val prodCommit = ArtifactZone.commitHook
@@ -167,9 +162,8 @@ class ArtifactZoneSpec extends AnyFunSuite with SparkFixture {
     org.apache.commons.io.FileUtils.deleteQuietly(dir.getParentFile)
     val source = new java.io.File(sf0001, "documents.parquet")
     import spark.implicits._
-    def build(rows: Seq[Long])(tmp: String): Unit =
-      rows.toDF("v").write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp)
+    def build(rows: Seq[Long])(tmp: String): StructType =
+      ArtifactZone.write(rows.toDF("v"), tmp)
     val prodCommit = ArtifactZone.commitHook
     try {
       // hook: a cross-JVM winner takes the pointer slot in the same
@@ -219,14 +213,15 @@ class ArtifactZoneSpec extends AnyFunSuite with SparkFixture {
     var builds = 0
     val got = ArtifactZone.ensure(spark, dir.getPath, source) { tmp =>
       builds += 1
-      Seq(7L).toDF("v") // the soon-to-be-stale loser artifact
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp)
+      // the soon-to-be-stale loser artifact
+      val schema = ArtifactZone.write(Seq(7L).toDF("v"), tmp)
       if (builds == 1) {
         // mid-build: the source advances AND a racing builder of the fresh
         // source commits first (cross-JVM, so it bypasses this JVM's lock)
         assert(source.setLastModified(source.lastModified() + 5000))
         stageWinnerCommit(dir, source, Seq(42L))
       }
+      schema
     }
     assert(got.collect().map(_.getLong(0)).toSeq === Seq(42L),
       "the fresher winner's commit must be served, never superseded by the stale loser")
@@ -251,10 +246,10 @@ class ArtifactZoneSpec extends AnyFunSuite with SparkFixture {
     val boom = intercept[IllegalStateException] {
       ArtifactZone.ensure(spark, dir.getPath, source) { tmp =>
         builds += 1
-        Seq(builds.toLong).toDF("v")
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp)
+        val schema = ArtifactZone.write(Seq(builds.toLong).toDF("v"), tmp)
         // the source advances EVERY build — a broken deployment, not a race
         assert(source.setLastModified(source.lastModified() + 5000))
+        schema
       }
     }
     assert(boom.getMessage.contains("changed fingerprint"))
@@ -269,8 +264,7 @@ class ArtifactZoneSpec extends AnyFunSuite with SparkFixture {
     val source = new java.io.File(sf0001, "documents.parquet")
     import spark.implicits._
     ArtifactZone.ensure(spark, dir.getPath, source) { tmp =>
-      Seq(1L, 2L, 3L).toDF("v")
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp)
+      ArtifactZone.write(Seq(1L, 2L, 3L).toDF("v"), tmp)
     }
     // stale the committed fingerprint so the next ensure attempts a rebuild
     val fp = new java.io.File(ArtifactZone.resolve(dir.getPath).get, "_GRAFT_SRC")
@@ -286,8 +280,7 @@ class ArtifactZoneSpec extends AnyFunSuite with SparkFixture {
     assert(spark.read.parquet(ArtifactZone.resolve(dir.getPath).get).count() === 3L)
     // a subsequent successful rebuild then commits normally
     val again = ArtifactZone.ensure(spark, dir.getPath, source) { tmp =>
-      Seq(9L).toDF("v")
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp)
+      ArtifactZone.write(Seq(9L).toDF("v"), tmp)
     }
     assert(again.count() === 1L)
   }
@@ -300,8 +293,7 @@ class ArtifactZoneSpec extends AnyFunSuite with SparkFixture {
     import spark.implicits._
     def ensure(version: String) =
       ArtifactZone.ensure(spark, dir.getPath, source, version) { tmp =>
-        Seq(1L).toDF("v")
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp)
+        ArtifactZone.write(Seq(1L).toDF("v"), tmp)
       }
     ensure("g-v1").count()
     // fabricate crash litter: an unreferenced version dir from a builder
@@ -332,8 +324,7 @@ class ArtifactZoneSpec extends AnyFunSuite with SparkFixture {
       new java.io.File(sf0001, "documents.parquet").toPath, source.toPath)
     import spark.implicits._
     ArtifactZone.ensure(spark, dir.getPath, source, "rf-v1") { tmp =>
-      Seq(1L).toDF("v")
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp)
+      ArtifactZone.write(Seq(1L).toDF("v"), tmp)
     }
     assert(ArtifactZone.resolveFresh(dir.getPath, source, "rf-v1").isDefined)
     assert(ArtifactZone.resolveFresh(dir.getPath, source, "rf-v2").isEmpty,
@@ -354,8 +345,7 @@ class ArtifactZoneSpec extends AnyFunSuite with SparkFixture {
     var builds = 0
     def ensure() = ArtifactZone.ensure(spark, dir.getPath, source, "s-v1") { tmp =>
       builds += 1
-      Seq(builds.toLong).toDF("v")
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp)
+      ArtifactZone.write(Seq(builds.toLong).toDF("v"), tmp)
     }
     ensure()
     val v1 = ArtifactZone.resolve(dir.getPath).get
@@ -372,12 +362,31 @@ class ArtifactZoneSpec extends AnyFunSuite with SparkFixture {
   test("the stored schema equals footer inference and survives its DDL " +
       "round trip, for the partitioned ingest_arrivals artifact (shard " +
       "column) and plain ones") {
+    // every DedupZone/AnnZone artifact: builders hand `ensure` the written
+    // frame's schema, so this pins frame schema = what a footer read infers
+    def built(zoneDir: String, name: String)(ensure: => Any): String = {
+      ensure
+      ArtifactZone.resolve(s"$zoneDir/$name").get
+    }
+    val dz = DedupZone.zoneDir(sf0001)
+    val az = AnnZone.zoneDir(sf0001)
     val versions = Seq(
       DedupZone.ensureIngestArrivals(spark, sf0001),
-      { DedupZone.ensureLshIndex(spark, sf0001)
-        ArtifactZone.resolve(s"${DedupZone.zoneDir(sf0001)}/lsh_index").get },
-      { AnnZone.ensureIvfLists(spark, sf0001)
-        ArtifactZone.resolve(s"${AnnZone.zoneDir(sf0001)}/ivf_lists").get })
+      built(dz, "lsh_index")(DedupZone.ensureLshIndex(spark, sf0001)),
+      built(az, "ivf_lists")(AnnZone.ensureIvfLists(spark, sf0001)),
+      built(dz, "pairs")(DedupZone.ensurePairs(spark, sf0001)),
+      built(dz, "clusters")(DedupZone.ensureClusters(spark, sf0001)),
+      built(dz, "clusters_corpus")(DedupZone.ensureCorpusClusters(spark, sf0001)),
+      built(dz, "contamination")(DedupZone.ensureContamination(spark, sf0001)),
+      built(dz, "train_postings")(DedupZone.ensureTrainPostings(spark, sf0001)),
+      built(az, "ivf_centroids")(AnnZone.ensureIvfCentroids(spark, sf0001)),
+      built(az, "ivfq_lists")(AnnZone.ensureIvfqLists(spark, sf0001)),
+      built(az, "lsh_buckets")(AnnZone.ensureLshBuckets(spark, sf0001)),
+      built(az, "lsh_buckets_corpus")(AnnZone.ensureCorpusLshBuckets(spark, sf0001)),
+      built(az, "pq_codebook")(AnnZone.ensurePqCodebook(spark, sf0001)),
+      built(az, "pq_codes")(AnnZone.ensurePqCodes(spark, sf0001)),
+      built(az, "pq_codebook_refined")(AnnZone.ensurePqCodebookRefined(spark, sf0001)),
+      built(az, "pq_codes_refined")(AnnZone.ensurePqCodesRefined(spark, sf0001)))
     versions.foreach { v =>
       val stored = ZoneSchema.committed(v)
       val inferred = spark.read.parquet(v).schema

@@ -17,14 +17,17 @@ class JobBudgetSpec extends AnyFunSuite with SparkFixture {
   /** Jobs `body` starts from this thread: the ledger's scope tag rides
     * along to every job it submits, AQE stage jobs included.
     */
-  private def jobsOf(body: => Unit): Int = {
+  private def jobsOf(body: => Unit): Int = ledgerOf(body).size
+
+  /** The jobs `body` starts from this thread (and threads it starts). */
+  private def ledgerOf(body: => Unit): Seq[JobLedger.Job] = {
     val tag = "jobBudget"
     val sc = spark.sparkContext
     val ledger = JobLedger.attach(sc, scope = Some(tag))
     try {
       JobLedger.scoped(sc, tag)(body)
       ledger.drain()
-      ledger.totals.jobs.get.toInt
+      ledger.jobs
     } finally ledger.detach()
   }
 
@@ -90,5 +93,29 @@ class JobBudgetSpec extends AnyFunSuite with SparkFixture {
         CompactedZone.mergeSnapshot(spark, rawDir, dir, "20240102-000000Z"))
       assert(merge <= 3, s"a one-snapshot merge ran $merge jobs")
     } finally freshCompacted()
+  }
+
+  test("the ingest path at sf0.001: incrementalNeardupStats <= 20 jobs, " +
+      "incrementalClusterStats <= 24, streamingNeardupIngest <= 9 with one " +
+      "job after its stream ends") {
+    import graft.operators.TextOps
+    def neardup() = TextOps.incrementalNeardupStats(spark, sf0001).collect()
+    def cluster() = TextOps.incrementalClusterStats(spark, sf0001).collect()
+    def stream() = TextOps.streamingNeardupIngest(spark, sf0001).collect()
+    // first calls build the zones the measured calls read
+    neardup(); cluster(); stream()
+    val n = jobsOf(neardup())
+    assert(n <= 20, s"incrementalNeardupStats ran $n jobs")
+    val c = jobsOf(cluster())
+    assert(c <= 24, s"incrementalClusterStats ran $c jobs")
+    // the stream's own jobs carry the call site of its start(); the rest
+    // ran after awaitTermination, the closing ledger read (7 before: a
+    // footer read and six AQE stage jobs for a few rows)
+    val jobs = ledgerOf(stream())
+    val closing = jobs.filterNot(_.site.startsWith("start at "))
+    assert(jobs.size - closing.size > 0, "the ledger must see the stream's jobs")
+    assert(closing.size <= 1,
+      s"${closing.size} jobs after the stream ended: ${closing.map(_.site)}")
+    assert(jobs.size <= 9, s"streamingNeardupIngest ran ${jobs.size} jobs")
   }
 }
