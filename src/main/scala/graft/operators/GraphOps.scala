@@ -22,23 +22,16 @@ import graft.Tables
   */
 object GraphOps {
 
-  /** The oriented (vec_a < vec_b) pair relation, PERSISTED and eagerly
-    * materialized: both operators below reference it from several plan
-    * branches, and AQE compiles each branch of a not-yet-materialized
-    * cache as its own sub-query WITHOUT cross-branch reuse — the r10
-    * `dedup_clusters` scaling finding (BASELINE.md), which re-executed the
-    * full Jaccard subtree ~3× inside one query. One `count()` before any
-    * branch references the cache keeps the expensive all-pairs cosine to
-    * exactly one execution; the caller must pair this with
+  /** The oriented (vec_a < vec_b) pair relation, persisted: both operators
+    * below read it from several plan branches, and the all-pairs cosine
+    * behind it must run once. The consuming action fills the cache once
+    * for all branches; the caller pairs this with
     * [[TextOps.unpersistAfterAction]].
     */
-  private def cachedPairs(spark: SparkSession, sfDir: String): DataFrame = {
-    val pairs = VectorOps.cosineNeardupPairs(spark, sfDir)
+  private def cachedPairs(spark: SparkSession, sfDir: String): DataFrame =
+    VectorOps.cosineNeardupPairs(spark, sfDir)
       .select(col("vec_a"), col("vec_b"))
       .persist()
-    pairs.count()
-    pairs
-  }
 
   /** Undirected edge list (both orientations) over the cached pairs. */
   private def edgesOf(pairs: DataFrame): DataFrame =

@@ -41,7 +41,7 @@ object HammingBanding {
     val id = col(idCol)
     val groups = rows.groupBy((extraKeys :+ hashCol).map(col): _*)
       .agg(min(id).as("rep"), sort_array(collect_list(id)).as("members"))
-      .persist()
+      .persist() // the gate, the chunk self-join and both expansions read it
 
     val within = groups.filter(size(col("members")) > 1)
       .select(explode(col("members")).as("doc_a"), col("members"))

@@ -2,8 +2,13 @@ package graft.operators
 
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Observation, SaveMode, SparkSession}
+import scala.util.Try
+
+import org.apache.spark.sql.{classic, Column, DataFrame, Encoders, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -41,34 +46,56 @@ object TextOps {
     call_function("intersect_size", a, b)
   }
 
-  /** Unpersists `cached` once the next Dataset action on this session
-    * completes (success or failure), then unregisters itself — lets a
-    * lazily-returned query own a `persist()` without leaking cached blocks
-    * past the action that consumes it (ADVICE r4 item 3 / VERDICT r5
-    * item 4). "Next" is whichever action the session runs next: normally
-    * the caller's action on the returned frame, but an action another
-    * builder runs first (a collect, a `Dataset.count()`) fires it too, and
-    * the cache is then rebuilt by the caller's action. Each fresh
-    * invocation of a query builder re-persists and re-arms the hook, so
-    * repeated executions stay self-contained; the trade is that every
-    * execution pays its own cache build — the honest cold-query cost.
+  /** The engine's one materialization rule. A builder persists a frame
+    * only when its plan reads that frame more than once, runs no action
+    * just to fill it (the consuming action computes it once for all of its
+    * readers; under AQE each reading branch adds a cheap job that waits for
+    * or reads the filled blocks), and hands the frames it persisted to this
+    * call once its own eager actions are done. They are released together
+    * by the first action, successful or failed, whose plan reads any of
+    * them: an `InMemoryRelation` over one of their caches in the action's
+    * `withCachedData`, directly or inside another cache's plan. An action
+    * that reads none of them, in this builder or any other, leaves them
+    * held, so a cache lives exactly as long as the query that owns it.
     * Listener delivery is async, so "no persisted blocks" holds eventually
     * (typically < 100 ms) after the action, not instantaneously.
     */
   private[operators] def unpersistAfterAction(spark: SparkSession, cached: DataFrame*): Unit = {
-    val manager = spark.listenerManager
-    val armed = new AtomicBoolean(true)
-    lazy val hook: QueryExecutionListener = new QueryExecutionListener {
-      private def fire(): Unit = if (armed.compareAndSet(true, false)) {
-        cached.foreach(_.unpersist(false))
-        manager.unregister(hook)
+    val cacheManager = spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager
+    val mine = cached.flatMap(df =>
+      cacheManager.lookupCachedData(df.asInstanceOf[classic.Dataset[_]])
+        .map(_.cachedRepresentation.cacheBuilder: AnyRef))
+    if (mine.nonEmpty) {
+      val manager = spark.listenerManager
+      val armed = new AtomicBoolean(true)
+      lazy val hook: QueryExecutionListener = new QueryExecutionListener {
+        private def fire(qe: QueryExecution): Unit = {
+          val read = Try(CacheReads.of(qe.withCachedData)).getOrElse(Nil)
+          if (read.exists(b => mine.exists(_ eq b)) && armed.compareAndSet(true, false)) {
+            cached.foreach(_.unpersist(false))
+            manager.unregister(hook)
+          }
+        }
+        override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+          fire(qe)
+        override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+          fire(qe)
       }
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        fire()
-      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
-        fire()
+      manager.register(hook)
     }
-    manager.register(hook)
+  }
+
+  /** The caches a plan reads: every `InMemoryRelation` in it, subqueries
+    * included, and the caches those caches' own plans read.
+    */
+  private object CacheReads extends AdaptiveSparkPlanHelper {
+    def of(plan: LogicalPlan): Seq[AnyRef] =
+      plan.collectWithSubqueries { case r: InMemoryRelation => r }.flatMap(withNested)
+
+    private def withNested(r: InMemoryRelation): Seq[AnyRef] =
+      r.cacheBuilder +: collectWithSubqueries(r.cachedPlan) {
+        case s: InMemoryTableScanExec => s.relation
+      }.flatMap(withNested)
   }
 
   /** doc_id, lang, and the 3-word shingle set as 64-bit fingerprints —
@@ -151,7 +178,7 @@ object TextOps {
       .select(col("lang").as("lang_c"), col("h").as("h_c")).distinct()
     val batch = docs.filter(!col("is_corpus"))
       .select(col("lang"), col("doc_id"), col("h"), col("n_tokens"))
-      .persist()
+      .persist() // the corpus-flag join and the in-batch firsts read it
     val firsts = batch.groupBy(col("lang").as("lang_f"), col("h").as("h_f"))
       .agg(min(col("doc_id")).as("first_id"))
     val classified = batch
@@ -677,7 +704,7 @@ object TextOps {
     val threshold = 0.3
     val docs = hashedShingleDocs(spark, sfDir)
       .select(col("doc_id"), col("lang"), sort_array(col("sh")).as("sh"))
-      .persist()
+      .persist() // the postings and both verify sides read it
     val sized = docs.withColumn("n", size(col("sh")))
 
     val posting = sized.select(col("doc_id"), col("lang"), col("n"),
@@ -713,7 +740,7 @@ object TextOps {
             lit(threshold / (1 + threshold)) * (col("na") + col("nb")) - 1e-9)
       .select(col("doc_a"), col("doc_b"))
       .distinct()
-      .persist()
+      .persist() // the gate count, both id semi-reductions and the verify read it
     // Eager candidate count = the broadcast GATE (VERDICT r7 item 4) — and
     // the action that materializes the cand cache for the main plan to
     // reuse (the HammingBanding gate pattern). The former forced
@@ -837,7 +864,7 @@ object TextOps {
     *   2. 64 min-hashes banded as 8 bands × 8 rows. S-curve midpoint
     *      (1/8)^(1/8) ≈ 0.77, band-collision at J = 0.3 ≈ 5·10⁻⁴ % — mid-J
     *      pairs stay out of the candidate join. Recall for a NON-IDENTICAL
-    *      pair at the J = 0.8 verify threshold is 1−(1−0.8⁸)⁸ ≈ 0.79; the
+    *      pair at the J = 0.8 verify threshold is 1−(1−0.8⁸)⁸ ≈ 0.77; the
     *      r4 16-band × 6-row retune pushed that to 0.992 but admitted
     *      mid-J (0.4–0.6) pairs ~8× more often and cost 1.5× the signature
     *      work — recall this corpus gets for free because its J ≥ 0.8 mass
@@ -845,8 +872,8 @@ object TextOps {
     *      (VERDICT r5 item 3a reverts the retune). Deployments whose J≈0.8
     *      pairs are NOT near-identical should raise `bands` — the cost/recall
     *      trade is a parameter, not a structure change.
-    *   3. Bucket cap: (band, bkey) buckets larger than `bucketCap` reps are
-    *      dropped from the candidate join — the pigeonhole blowup guard.
+    *   3. Bucket cap: (band, bkey) buckets larger than [[LshBucketCap]]
+    *      reps are dropped from the candidate join — the blowup guard.
     *      A pair in a dropped bucket still has the other 7 bands to
     *      surface; truly identical sets never rely on banding at all
     *      (collapsed in step 1). Dropped rows are counted via `observe`
@@ -855,60 +882,27 @@ object TextOps {
     *
     * Candidates are verified with EXACT Jaccard ≥ 0.8 before expansion, so
     * false candidates cost time, never correctness; recall for
-    * non-identical pairs is ≈ 0.79 at J = 0.8, ≈ 0.99 at J = 0.9, and
+    * non-identical pairs is ≈ 0.77 at J = 0.8, ≈ 0.99 at J = 0.9, and
     * exactly 1 at J = 1 (the collapse path). A capped-away bucket costs
     * one of 8 bands, so cap-induced recall loss is second-order. Shuffle
     * volume is O(distinct-sets × bands) — no all-pairs term anywhere.
     */
   def neardupMinhashLsh(spark: SparkSession, sfDir: String): DataFrame = {
     GraftExtensions.register(spark)
-    val numHashes = 64
-    val bands = 8
-    val rowsPerBand = numHashes / bands
-    val bucketCap = 64
-
+    // read by the banding pass, the rep-pair verify and the member expansion
     val groups = shingleGroups(spark, sfDir).persist()
     val reps = groups.select(col("rep"), col("lang"), col("sh"))
 
-    // Signature: per lane, min over shingles of xxhash64(lane, shingle) —
-    // ONE native single-pass expression over the shingle ARRAY the rep row
-    // already carries (VERDICT r9 item 1a replaced the explode + 64-column
-    // min-aggregate form: same hash values bit-for-bit, but the signature
-    // stage is now a scalar projection inside the scan's codegen pipeline —
-    // no explode, no 64-buffer aggregation state, no shuffle). Empty
-    // shingle sets are filtered as the explode used to drop them.
-    val sig = reps.filter(size(col("sh")) > 0)
-      .select(col("rep"),
-        call_function("minhash_signature", col("sh"), lit(numHashes)).as("mh"))
-
-    // Band keys: hash the r min-hashes of each band into one 64-bit key.
-    val bandCols = (0 until bands).map { b =>
-      val cols = (0 until rowsPerBand).map(r =>
-        element_at(col("mh"), b * rowsPerBand + r + 1))
-      struct(lit(b).as("band"), xxhash64(cols: _*).as("bkey"))
-    }
     val w = Window.partitionBy(col("band"), col("bkey"))
-    val banded = sig.select(col("rep"), explode(array(bandCols: _*)).as("bk"))
-      .select(col("rep"), col("bk.band").as("band"), col("bk.bkey").as("bkey"))
+    // persisted: both sides of the candidate self-join read it, so the
+    // signature pass and its window run once; the consuming action fills it
+    val banded = withBandKeys(reps, Seq("rep"))
       .withColumn("bsize", count(lit(1)).over(w))
       .observe("lsh_bucket_cap",
-        sum(when(col("bsize") > bucketCap, 1L).otherwise(0L)).as("dropped_band_rows"))
-      .filter(col("bsize") <= bucketCap)
+        sum(when(col("bsize") > LshBucketCap, 1L).otherwise(0L)).as("dropped_band_rows"))
+      .filter(col("bsize") <= LshBucketCap)
       .drop("bsize")
       .persist()
-    // Materialize the banded relation EAGERLY before the candidate
-    // self-join consumes it twice (VERDICT r10 item 2 — the exact failure
-    // mode dedupClusters' pair cache hit in r10's rehearsal): the x/y
-    // branches of the join reference this subtree independently, and under
-    // AQE each branch materializes its stages as separate sub-queries with
-    // NO guaranteed cross-branch exchange reuse — if the reuse doesn't
-    // fire, the whole signature+window pipeline runs twice (the r10 driver
-    // artifact burned 242.9 executor-CPU-s here, run ≈ cpu, ~40× the
-    // rehearsal CPU). One explicit count pins a single signature
-    // computation: both join branches are cache hits. The cache is
-    // O(distinct-sets × bands) thin rows — at 100 TB this is the relation
-    // you'd checkpoint anyway before a fan-out self-join.
-    banded.count()
 
     // Candidate rep pairs = same (band, bkey); dedup across bands.
     val cand = banded.as("x").join(banded.as("y"),
@@ -952,8 +946,8 @@ object TextOps {
   private[graft] val LshBucketCap = 64
 
   /** The 8 (band, bkey) structs over a 64-lane `mh` signature column —
-    * the same 8×8 banding as [[neardupMinhashLsh]], factored for the
-    * index/probe pair below.
+    * the one 8×8 banding [[neardupMinhashLsh]] and the index/probe pair
+    * below share.
     */
   private def bandKeyArray: Column = {
     val rowsPerBand = LshNumHashes / LshBands
@@ -1114,6 +1108,8 @@ object TextOps {
     // within-batch: identical-set groups (rep = min id), then banded
     // rep-pairs among groups; a doc's earliest in-batch near-dup is
     // min(own rep, paired groups' reps) — dup iff that min precedes it
+    // persisted: the banded self-join, the member expansion and the shard
+    // index read it (without it incrementalNeardupStats runs 23 jobs, not 20)
     val groups = batch.groupBy(col("lang"), col("sk"))
       .agg(min(col("doc_id")).as("rep"), min(col("sh")).as("sh"),
         sort_array(collect_list(col("doc_id"))).as("members"))
@@ -1505,7 +1501,7 @@ object TextOps {
   def decontaminationPairs(spark: SparkSession, sfDir: String): DataFrame = {
     val tagged = hashedShingleDocs(spark, sfDir)
       .withColumn("split", Splits.splitName)
-      .persist()
+      .persist() // both posting sides read it; the shingle pass runs once
     val testPost = tagged.filter(col("split") === "test")
       .select(col("doc_id").as("test_doc"), col("lang"),
         size(col("sh")).as("nt"), explode(col("sh")).as("s"))
@@ -1752,11 +1748,10 @@ object TextOps {
     // The repartition inserts one AQE-owned hash exchange so the CC cache
     // is sized by the PAIR data, not the artifact's file layout; AQE
     // coalesces it to ~1 partition at test SF (79 rows at sf0.1) and to
-    // byte-sized partitions on a real pair volume. [[clusterAssignment]]'s
-    // bounded dispatch collect is the first action over it.
+    // byte-sized partitions on a real pair volume.
     val pairs = graft.pipeline.DedupZone.ensurePairs(spark, sfDir)
       .select(col("doc_a"), col("doc_b"))
-      .repartition(col("doc_a")).persist()
+      .repartition(col("doc_a"))
     clusterAssignment(spark, pairs,
         Tables.documents(spark, sfDir).select(col("doc_id")))
       .orderBy(col("doc_id"))
@@ -1777,10 +1772,11 @@ object TextOps {
     * factored out of [[dedupClusters]] so [[graft.pipeline.DedupZone]] can
     * drive the same kernel from the disk-materialized pair artifact instead
     * of a freshly recomputed Jaccard subtree (VERDICT r10 item 1a). Returns the UNORDERED (doc_id,
-    * cluster_rep) assignment over `docs`; `pairs` and every internal cache
-    * unpersist after the first action on the result (or on failure).
-    * Callers PERSIST `pairs` (the loop reads it every iteration) and add
-    * no eager action of their own.
+    * cluster_rep) assignment over `docs`. The kernel persists `pairs`
+    * itself (the dispatch collect, the edge list and every loop iteration
+    * read it); it and every internal cache are released by the first action
+    * that reads the result (or on failure). Callers add no eager action of
+    * their own.
     *
     * MEASURED small-graph dispatch (VERDICT r13 item 1b): under
     * [[SmallGraphEdgeBudget]] the labeling runs as a driver-side union-find
@@ -1792,9 +1788,10 @@ object TextOps {
     * exposure. Both arms are pinned equivalent on randomized graphs in
     * DedupPropertySpec via the injectable budget.
     */
-  private[graft] def clusterAssignment(spark: SparkSession, pairs: DataFrame,
+  private[graft] def clusterAssignment(spark: SparkSession, pairsIn: DataFrame,
       docs: DataFrame,
       smallGraphBudget: Long = SmallGraphEdgeBudget): DataFrame = {
+    val pairs = pairsIn.persist()
     // one bounded collect both sizes the dispatch and, for a small graph,
     // is the edge list: at most budget + 1 rows reach the driver
     val head = {
@@ -1810,7 +1807,7 @@ object TextOps {
     }
     val edges = pairs.unionByName(
         pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .persist()
+      .persist() // the seed and every iteration's neighbor join read it
     // Seed = one propagation step fused into label init: every node appears
     // as doc_a in the symmetric edge list, so min(doc_b) is its neighbor
     // min. Not counted eagerly — the first loop job materializes it.
@@ -1819,7 +1816,7 @@ object TextOps {
       .agg(min(col("doc_b")).as("nbmin"))
       .select(col("doc_a").as("node"),
         least(col("doc_a"), col("nbmin")).as("label"))
-      .persist()
+      .persist() // iteration 0 reads it twice (relaxed rows and neighbor join)
     var labels = seed
     var iter = 0
     var changed = 1L
@@ -1865,7 +1862,7 @@ object TextOps {
           .observe(obs,
             coalesce(sum(when(col("label") < col("own"), 1L)), lit(0L)).as("changed"))
           .select(col("node"), col("label"))
-          .persist()
+          .persist() // the next iteration (or the result) reads what this count fills
         // the ONE action of the steady-state query
         next.count()
         changed = obs.get("changed").asInstanceOf[Long]
@@ -1982,11 +1979,11 @@ object TextOps {
     struct(col("n_tokens"), (-col("doc_id")).as("nid"))
 
   /** The (cluster_rep, keep_doc) survivor relation from a members frame
-    * carrying (cluster_rep, doc_id, n_tokens) — one argmax shared by
-    * [[retentionAuditStats]] and [[trainingManifestStats]]
-    * (`clusterRepresentatives` keeps its inline form because its argmax
-    * carries additional aggregates). Callers persist+materialize `members`
-    * first so this aggregate and their join-back share ONE corpus scan.
+    * carrying (cluster_rep, doc_id, n_tokens) — the [[survivorOrd]] argmax
+    * of [[retentionAuditStats]] (`clusterRepresentatives` and
+    * [[trainingManifestStats]] keep inline forms because their argmax
+    * carries more columns). The caller persists `members`, so this
+    * aggregate and its join-back share one corpus scan.
     */
   private def survivorKeeps(members: DataFrame): DataFrame =
     members.groupBy(col("cluster_rep"))
@@ -2078,7 +2075,7 @@ object TextOps {
         coalesce(col("lb0"), col("doc_b")).as("doc_b"))
       .filter(col("doc_a") =!= col("doc_b"))
       .distinct()
-      .repartition(col("doc_a")).persist()
+      .repartition(col("doc_a"))
     val labelNodes = labelEdges.select(col("doc_a").as("doc_id"))
       .unionByName(labelEdges.select(col("doc_b").as("doc_id")))
       .distinct()
@@ -2168,8 +2165,7 @@ object TextOps {
         size(words(col("text"))).cast("long").as("n_tokens"))
     val members = clusters.join(docs, col("doc_id") === col("did"))
       .select(col("cluster_rep"), col("doc_id"), col("lang"), col("n_tokens"))
-      .persist()
-    members.count() // materialize: the argmax and the join-back share one scan
+      .persist() // the survivor argmax and the join-back read it
     val survivors = survivorKeeps(members)
     val status = members.join(survivors, "cluster_rep")
       .join(dirty, col("doc_id") === col("train_doc"), "left")
@@ -2383,14 +2379,13 @@ object TextOps {
       .select(col("did"), col("lang"),
         size(col("ws")).cast("long").as("n_tokens"),
         QualityOps.c4Flags(col("ws")).as("f"))
-    val members = clusters.join(docs, col("doc_id") === col("did"))
-      .select(col("cluster_rep"), col("doc_id"), col("lang"),
-        col("n_tokens"), col("f"))
-      .persist()
-    members.count() // materialize: the argmax and the join-back share one scan
-    val survivors = survivorKeeps(members).select(col("keep_doc"))
-    val shipped = members
-      .join(survivors, col("doc_id") === col("keep_doc"))
+    // the survivor argmax carries the survivor's own row: one pass over
+    // the members, no join back
+    val shipped = clusters.join(docs, col("doc_id") === col("did"))
+      .groupBy(col("cluster_rep"))
+      .agg(max_by(struct(col("lang"), col("doc_id"), col("n_tokens"), col("f")),
+        survivorOrd).as("s"))
+      .select(col("s.*"))
       .join(dirty, col("doc_id") === col("train_doc"), "left_anti")
       .filter(Splits.isTrain)
       .filter(col("f.ok_len") && col("f.ok_wordlen") &&
@@ -2399,7 +2394,7 @@ object TextOps {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("lang")).orderBy(col("doc_id"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    val result = shipped
+    shipped
       .withColumn("bin",
         floor(coalesce(sum(col("n_tokens")).over(w), lit(0L)) / binTokens))
       .groupBy(col("lang"))
@@ -2410,8 +2405,6 @@ object TextOps {
         expr(s"(n_tokens * CAST(1000000 AS BIGINT)) div (n_bins * $binTokens)")
           .as("util_ppm"))
       .orderBy(col("lang"))
-    unpersistAfterAction(spark, members)
-    result
   }
 
   /** Funnel composed from the SAME independent DuckDB formulations each
@@ -2623,11 +2616,11 @@ object TextOps {
     // same row order as the postings' distinct keys, shuffled once.
     val byDoc = posts.groupBy(col("lang"), col("key"), col("doc_id"))
       .agg(count(lit(1)).as("n_occ_doc"))
-      .persist()
+      .persist() // keyStats and the affected-doc join read it
     val keyStats = byDoc.groupBy(col("lang"), col("key"))
       .agg(sum(col("n_occ_doc")).as("n_occ"), count(lit(1)).as("n_docs"))
       .filter(col("n_docs") >= 2)
-      .persist()
+      .persist() // the per-language stats and the affected-doc join read it
     val perLang = keyStats.groupBy(col("lang"))
       .agg(count(lit(1)).as("dup_span_keys"),
         sum(col("n_occ")).as("dup_span_occurrences"))
@@ -2717,7 +2710,7 @@ object TextOps {
             md5(concat_ws(" ", slice(col("ws"), i, lit(k)))).as("key"))))
           .as("w"))
       .select(col("doc_id"), col("lang"), col("w.start"), col("w.key"))
-      .persist()
+      .persist() // the dup-key aggregate and the semi-join back read it
     val dupKeys = posts.groupBy(col("lang"), col("key"))
       .agg(countDistinct(col("doc_id")).as("n_docs"))
       .filter(col("n_docs") >= 2)
@@ -3047,9 +3040,8 @@ object TextOps {
     // action and the scoring action — cache it so the test split is
     // tokenized once per invocation, not once per action (r13; the cost
     // was invisible because each action priced it separately). The
-    // release hook is armed at the END of dispatch, NOT here: the hook
-    // fires on the next completed execution, which must be the caller's
-    // scoring action, not the fanRow head() below.
+    // release hook is armed at the END of dispatch, NOT here: the fanRow
+    // head() below reads qTerms, and would release it.
     val qTerms = qTermsRaw.persist()
     // EVERYTHING from here through branch selection runs inside one try: a
     // throw in the dispatch-measurement actions (the fan-out head below is
@@ -3141,8 +3133,8 @@ object TextOps {
               "silent default.")
     }
     } catch { case t: Throwable => qTerms.unpersist(false); throw t }
-    // arm the release on the NEXT completed execution — the caller's
-    // scoring action (same contract as bm25TopKImpl's postings cache)
+    // released by the caller's scoring action, the first to read it after
+    // the dispatch (same contract as bm25TopKImpl's postings cache)
     unpersistAfterAction(spark, qTerms)
     out
   }

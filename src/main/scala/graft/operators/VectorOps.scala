@@ -158,11 +158,9 @@ object VectorOps {
   private def lshProbeTopK(spark: SparkSession, queryVecs: DataFrame,
       index: DataFrame, vecs: DataFrame, k: Int, excludeSelf: Boolean,
       probeBudget: Option[Long],
-      bits: Int = graft.functions.SignLshBuckets.Bits,
-      indexHist: Option[DataFrame] = None,
-      ringSink: Option[scala.collection.mutable.Buffer[DataFrame]] = None): DataFrame =
+      bits: Int = graft.functions.SignLshBuckets.Bits): DataFrame =
     lshProbeCandidatesOrVolume(spark, queryVecs, index, excludeSelf,
-      probeBudget, bits, indexHist, ringSink) match {
+      probeBudget, bits) match {
       case Right(cand) => rerankCandidates(spark, cand, queryVecs, vecs, k)
       case Left((probeRows, budget)) =>
         throw overBudgetError(probeRows, budget, bits)
@@ -187,12 +185,10 @@ object VectorOps {
       // r17 tick-shared frames (VERDICT r16 item 5), both sharded-mode only:
       // `indexHist` is the PRE-AGGREGATED (ct, cb, ni) bucket histogram so
       // per-shard gates join a tiny cached frame instead of re-aggregating
-      // the full posting table per sub-batch; `ringSink` transfers ring-
-      // frame unpersist ownership to the caller — the kernel's own
-      // unpersist-after-next-action hook is correct solo but WRONG inside
-      // a shard loop, where the next action is the NEXT SHARD'S GATE and
-      // the hook evicted every ring frame before the final union consumed
-      // it (each shard's signature pass then re-ran inside the union).
+      // the full posting table per sub-batch; `ringSink` hands the ring
+      // frame to the shard loop, which must drop every earlier shard's
+      // filled ring when a later shard's gate fails: no action will read
+      // those rings, so a release hook armed on them would never fire.
       indexHist: Option[DataFrame] = None,
       ringSink: Option[scala.collection.mutable.Buffer[DataFrame]] = None): Either[(Long, Long), DataFrame] = {
     GraftExtensions.register(spark)
@@ -904,11 +900,9 @@ object VectorOps {
     * cached aggregate instead of re-scanning the postings), and the
     * (vec_id, v) vector frame the reranks fetch from (Spark's CacheManager
     * substitutes the cached plan into every shard query that contains it).
-    * The per-shard RING frames stay per-shard persists but their unpersist
-    * moves here (`ringSink`): the kernel's own unpersist-after-next-action
-    * hook fired on the NEXT SHARD'S gate action and evicted each ring
-    * before the final union consumed it, silently re-running every shard's
-    * signature pass. All caches drop after the action that consumes the
+    * The per-shard RING frames stay per-shard persists, owned here
+    * (`ringSink`) so that a failed shard gate drops the rings the earlier
+    * shards filled. All caches drop after the action that consumes the
     * returned union (or immediately on a failed shard gate).
     */
   private def shardedProbe(spark: SparkSession, index: DataFrame,
@@ -959,13 +953,13 @@ object VectorOps {
     * (VERDICT r7 item 5, mirroring the simhash pair-budget stance): they are
     * DOCUMENTED small-SF exact cross-checks, and pointing one at a
     * production corpus must throw a diagnosis, not OOM the driver with an
-    * n² broadcast. One cheap count() against the limit; the eager action
-    * costs ~nothing next to the pair enumeration it guards.
+    * n² broadcast. One count against the limit, taken once per source
+    * version.
     */
   private[graft] val AllPairsRowLimit = 100000L
   private[graft] def requireAllPairsScale(spark: SparkSession, sfDir: String,
       label: String, limit: Long = AllPairsRowLimit): Unit = {
-    val n = Tables.embeddings(spark, sfDir).count()
+    val n = Tables.embeddingsCount(spark, sfDir)
     if (n > limit) throw new IllegalStateException(
       s"$label: $n embedding rows exceed the all-pairs oracle-form limit " +
         s"($limit) — this query enumerates O(n²) pairs and exists only as the " +
@@ -1108,7 +1102,7 @@ object VectorOps {
       .groupBy(col("vec_id"))
       .agg(max_by(col("cid"), struct(col("sim"), -col("cid"))).as("cid"),
         first(col("qv")).as("qv"))
-      .persist()
+      .persist() // both sides of the within-cluster join and the join-back read it
     val a = assigned.select(col("cid").as("cid_a"), col("vec_id").as("vec_a"),
       col("qv").as("qa"))
     val b = assigned.select(col("cid").as("cid_b"), col("vec_id").as("vec_b"),
@@ -1276,8 +1270,7 @@ object VectorOps {
     * zone artifacts stay: they are the measurement apparatus.
     */
   private[graft] def pqCodebookRefined(spark: SparkSession, sfDir: String): DataFrame = {
-    val sub = pqSubvectors(spark, sfDir).persist()
-    sub.count() // every Lloyd pass references it (the dedupClusters lesson)
+    val sub = pqSubvectors(spark, sfDir).persist() // every Lloyd pass reads it
     def step(cb: DataFrame): DataFrame = {
       val means = pqAssign(sub, cb)
         .select(col("m"), col("code"), posexplode(col("xv")).as(Seq("pos", "x")))

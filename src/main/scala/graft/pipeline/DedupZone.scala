@@ -114,7 +114,7 @@ object DedupZone {
     ensureArtifact(spark, sfDir, "clusters", ClustersVersion) { dir =>
       val pairs = ensurePairs(spark, sfDir)
         .select(col("doc_a"), col("doc_b"))
-        .repartition(col("doc_a")).persist()
+        .repartition(col("doc_a"))
       ArtifactZone.write(TextOps.clusterAssignment(spark, pairs,
           Tables.documents(spark, sfDir).select(col("doc_id"))), dir)
     }
@@ -140,7 +140,7 @@ object DedupZone {
       val pairs = ensurePairs(spark, sfDir)
         .filter(isCorpus(col("doc_a")) && isCorpus(col("doc_b")))
         .select(col("doc_a"), col("doc_b"))
-        .repartition(col("doc_a")).persist()
+        .repartition(col("doc_a"))
       ArtifactZone.write(TextOps.clusterAssignment(spark, pairs,
           Tables.documents(spark, sfDir).select(col("doc_id"))
             .filter(Splits.bucket < Splits.ValMax)), dir)

@@ -109,9 +109,8 @@ class DedupPropertySpec extends AnyFunSuite with SparkFixture {
         .getOrElse(fail(s"gen failed on trial $trial")).distinct
       val docs = (0L until n.toLong).toDF("doc_id")
       def run(budget: Long): Map[Long, Long] = {
-        // per the kernel contract: callers persist; the dispatch count
-        // inside clusterAssignment materializes (and each arm unpersists)
-        val pairs = edges.toDF("doc_a", "doc_b").persist()
+        // the kernel persists its own input, and each arm unpersists it
+        val pairs = edges.toDF("doc_a", "doc_b")
         TextOps.clusterAssignment(spark, pairs, docs, budget)
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       }
@@ -149,7 +148,7 @@ class DedupPropertySpec extends AnyFunSuite with SparkFixture {
       val (ra, rb) = (find(a.toInt), find(b.toInt))
       if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb } }
     val expected = (0 until n).map(i => i.toLong -> find(i).toLong).toMap
-    val pairs = edges.toDF("doc_a", "doc_b").repartition(col("doc_a")).persist()
+    val pairs = edges.toDF("doc_a", "doc_b").repartition(col("doc_a"))
     val got = TextOps.clusterAssignment(spark, pairs,
         (0L until n.toLong).toDF("doc_id")) // default budget → distributed arm
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

@@ -484,6 +484,30 @@ class OperatorSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
+  test("a query's caches outlive unrelated actions and drop with the action " +
+      "that reads them") {
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    spark.catalog.clearCache()
+    val sc = spark.sparkContext
+    // the candidate-count gate fills the query's caches while it is built
+    val pairs = TextOps.neardupJaccardPairs(spark, sf0001)
+    assert(sc.getPersistentRDDs.nonEmpty, "building the query must fill its caches")
+    spark.range(1).collect()
+    org.apache.spark.ListenerBusDrain(sc, 5000L)
+    Thread.sleep(200L) // an unpersist a listener started has landed by now
+    assert(sc.getPersistentRDDs.nonEmpty,
+      "an action that reads none of the query's caches must leave them held")
+    val out = java.nio.file.Files.createTempDirectory("lifetime").toString
+    try {
+      pairs.write.mode("overwrite").parquet(out)
+      val deadline = System.nanoTime() + 5000000000L
+      while (sc.getPersistentRDDs.nonEmpty && System.nanoTime() < deadline)
+        Thread.sleep(50L)
+      assert(sc.getPersistentRDDs.isEmpty,
+        "the write that consumed the query must release every cache it read")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+  }
+
   test("as-of join: every reported click precedes its purchase") {
     import spark.implicits._
     val ev = Tables.events(spark, sf0001)

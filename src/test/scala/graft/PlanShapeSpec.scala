@@ -361,6 +361,49 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
     assert(df.count() > 0L)
   }
 
+  test("neardup_minhash_lsh: the bucket-cap trim is reported on the action " +
+      "that consumes the query") {
+    val metrics = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val hook = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          d: Long): Unit = qe.observedMetrics.keys.foreach(metrics.add)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    val df = graft.operators.TextOps.neardupMinhashLsh(spark, sf0001)
+    org.apache.spark.ListenerBusDrain(spark.sparkContext, 5000L)
+    spark.listenerManager.register(hook)
+    try {
+      assert(df.count() > 0L)
+      org.apache.spark.ListenerBusDrain(spark.sparkContext, 5000L)
+      assert(metrics.contains("lsh_bucket_cap"),
+        s"the consuming action must carry the cap observation, saw $metrics")
+    } finally spark.listenerManager.unregister(hook)
+  }
+
+  test("the zone and graph consumers run no eager action while they are built: " +
+      "the consuming action fills their caches") {
+    // the zones and the embeddings row count exist first, as after the
+    // bench's prebuild
+    graft.pipeline.DedupZone.ensureClusters(spark, sf0001)
+    graft.pipeline.DedupZone.ensureContamination(spark, sf0001)
+    Tables.embeddingsCount(spark, sf0001)
+    Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "retentionAuditStats" ->
+        (() => graft.operators.TextOps.retentionAuditStats(spark, sf0001)),
+      "trainingManifestStats" ->
+        (() => graft.operators.TextOps.trainingManifestStats(spark, sf0001)),
+      "graphRankStats" -> (() => graft.operators.GraphOps.graphRankStats(spark, sf0001)),
+      "pqCodebookRefined" ->
+        (() => graft.operators.VectorOps.pqCodebookRefined(spark, sf0001))
+    ).foreach { case (name, build) =>
+      val (df, eagerDuringBuild) = countEagerActions(build())
+      assert(eagerDuringBuild === 0,
+        s"$name ran $eagerDuringBuild eager actions while it was built")
+      assert(df.count() > 0L)
+    }
+  }
+
   /** Runs `body`, returning its result plus the number of eager query
     * executions it issued — counted via QueryExecutionListener (one
     * onSuccess per eager action; AQE stage jobs don't inflate it), with a
