@@ -21,6 +21,9 @@ object Explain {
         println(s"\n========== $name ==========")
         try fn(spark, sfDir).explain("formatted")
         catch { case e: Throwable => println(s"EXPLAIN FAILED: ${e.getMessage}") }
+        // a query built but never run holds its caches; the next plan
+        // must not read them
+        finally spark.catalog.clearCache()
       }
     spark.stop()
   }

@@ -24,14 +24,20 @@ object GraphOps {
 
   /** The oriented (vec_a < vec_b) pair relation, persisted: both operators
     * below read it from several plan branches, and the all-pairs cosine
-    * behind it must run once. The consuming action fills the cache once
-    * for all branches; the caller pairs this with
-    * [[TextOps.unpersistAfterAction]].
+    * behind it must run once. The one fill count the materialization rule
+    * keeps (see [[TextOps.unpersistAfterAction]], which the caller pairs
+    * this with): with AQE off the planner sizes the census joins from the
+    * filled cache (broadcasts; unfilled, the all-pairs estimate plans them
+    * sort-merge), and under AQE it saves the ~6 one-task jobs the pair
+    * relation's reading branches submit against an unfilled cache.
     */
-  private def cachedPairs(spark: SparkSession, sfDir: String): DataFrame =
-    VectorOps.cosineNeardupPairs(spark, sfDir)
+  private def cachedPairs(spark: SparkSession, sfDir: String): DataFrame = {
+    val pairs = VectorOps.cosineNeardupPairs(spark, sfDir)
       .select(col("vec_a"), col("vec_b"))
       .persist()
+    pairs.count()
+    pairs
+  }
 
   /** Undirected edge list (both orientations) over the cached pairs. */
   private def edgesOf(pairs: DataFrame): DataFrame =

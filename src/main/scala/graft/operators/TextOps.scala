@@ -1,6 +1,6 @@
 package graft.operators
 
-import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicReference}
 
 import scala.util.Try
 
@@ -57,23 +57,32 @@ object TextOps {
     * `withCachedData`, directly or inside another cache's plan. An action
     * that reads none of them, in this builder or any other, leaves them
     * held, so a cache lives exactly as long as the query that owns it.
+    * A query that is built but never consumed therefore holds its caches
+    * (filled or not) until `spark.catalog.clearCache()` or an unpersist
+    * drops them; its hook then drops itself on the session's next action.
     * Listener delivery is async, so "no persisted blocks" holds eventually
     * (typically < 100 ms) after the action, not instantaneously.
     */
   private[operators] def unpersistAfterAction(spark: SparkSession, cached: DataFrame*): Unit = {
     val cacheManager = spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager
-    val mine = cached.flatMap(df =>
+    def registered: Seq[AnyRef] = cached.flatMap(df =>
       cacheManager.lookupCachedData(df.asInstanceOf[classic.Dataset[_]])
         .map(_.cachedRepresentation.cacheBuilder: AnyRef))
+    val mine = registered
     if (mine.nonEmpty) {
       val manager = spark.listenerManager
       val armed = new AtomicBoolean(true)
       lazy val hook: QueryExecutionListener = new QueryExecutionListener {
         private def fire(qe: QueryExecution): Unit = {
-          val read = Try(CacheReads.of(qe.withCachedData)).getOrElse(Nil)
-          if (read.exists(b => mine.exists(_ eq b)) && armed.compareAndSet(true, false)) {
-            cached.foreach(_.unpersist(false))
+          // none of mine registered any more (cleared or unpersisted
+          // elsewhere): nothing is left to release, so the hook goes
+          val held = registered.exists(b => mine.exists(_ eq b))
+          lazy val read = Try(CacheReads.of(qe.withCachedData)).getOrElse(Nil)
+          if ((!held || read.exists(b => mine.exists(_ eq b))) &&
+              armed.compareAndSet(true, false)) {
+            if (held) cached.foreach(_.unpersist(false))
             manager.unregister(hook)
+            armedReleases.decrementAndGet()
           }
         }
         override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
@@ -81,9 +90,13 @@ object TextOps {
         override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
           fire(qe)
       }
+      armedReleases.incrementAndGet()
       manager.register(hook)
     }
   }
+
+  /** Release hooks of [[unpersistAfterAction]] still registered, JVM-wide. */
+  private[graft] val armedReleases = new AtomicInteger()
 
   /** The caches a plan reads: every `InMemoryRelation` in it, subqueries
     * included, and the caches those caches' own plans read.
@@ -1978,17 +1991,6 @@ object TextOps {
   private def survivorOrd: Column =
     struct(col("n_tokens"), (-col("doc_id")).as("nid"))
 
-  /** The (cluster_rep, keep_doc) survivor relation from a members frame
-    * carrying (cluster_rep, doc_id, n_tokens) — the [[survivorOrd]] argmax
-    * of [[retentionAuditStats]] (`clusterRepresentatives` and
-    * [[trainingManifestStats]] keep inline forms because their argmax
-    * carries more columns). The caller persists `members`, so this
-    * aggregate and its join-back share one corpus scan.
-    */
-  private def survivorKeeps(members: DataFrame): DataFrame =
-    members.groupBy(col("cluster_rep"))
-      .agg(max_by(col("doc_id"), survivorOrd).as("keep_doc"))
-
   def clusterRepresentatives(spark: SparkSession, sfDir: String): DataFrame = {
     val clusters = graft.pipeline.DedupZone.ensureClusters(spark, sfDir)
     val toks = Tables.documents(spark, sfDir)
@@ -2159,19 +2161,27 @@ object TextOps {
   def retentionAuditStats(spark: SparkSession, sfDir: String): DataFrame = {
     val clusters = graft.pipeline.DedupZone.ensureClusters(spark, sfDir)
     val dirty = graft.pipeline.DedupZone.ensureContamination(spark, sfDir)
-      .select(col("train_doc")).distinct()
+      .select(col("train_doc"))
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id").as("did"), col("lang"),
         size(words(col("text"))).cast("long").as("n_tokens"))
     val members = clusters.join(docs, col("doc_id") === col("did"))
       .select(col("cluster_rep"), col("doc_id"), col("lang"), col("n_tokens"))
-      .persist() // the survivor argmax and the join-back read it
-    val survivors = survivorKeeps(members)
-    val status = members.join(survivors, "cluster_rep")
-      .join(dirty, col("doc_id") === col("train_doc"), "left")
+      .persist() // the survivor argmax and both contamination halves read it
+    val survivors = members.groupBy(col("cluster_rep"))
+      .agg(max_by(col("doc_id"), survivorOrd).as("keep_doc"))
+    // the contamination flag as a semi/anti split of the members, not a
+    // left join: count() drops a left join whose columns it does not read
+    // (CountPruneSpec), a filtering join it cannot (a full join turns left
+    // under the survivor join's not-null filter); both halves broadcast
+    // the dirty ids
+    val isDirty = col("doc_id") === col("train_doc")
+    val flagged = members.join(dirty, isDirty, "left_semi").withColumn("dirty", lit(true))
+      .unionByName(members.join(dirty, isDirty, "left_anti").withColumn("dirty", lit(false)))
+    val status = flagged.join(survivors, "cluster_rep")
       .select(col("lang"), col("n_tokens"),
         when(col("doc_id") =!= col("keep_doc"), "near_dup")
-          .when(col("train_doc").isNotNull, "contaminated")
+          .when(col("dirty"), "contaminated")
           .otherwise("retained").as("status"))
     def docsOf(s: String) = sum((col("status") === s).cast("long"))
     def toksOf(s: String) =

@@ -46,10 +46,6 @@ class CountPruneSpec extends AnyFunSuite with SparkFixture {
     "window_running_user_value" -> "running window only; delta < 0.2 s",
     "training_manifest_stats" ->
       "packing prefix-sum window; the funnel joins/aggregates survive; delta ~0.1 s",
-    "retention_audit_stats" ->
-      ("the contamination left join (key-unique dirty-id set, read only by " +
-        "the status label); the cluster and survivor joins survive. Bench's " +
-        "one-build count plan lost it before the release rule changed too"),
     // residuals on r11-pinned plans: the defining subtrees are pinned
     // (iterations, LM, scoring/training passes); what still prunes is a
     // dim-sized side computation
@@ -70,15 +66,9 @@ class CountPruneSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("queries losing plan nodes under count() are exactly the accepted inventory") {
-    // clean slate: other suites share this session, and a query they built
-    // but never ran still holds its (unfilled) caches
-    spark.catalog.clearCache()
     val losers = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      // one build, as Bench times it: a second build would share the first
-      // one's caches, and its eager actions would release them
-      val df = fn(spark, sf0001)
-      val full = shape(df.queryExecution.optimizedPlan)
-      val cnt = shape(df.groupBy().count().queryExecution.optimizedPlan)
+      val full = shape(fn(spark, sf0001).queryExecution.optimizedPlan)
+      val cnt = shape(fn(spark, sf0001).groupBy().count().queryExecution.optimizedPlan)
       val lost = full.toSeq.sorted.collect {
         case (k, v) if v > cnt.getOrElse(k, 0) => s"$k-${v - cnt.getOrElse(k, 0)}"
       }

@@ -508,6 +508,27 @@ class OperatorSpec extends AnyFunSuite with SparkFixture {
     } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
   }
 
+  test("a query built but never run holds its caches until clearCache(), and " +
+      "its release hook goes with them") {
+    val sc = spark.sparkContext
+    def settle(): Unit = {
+      spark.range(1).collect()
+      org.apache.spark.ListenerBusDrain(sc, 5000L)
+    }
+    spark.catalog.clearCache()
+    settle() // hooks of earlier tests' unconsumed queries drop here
+    val before = TextOps.armedReleases.get
+    TextOps.neardupJaccardPairs(spark, sf0001) // built, never consumed
+    settle()
+    assert(TextOps.armedReleases.get > before,
+      "an unrelated action must leave the unconsumed query's hook armed")
+    assert(sc.getPersistentRDDs.nonEmpty, "and its caches held")
+    spark.catalog.clearCache()
+    settle()
+    assert(TextOps.armedReleases.get === before,
+      "a hook whose caches were all cleared must not stay registered")
+  }
+
   test("as-of join: every reported click precedes its purchase") {
     import spark.implicits._
     val ev = Tables.events(spark, sf0001)

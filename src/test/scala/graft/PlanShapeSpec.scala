@@ -381,25 +381,27 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
     } finally spark.listenerManager.unregister(hook)
   }
 
-  test("the zone and graph consumers run no eager action while they are built: " +
-      "the consuming action fills their caches") {
+  test("the zone and vector consumers run no eager action while they are " +
+      "built, graph_rank_stats only its pair-cache fill") {
     // the zones and the embeddings row count exist first, as after the
     // bench's prebuild
     graft.pipeline.DedupZone.ensureClusters(spark, sf0001)
     graft.pipeline.DedupZone.ensureContamination(spark, sf0001)
     Tables.embeddingsCount(spark, sf0001)
-    Seq[(String, () => org.apache.spark.sql.DataFrame)](
-      "retentionAuditStats" ->
-        (() => graft.operators.TextOps.retentionAuditStats(spark, sf0001)),
-      "trainingManifestStats" ->
-        (() => graft.operators.TextOps.trainingManifestStats(spark, sf0001)),
-      "graphRankStats" -> (() => graft.operators.GraphOps.graphRankStats(spark, sf0001)),
-      "pqCodebookRefined" ->
-        (() => graft.operators.VectorOps.pqCodebookRefined(spark, sf0001))
-    ).foreach { case (name, build) =>
+    Seq[(String, Int, () => org.apache.spark.sql.DataFrame)](
+      ("retentionAuditStats", 0,
+        () => graft.operators.TextOps.retentionAuditStats(spark, sf0001)),
+      ("trainingManifestStats", 0,
+        () => graft.operators.TextOps.trainingManifestStats(spark, sf0001)),
+      // GraphOps.cachedPairs' count: the census joins are sized from the
+      // filled cache
+      ("graphRankStats", 1, () => graft.operators.GraphOps.graphRankStats(spark, sf0001)),
+      ("pqCodebookRefined", 0,
+        () => graft.operators.VectorOps.pqCodebookRefined(spark, sf0001))
+    ).foreach { case (name, budget, build) =>
       val (df, eagerDuringBuild) = countEagerActions(build())
-      assert(eagerDuringBuild === 0,
-        s"$name ran $eagerDuringBuild eager actions while it was built")
+      assert(eagerDuringBuild === budget,
+        s"$name ran $eagerDuringBuild eager actions while it was built, expected $budget")
       assert(df.count() > 0L)
     }
   }
