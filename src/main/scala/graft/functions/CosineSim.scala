@@ -190,18 +190,6 @@ object GraftExtensions {
         org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
           children.head, children(1)): Expression
       }),
-    (new FunctionIdentifier("shingle_rows"),
-      new ExpressionInfo(classOf[ShingleRows].getName, "shingle_rows"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2,
-          "shingle_rows(words, k) takes exactly 2 arguments")
-        val k = children(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"shingle_rows width must be an int literal, got $other")
-        }
-        ShingleRows(children.head, k): Expression
-      }),
     (new FunctionIdentifier("minhash_signature"),
       new ExpressionInfo(classOf[MinHashSignature].getName, "minhash_signature"),
       (children: Seq[Expression]) => {

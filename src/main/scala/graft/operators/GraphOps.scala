@@ -32,7 +32,7 @@ object GraphOps {
     * relation's reading branches submit against an unfilled cache.
     */
   private def cachedPairs(spark: SparkSession, sfDir: String): DataFrame = {
-    val pairs = VectorOps.cosineNeardupPairs(spark, sfDir)
+    val pairs = VectorOps.cosineNeardupPairsImpl(spark, sfDir)
       .select(col("vec_a"), col("vec_b"))
       .persist()
     pairs.count()

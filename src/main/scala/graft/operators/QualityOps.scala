@@ -1,10 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.TopKByScore
 
 /** Corpus-quality operators over `documents` — the rule-based filtering /
   * splitting / scrubbing stages every large-scale training-data pipeline
@@ -692,28 +691,24 @@ object QualityOps {
     * runs agree on all but the displaced picks (the property people reach
     * for reservoir sampling to get, without its sequential state).
     *
-    * Scale shape: per-(partition × stratum) state is one bounded k-heap
-    * (the typed [[TopKByScore]] Aggregator, map-side PARTIAL aggregation) —
-    * each partition reduces to ≤ k rows per language before the shuffle.
-    * The window-row_number form the oracle uses would shuffle-sort the
-    * whole corpus; at 100 TB the heap form moves k·strata rows instead.
-    * Hash < 2³² so its Double image is exact; ties (rare 32-bit
-    * collisions) break on doc_id in both engines.
+    * Scale shape: the oracle's `row_number() <= k` window, which Spark
+    * plans as a Partial WindowGroupLimit below the shuffle — each partition
+    * keeps ≤ k rows per language before the exchange, so at 100 TB the
+    * shuffle moves k·strata rows per partition, not the corpus. Ties (rare
+    * 32-bit hash collisions) break on doc_id in both engines.
     */
   def stratifiedSampleTopk(spark: SparkSession, sfDir: String): DataFrame = {
     val k = 20
     val h = conv(
       substring(md5(concat(lit("strat:"), col("doc_id").cast("string"))), 1, 8),
       16, 10).cast("long")
-    val topk = udaf(new TopKByScore(k),
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble))
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("lang")).orderBy(col("h"), col("doc_id"))
     Tables.documents(spark, sfDir)
       .select(col("lang"), col("doc_id"), h.as("h"))
-      .groupBy(col("lang"))
-      .agg(topk(col("doc_id"), -col("h").cast("double")).as("sel"))
-      .select(col("lang"), posexplode(col("sel")).as(Seq("pos", "s")))
-      .select(col("lang"), (col("pos") + 1).cast("int").as("pick"),
-        col("s._1").as("doc_id"))
+      .withColumn("pick", row_number().over(w))
+      .filter(col("pick") <= k)
+      .select(col("lang"), col("pick"), col("doc_id"))
       .orderBy(col("lang"), col("pick"))
   }
 

@@ -140,9 +140,9 @@ object Relational {
       |ORDER BY l_returnflag, l_linestatus""".stripMargin
 
   /** Per-group top-k: 3 priciest orders per priority via row_number ≤ k.
-    * At scale this is shuffle-by-group + per-partition TOP-K sort; if k is
-    * small and groups few, an aggregating min-heap (max_by collect) is the
-    * alternative — window form kept because output needs the rank.
+    * Spark plans the filter as a Partial WindowGroupLimit below the
+    * shuffle, so each partition keeps ≤ k rows per priority before the
+    * exchange — the engine's one per-group top-k form.
     */
   def topkOrdersPerPriority(spark: SparkSession, sfDir: String): DataFrame = {
     val ord = Tables.orders(spark, sfDir)

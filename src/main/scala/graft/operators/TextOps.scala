@@ -4,7 +4,7 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicReferenc
 
 import scala.util.Try
 
-import org.apache.spark.sql.{classic, Column, DataFrame, Encoders, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{classic, Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -2849,12 +2849,14 @@ object TextOps {
     * the opt-in approximation — the `requireAllPairsScale` stance: a silent
     * 10¹²-row join is never the right failure mode.
     *
-    * Both branches share the bounded-heap top-k tail
-    * ([[graft.functions.TopKByScore]]): each partition reduces to ≤ k rows
-    * per query BEFORE the shuffle, so the shuffled mass is k·|Q| rows,
-    * never the |Q|·|D| score matrix. Branch equivalence is pinned by a
-    * differential test (`OperatorSpec`): the forced postings branch
-    * reproduces the dense branch row-for-row on the fixture SFs.
+    * Both branches share the `row_number() <= k` top-k tail, which Spark
+    * plans as a Partial WindowGroupLimit below the shuffle: each partition
+    * keeps ≤ k rows per query before the exchange, so the shuffled mass is
+    * k·|Q| rows per partition, never the |Q|·|D| score matrix (which the
+    * partial limit still sorts, per partition, before it cuts). Branch
+    * equivalence is pinned by a differential test (`OperatorSpec`): the
+    * forced postings branch reproduces the dense branch row-for-row on the
+    * fixture SFs.
     *
     * Determinism: scores are rounded to 6 dp BEFORE ranking and the rank
     * tie-breaks on candidate id, so cross-engine float ulps (the two ln
@@ -3061,15 +3063,12 @@ object TextOps {
     val out = try {
     val (vocab, nTrain, dfTab) = indexStats
     GraftExtensions.register(spark)
-    val topk = udaf(new graft.functions.TopKByScore(topK),
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble))
-    // shared bounded-heap top-k tail (see scaladoc)
+    // shared top-k tail (see scaladoc)
+    val w = Window.partitionBy(col("query_doc")).orderBy(col("score").desc, col("train_doc"))
     def rankTail(scored: DataFrame): DataFrame = scored
-      .groupBy(col("query_doc"))
-      .agg(topk(col("train_doc"), col("score")).as("sel"))
-      .select(col("query_doc"), posexplode(col("sel")).as(Seq("pos", "s")))
-      .select(col("query_doc"), (col("pos") + 1).cast("int").as("rk"),
-        col("s._1").as("train_doc"), col("s._2").as("score"))
+      .withColumn("rk", row_number().over(w))
+      .filter(col("rk") <= topK)
+      .select(col("query_doc"), col("rk"), col("train_doc"), col("score"))
       .orderBy(col("query_doc"), col("rk"))
 
     // Cost-based branch dispatch (see scaladoc) on the caller-supplied

@@ -1,11 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.{GraftExtensions, TopKByScore}
+import graft.functions.GraftExtensions
 
 /** Similarity search over `embeddings.embedding` (array<float>, dim 64) —
   * BASELINE north star.
@@ -104,23 +104,19 @@ object VectorOps {
       k = 5, excludeSelf = true, probeBudget = None)
   }
 
-  /** Per-query bounded-heap top-k over scored (query_id, neighbor_id, cos)
-    * rows, exploded to (query_id, rank, neighbor_id, cos) — the ONE
-    * rank-materialization block shared by every ANN surface (lsh, ivf,
-    * incremental), so tie-break (score desc, id asc) and rank semantics
-    * cannot drift between them. The typed TopKByScore Aggregator is a
-    * bounded min-heap with map-side PARTIAL aggregation: each partition
-    * reduces to ≤ k rows per query before the shuffle, where a
-    * row_number() window would shuffle and sort EVERY candidate row.
+  /** Per-query top-k over scored (query_id, neighbor_id, cos) rows, as
+    * (query_id, rank, neighbor_id, cos) — the ONE rank block shared by every
+    * ANN surface (lsh, ivf, pq, incremental), so tie-break (score desc, id
+    * asc) and rank semantics cannot drift between them. Spark plans the
+    * `row_number() <= k` filter as a Partial WindowGroupLimit below the
+    * shuffle: each partition keeps ≤ k rows per query before the exchange,
+    * never every candidate row.
     */
-  private def rankTopK(sims: DataFrame, k: Int): DataFrame = {
-    val topk = udaf(new TopKByScore(k),
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble))
-    sims.groupBy(col("query_id"))
-      .agg(topk(col("neighbor_id"), col("cos")).as("topk"))
-      .select(col("query_id"), posexplode(col("topk")).as(Seq("pos", "nb")))
-      .select(col("query_id"), (col("pos") + 1).cast("int").as("rank"),
-        col("nb._1").as("neighbor_id"), col("nb._2").as("cos"))
+  private[graft] def rankTopK(sims: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id"))
+    sims.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
       .orderBy(col("query_id"), col("rank"))
   }
 
@@ -274,7 +270,7 @@ object VectorOps {
   }
 
   /** Exact rerank of deduped (query_id, neighbor_id) candidates: fetch
-    * both vectors by id, integer-rounded cosine, bounded-heap top-k.
+    * both vectors by id, integer-rounded cosine, [[rankTopK]].
     * Split from the candidate stage (r17) so [[shardedProbe]] can union
     * its shards' THIN candidates and rerank ONCE per tick — the rerank's
     * corpus-vector fetch is a full corpus-side join build, and paying it
@@ -465,6 +461,17 @@ object VectorOps {
     Iterator.iterate(seeds)(lloyd).drop(IvfLloydIters).next()
   }
 
+  /** The `n` best cells per vector of scored (vec_id, cid, sim, ...) rows,
+    * ties (sim DESC, cid ASC) — the one cell pick of every IVF surface (list
+    * assignment and probe). Rows stay whole, so the vector rides along as
+    * an ordinary column; Spark limits each partition to `n` rows per vector
+    * before the shuffle (Partial WindowGroupLimit).
+    */
+  private def topCells(scored: DataFrame, n: Int): DataFrame =
+    scored.withColumn("rk", row_number().over(
+        Window.partitionBy(col("vec_id")).orderBy(col("sim").desc, col("cid"))))
+      .filter(col("rk") <= n)
+
   /** IVF index BUILD, list half: closure assignment of every vector to its
     * `replication` nearest refined centroids (SPANN-style, see
     * [[annIvfTopk]]'s scaladoc) — (cid, neighbor_id, cv2) posting lists,
@@ -472,19 +479,11 @@ object VectorOps {
     */
   private[graft] def ivfLists(spark: SparkSession, emb: DataFrame,
       cents: DataFrame): DataFrame = {
-    val replication = IvfReplication
     val scored = emb.crossJoin(broadcast(cents))
       .withColumn("sim", cosine(spark, col("v"), col("cv")))
-    // Closure assignment: top-`replication` lists per vector via the same
-    // bounded-heap partial aggregate as the probe side (no window
-    // shuffle-sort; ties (sim DESC, cid ASC) as everywhere in this file).
-    val assignK = udaf(new TopKByScore(replication),
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble))
-    scored.groupBy(col("vec_id"))
-      .agg(first(col("v")).as("cv2"), assignK(col("cid"), col("sim")).as("al"))
-      .select(col("vec_id").as("neighbor_id"), col("cv2"),
-        explode(col("al")).as("a"))
-      .select(col("a._1").as("cid"), col("neighbor_id"), col("cv2"))
+    // closure assignment: the top-`IvfReplication` lists per vector
+    topCells(scored, IvfReplication)
+      .select(col("cid"), col("vec_id").as("neighbor_id"), col("v").as("cv2"))
   }
 
   /** IVF (inverted-file) ANN — the clustering-based scale path, complement
@@ -506,7 +505,8 @@ object VectorOps {
     * 100 TB cost model: each assignment pass is a broadcast of K centroids
     * against a linear scan (no shuffle on the big side beyond the list
     * write); queries touch replication·nprobe/K of the corpus instead of
-    * all of it, and list build stays a bounded-heap partial aggregate.
+    * all of it, and the list build keeps ≤ replication rows per vector in
+    * each partition before its shuffle ([[topCells]]).
     * The index halves (refined centroids, closure-assigned lists) are
     * MATERIALIZED per corpus version in [[graft.pipeline.AnnZone]] (r11 —
     * the same artifact contract as the dedup zone), so neither the list
@@ -525,20 +525,13 @@ object VectorOps {
     val lists = graft.pipeline.AnnZone.ensureIvfLists(spark, sfDir)
     val emb = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), toDouble(col("embedding")).as("v"))
-    // score only the QUERY vectors against the centroid dim
+    // score only the QUERY vectors against the centroid dim; probe each
+    // query's top-nprobe lists
     val scoredQ = emb.filter(col("vec_id") < 10)
       .crossJoin(broadcast(cents))
       .withColumn("sim", cosine(spark, col("v"), col("cv")))
-    // top-nprobe probe lists per query via the typed bounded-heap aggregate
-    // (same TopKByScore as the LSH path: map-side partial, no window; ties
-    // (sim DESC, cid ASC) match the former window form).
-    val probeK = udaf(new TopKByScore(nprobe),
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble))
-    val probes = scoredQ
-      .groupBy(col("vec_id"))
-      .agg(first(col("v")).as("qv"), probeK(col("cid"), col("sim")).as("pl"))
-      .select(col("vec_id").as("query_id"), col("qv"), explode(col("pl")).as("p"))
-      .select(col("query_id"), col("qv"), col("p._1").as("cid"))
+    val probes = topCells(scoredQ, nprobe)
+      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("cid"))
 
     val candidates = probes.join(lists, "cid")
       .filter(col("query_id") =!= col("neighbor_id"))
@@ -633,15 +626,10 @@ object VectorOps {
       .select(col("vec_id").as("cid"), col("qv").as("sv"))
     val scored = q.crossJoin(broadcast(seeds))
       .withColumn("sim", cosine(spark, col("qv"), col("sv")))
-    // closure assignment via the same bounded-heap partial aggregate as
-    // every ANN surface (ties (sim DESC, cid ASC) — and sim is exact
-    // integer arithmetic, so no ulp-dependent flips)
-    val assignK = udaf(new TopKByScore(IvfReplication),
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble))
-    scored.groupBy(col("vec_id"))
-      .agg(first(col("qv")).as("nv"), assignK(col("cid"), col("sim")).as("al"))
-      .select(col("vec_id").as("neighbor_id"), col("nv"), explode(col("al")).as("a"))
-      .select(col("a._1").as("cid"), col("neighbor_id"), col("nv"))
+    // closure assignment, the same cell pick as every IVF surface (sim is
+    // exact integer arithmetic, so no ulp-dependent flips)
+    topCells(scored, IvfReplication)
+      .select(col("cid"), col("vec_id").as("neighbor_id"), col("qv").as("nv"))
   }
 
   private[graft] def annIvfqTopk(spark: SparkSession, sfDir: String): DataFrame = {
@@ -658,15 +646,10 @@ object VectorOps {
     val lists = graft.pipeline.AnnZone.ensureIvfqLists(spark, sfDir, Some(n))
     val seeds = q.filter(col("vec_id") < k)
       .select(col("vec_id").as("cid"), col("qv").as("sv"))
-    val probeK = udaf(new TopKByScore(nprobe),
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble))
-    val probes = q.filter(col("vec_id") < AnnQueryCount)
-      .crossJoin(broadcast(seeds))
-      .withColumn("sim", cosine(spark, col("qv"), col("sv")))
-      .groupBy(col("vec_id"))
-      .agg(first(col("qv")).as("qv2"), probeK(col("cid"), col("sim")).as("pl"))
-      .select(col("vec_id").as("query_id"), col("qv2"), explode(col("pl")).as("p"))
-      .select(col("query_id"), col("qv2"), col("p._1").as("cid"))
+    val probes = topCells(q.filter(col("vec_id") < AnnQueryCount)
+        .crossJoin(broadcast(seeds))
+        .withColumn("sim", cosine(spark, col("qv"), col("sv"))), nprobe)
+      .select(col("vec_id").as("query_id"), col("qv").as("qv2"), col("cid"))
     val cand = probes.join(lists, "cid")
       .filter(col("query_id") =!= col("neighbor_id"))
       .dropDuplicates("query_id", "neighbor_id")
@@ -973,10 +956,15 @@ object VectorOps {
     * file would otherwise cap parallelism at one task).
     */
   def cosineNeardupPairs(spark: SparkSession, sfDir: String): DataFrame =
-    cosineNeardupPairsImpl(spark, sfDir, AllPairsRowLimit)
+    cosineNeardupPairsImpl(spark, sfDir).orderBy(col("vec_a"), col("vec_b"))
 
+  /** The pair relation WITHOUT the declared query's terminal sort, for
+    * consumers that need no order ([[GraphOps]]' pair cache): the sort's
+    * range-partition sampling job would compute the all-pairs join a
+    * second time.
+    */
   private[graft] def cosineNeardupPairsImpl(spark: SparkSession, sfDir: String,
-      limit: Long): DataFrame = {
+      limit: Long = AllPairsRowLimit): DataFrame = {
     requireAllPairsScale(spark, sfDir, "cosineNeardupPairs", limit)
     val emb = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), toDouble(col("embedding")).as("v"))
@@ -987,7 +975,6 @@ object VectorOps {
       .withColumn("cos", round(cosine(spark, col("va"), col("vb")), 4))
       .filter(col("cos") >= 0.4)
       .select(col("vec_a"), col("vec_b"), col("cos"))
-      .orderBy(col("vec_a"), col("vec_b"))
   }
 
   val cosineNeardupPairsSql: String =
@@ -1312,7 +1299,7 @@ object VectorOps {
     *      ([[graft.pipeline.AnnZone.ensurePqCodes]] — M small ints per
     *      vector, never the vectors), Σ_m adc[m][code] partial-aggregated
     *      to a PQ-approximated cosine ip/(√qn·√xn̂); top-[[PqShortlist]]
-    *      per query through the shared bounded-heap rank block.
+    *      per query through the shared rank block ([[rankTopK]]).
     *   3. Rerank: fetch ONLY the shortlisted vectors by id (the
     *      [[lshProbeTopK]] production layout) and order by exact
     *      int8-cosine, 6-dp rounded, id tie-break.
@@ -1482,12 +1469,8 @@ object VectorOps {
     val scoredQ = emb.filter(col("vec_id") < 10)
       .crossJoin(broadcast(cents))
       .withColumn("sim", cosine(spark, col("v"), col("cv")))
-    val probeK = udaf(new TopKByScore(nprobe),
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaDouble))
-    scoredQ.groupBy(col("vec_id"))
-      .agg(probeK(col("cid"), col("sim")).as("pl"))
-      .select(col("vec_id").as("query_id"), explode(col("pl")).as("p"))
-      .select(col("query_id"), col("p._1").as("cid"))
+    topCells(scoredQ, nprobe)
+      .select(col("vec_id").as("query_id"), col("cid"))
       .join(lists, "cid")
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"))

@@ -80,8 +80,8 @@ object AnnZone {
     * adaptive LSH width it is PART OF the artifact version: a corpus
     * growing across a K boundary rebuilds the lists rather than serving a
     * stale-K table. The lists are bit-identical to an inline recompute
-    * (integer-exact sims, heap tie-breaks), so the DuckDB twin — which
-    * recomputes them — still hash-matches.
+    * (integer-exact sims, (sim DESC, cid ASC) tie-breaks), so the DuckDB
+    * twin — which recomputes them — still hash-matches.
     */
   private[pipeline] def ivfqListsVersion(spark: SparkSession, sfDir: String,
       knownN: Option[Long] = None): String = {

@@ -4,11 +4,11 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{GraftExtensions, TopKByScore}
+import graft.functions.GraftExtensions
 
-/** The custom-extension route (SURVEY §7.3): native Catalyst expression with
-  * codegen, and a typed bounded-heap Aggregator — each proven equivalent to
-  * its built-in/HOF reference implementation.
+/** The custom-extension route (SURVEY §7.3): native Catalyst expressions
+  * with codegen, each proven equivalent to its built-in/HOF reference
+  * implementation — and the ANN surfaces' shared top-k rank block.
   */
 class CustomFunctionSpec extends AnyFunSuite with SparkFixture {
 
@@ -155,28 +155,6 @@ class CustomFunctionSpec extends AnyFunSuite with SparkFixture {
     assert(empty.getSeq[Long](0).forall(_ == Long.MaxValue))
   }
 
-  test("shingle_rows generator equals the declarative posexplode(transform) " +
-      "form on the whole corpus, including short/empty documents") {
-    // the generator streams shingles one at a time (no per-document array
-    // materialization — the long-document escape hatch); the declarative
-    // form is what the declared queries run. Same rows must come out.
-    GraftExtensions.register(spark)
-    val docs = graft.Tables.documents(spark, sf0001)
-      .select(col("doc_id"),
-        filter(split(col("text"), " "), w => w =!= "").as("ws"))
-    val viaGen = docs.select(col("doc_id"), expr("shingle_rows(ws, 3)"))
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2)))
-    val viaDecl = docs.select(col("doc_id"),
-        posexplode(when(size(col("ws")) >= 3,
-          transform(sequence(lit(1), size(col("ws")) - 2),
-            i => concat_ws(" ", slice(col("ws"), i, lit(3)))))
-          .otherwise(array(concat_ws(" ", col("ws"))))).as(Seq("pos", "shingle")))
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2)))
-    assert(viaGen.length === viaDecl.length)
-    assert(viaGen.sorted.toSeq === viaDecl.sorted.toSeq,
-      "generator and declarative shingling must produce identical row sets")
-  }
-
   test("gather_sum expression equals the HOF aggregate(element_at) form bit-for-bit") {
     GraftExtensions.register(spark)
     // vectors and id lists from real data: per-document token-position
@@ -217,23 +195,19 @@ class CustomFunctionSpec extends AnyFunSuite with SparkFixture {
     assert(r.isNullAt(3))
   }
 
-  test("TopKByScore aggregator matches the window row_number form") {
+  test("rankTopK: min(k, n) rows per query, ranks 1..n, score desc then id asc") {
     import spark.implicits._
-    val ev = Tables.events(spark, sf0001)
-      .select(col("event_type"), col("event_id"), col("value"))
-    val got = ev.as[(String, Long, Double)]
-      .groupByKey(_._1)
-      .mapValues(t => (t._2, t._3))
-      .agg(new TopKByScore(3).toColumn.name("topk"))
-      .collect().toMap
-      .view.mapValues(_.map(_._1)).toMap
-
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("event_type")).orderBy(col("value").desc, col("event_id"))
-    val expected = ev.withColumn("rk", row_number().over(w)).filter(col("rk") <= 3)
-      .collect()
-      .groupBy(_.getString(0))
-      .view.mapValues(_.sortBy(_.getInt(3)).map(_.getLong(1)).toSeq).toMap
-    assert(got === expected)
+    // query 1: five rows, three tied at 0.9 (listed out of id order) and one
+    // tie across the k cut; query 2: two rows, fewer than k. Spread over
+    // three partitions, so the per-partition limit and the merge both run.
+    val sims = Seq(
+      (1L, 30L, 0.9), (1L, 10L, 0.9), (1L, 20L, 0.9), (1L, 5L, 0.5), (1L, 4L, 0.5),
+      (2L, 7L, 0.1), (2L, 3L, 0.2)
+    ).toDF("query_id", "neighbor_id", "cos").repartition(3)
+    val got = graft.operators.VectorOps.rankTopK(sims, 4).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSeq
+    assert(got === Seq(
+      (1L, 1, 10L, 0.9), (1L, 2, 20L, 0.9), (1L, 3, 30L, 0.9), (1L, 4, 4L, 0.5),
+      (2L, 1, 3L, 0.2), (2L, 2, 7L, 0.1)))
   }
 }

@@ -6,7 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * (see `TextOps.unpersistAfterAction`): a builder persists a frame only
   * when its plan reads it more than once, and the consuming action fills
   * the cache. A new `persist()` or a `count()` run only to fill a cache
-  * fails here, and has to come with a reason and an updated bound.
+  * fails here, and has to come with a reason and an updated bound. The same
+  * scan keeps one per-group top-k: Spark's `row_number() <= k` window,
+  * which Spark limits per partition before the shuffle, not a typed
+  * aggregator with a Kryo buffer.
   */
 class MaterializationGateSpec extends AnyFunSuite {
 
@@ -53,5 +56,15 @@ class MaterializationGateSpec extends AnyFunSuite {
     assert(hits.toSet.intersect(allowed) === allowed, "the scan must see the allowed counts")
     val extra = hits.filterNot(allowed)
     assert(extra.isEmpty, s"counts whose value is discarded: ${extra.mkString("\n")}")
+  }
+
+  test("one top-k path: no udaf(, Encoders.kryo or typed Aggregator in src/main") {
+    val banned = Seq("""\budaf\(""", """Encoders\.kryo\b""",
+      """extends\s+([\w.]+\.)?Aggregator\b""").map(_.r)
+    assert(codeLines.nonEmpty, "the scan must see the engine's sources")
+    val hits = codeLines.collect {
+      case (f, l) if banned.exists(_.findFirstIn(l).nonEmpty) => s"$f: ${l.trim}"
+    }
+    assert(hits.isEmpty, s"per-group top-k is row_number() <= k; found:\n${hits.mkString("\n")}")
   }
 }

@@ -1,5 +1,10 @@
 package graft
 
+import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.{WindowGroupLimitExec, Final => FinalLimit,
+  Partial => PartialLimit}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Relational
@@ -11,7 +16,7 @@ import graft.operators.Relational
   * TakeOrderedAndProject (never a global sort), and no CartesianProduct
   * appears anywhere.
   */
-class PlanShapeSpec extends AnyFunSuite with SparkFixture {
+class PlanShapeSpec extends AnyFunSuite with SparkFixture with AdaptiveSparkPlanHelper {
 
   private def executedPlan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
@@ -59,14 +64,52 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
     * engine deliberately shuffles at scale, which would mask a regression.)
     */
   private def planNoAutoBroadcast(name: String): String =
-    planNoAutoBroadcastOf(SparkEntry.queries(name)(spark, sf0001))
+    planNoAutoBroadcastOf(query(name))
 
-  private def planNoAutoBroadcastOf(df: => org.apache.spark.sql.DataFrame): String = {
+  private def query(name: String) = SparkEntry.queries(name)(spark, sf0001)
+
+  private def planNoAutoBroadcastOf(df: => org.apache.spark.sql.DataFrame): String =
+    physicalNoAutoBroadcast(df).toString
+
+  private def physicalNoAutoBroadcast(df: => org.apache.spark.sql.DataFrame): SparkPlan = {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
-    try df.queryExecution.executedPlan.toString
+    try df.queryExecution.executedPlan
     finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
+
+  /** Every per-group top-k (`row_number() <= k`, a Final WindowGroupLimit)
+    * shuffles at most k rows per group per partition: it reads either rows
+    * its input already clusters by group (no shuffle of its own) or an
+    * exchange fed by a Partial WindowGroupLimit. Returns how many top-ks
+    * are limited below an exchange that way.
+    */
+  private def topKsLimitedBeforeShuffle(name: String, plan: SparkPlan): Int = {
+    def unsorted(p: SparkPlan): SparkPlan = p match {
+      case s: SortExec => unsorted(s.child)
+      case other => other
+    }
+    val finals = collect(plan) { case w: WindowGroupLimitExec if w.mode == FinalLimit => w }
+    assert(finals.nonEmpty, s"$name: expected a row_number() <= k top-k:\n$plan")
+    finals.count { f =>
+      unsorted(f.child) match {
+        case e: ShuffleExchangeExec =>
+          assert(unsorted(e.child) match {
+            case p: WindowGroupLimitExec => p.mode == PartialLimit
+            case _ => false
+          }, s"$name: a top-k shuffles rows no Partial WindowGroupLimit reduced:\n$plan")
+          true
+        case _ => false
+      }
+    }
+  }
+
+  /** [[topKsLimitedBeforeShuffle]], and at least one top-k is limited
+    * below an exchange.
+    */
+  private def assertTopKLimitedBeforeShuffle(name: String, plan: SparkPlan): Unit =
+    assert(topKsLimitedBeforeShuffle(name, plan) > 0,
+      s"$name: expected a Partial WindowGroupLimit below an Exchange:\n$plan")
 
   test("training_manifest_stats: the plan reads zone artifacts, never " +
       "recomputes detection, and the packing window is lang-partitioned") {
@@ -112,10 +155,8 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
       s"only the anchor set may broadcast:\n$plan")
   }
 
-  test("ann_ivf_topk: no Window operator — argmax/top-k run as partial aggregates") {
-    val plan = planNoAutoBroadcast("ann_ivf_topk")
-    assert(!plan.contains("Window"), s"IVF must not plan a window:\n$plan")
-    assert(plan.contains("TopKByScore"), s"expected the bounded-heap top-k aggregate:\n$plan")
+  test("ann_ivf_topk: every top-k is limited per partition before its shuffle") {
+    assertTopKLimitedBeforeShuffle("ann_ivf_topk", physicalNoAutoBroadcast(query("ann_ivf_topk")))
   }
 
   test("incremental_ann_topk: the probe dedup carries THIN id-only rows, never " +
@@ -140,8 +181,14 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("ann_lsh_topk: bucket-probe join shuffles; top-k is the partial aggregate") {
-    val plan = planNoAutoBroadcast("ann_lsh_topk")
-    assert(plan.contains("TopKByScore"), s"expected the bounded-heap top-k aggregate:\n$plan")
+    val physical = physicalNoAutoBroadcast(query("ann_lsh_topk"))
+    // with both rerank joins shuffled on query_id, the rank reads rows
+    // already clustered by query and shuffles nothing of its own ...
+    topKsLimitedBeforeShuffle("ann_lsh_topk", physical)
+    // ... and where the joins broadcast (the default plan at this SF), the
+    // rank's shuffle is fed by the partial limit
+    assertTopKLimitedBeforeShuffle("ann_lsh_topk", query("ann_lsh_topk").queryExecution.executedPlan)
+    val plan = physical.toString
     assert(plan.contains("SortMergeJoin"), s"bucket join must shuffle on (table, bucket):\n$plan")
     assert(!plan.contains("BroadcastNestedLoopJoin"),
       s"an unconditioned broadcast join would be the all-pairs regression:\n$plan")
@@ -273,15 +320,17 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
-  test("stratified_sample_topk: bounded-heap partial aggregation, no Window sort") {
-    // the scale claim: each partition reduces to ≤ k rows per stratum
-    // BEFORE the shuffle (typed Aggregator partial mode) — the window
-    // row_number form the oracle uses would shuffle-sort the whole corpus
-    val plan = executedPlan(graft.operators.QualityOps.stratifiedSampleTopk(spark, sf0001))
-    assert(!plan.contains("Window"),
-      s"per-stratum top-k must not plan a window sort:\n$plan")
-    assert(plan.contains("partial_topkbyscore") || plan.contains("ObjectHashAggregate"),
-      s"bounded-heap aggregate missing (no partial top-k before the shuffle):\n$plan")
+  test("stratified_sample_topk: the top-k is limited per partition before its shuffle") {
+    // the scale claim: each partition keeps ≤ k rows per stratum before
+    // the shuffle, so the exchange never moves the whole corpus
+    assertTopKLimitedBeforeShuffle("stratified_sample_topk",
+      physicalNoAutoBroadcast(query("stratified_sample_topk")))
+  }
+
+  test("bm25_topk: the shared top-k tail is limited per partition before its shuffle") {
+    // the shuffle carries ≤ k rows per query per partition, never the
+    // |Q|·|D| score matrix
+    assertTopKLimitedBeforeShuffle("bm25_topk", physicalNoAutoBroadcast(query("bm25_topk")))
   }
 
   test("bucketed join: neither fact side shuffles — the bucket layout is consumed") {
