@@ -68,10 +68,6 @@ object Tables {
     //     the clones even when this session already decided.
     spark.conf.set("spark.sql.codegen.useIdInClassName", "false")
     spark.conf.set("spark.sql.artifact.isolation.enabled", "false")
-    // Engine optimizer rules: window-dedup → partial-aggregating max_by
-    // (plans/WindowDedupToMaxBy.scala) — validated engine-wide by the
-    // differential oracle gate.
-    graft.plans.GraftPlanRules.install(spark)
     spark
   }
 

@@ -12,34 +12,33 @@ import graft.Tables
   * The crown jewel is `latestPerKey` — the reference's latest-snapshot-per-run
   * dedup (`/root/reference/main.py:149-157`): newest extraction wins per run
   * id. Two forms:
-  *   - `latestPerKey` (general): window `row_number()==1` — one hash shuffle
-  *     by key + per-partition sort. Right when downstream needs the whole
-  *     surviving ROW (arbitrary width) or the full ranking.
-  *   - argmax-of-one-column via `max_by` (see `latestEventPerUser`): partial
-  *     (map-side) aggregation, no per-partition sort, robust to key skew —
-  *     the plan you want at 100 TB when only an argmax projection is needed.
+  *   - `latestPerKey` (general): window `row_number() = 1`, which Spark's
+  *     `InferWindowGroupLimit` limits to one row per key per partition
+  *     before the shuffle (a Partial WindowGroupLimit over a sort), then
+  *     sorts again after it. Keeps the whole surviving ROW, any width.
+  *   - argmax-of-one-column via `max_by` (see `latestEventPerUser`): its
+  *     struct buffer cannot live in a hash aggregate, so Spark plans a
+  *     partial and a final SortAggregate, one sort on each side of the
+  *     shuffle — the same sorts and the same one shuffle as the window.
   */
 object EtlOps {
 
-  /** Latest-snapshot-per-key dedup with caller-supplied sort orders.
+  /** Latest-snapshot-per-key dedup: the row ranked first by `newestFirst`
+    * (every column descending) per `key`.
     * NOT `dropDuplicates(key)` — that keeps an arbitrary row; the reference
     * pins the newest (`main.py:149-157`), so ranking must be explicit.
-    * Scale: one shuffle on `key`; at 100 TB prefer a lake pre-bucketed by
-    * `key` so the shuffle is elided; heavy key skew → prefer the max_by
-    * aggregating form (AQE skew splitting covers joins, not window sorts).
+    * Scale: one shuffle on `key`, carrying at most one row per key per
+    * partition; at 100 TB prefer a lake pre-bucketed by `key` so the
+    * shuffle is elided.
     */
-  def latestPerKeyOrdered(df: DataFrame, key: Seq[Column], order: Seq[Column]): DataFrame = {
+  def latestPerKey(df: DataFrame, key: Seq[Column], newestFirst: Seq[Column]): DataFrame = {
     // Collision-safe rank column: pick a name absent from df.columns.
     val rn = Iterator.from(0).map(i => s"__graft_rn$i").find(!df.columns.contains(_)).get
-    val w = Window.partitionBy(key: _*).orderBy(order: _*)
+    val w = Window.partitionBy(key: _*).orderBy(newestFirst.map(_.desc): _*)
     df.withColumn(rn, row_number().over(w))
       .filter(col(rn) === 1)
       .drop(rn)
   }
-
-  /** Convenience: newest-first over the given columns (all descending). */
-  def latestPerKey(df: DataFrame, key: Seq[Column], newestFirst: Seq[Column]): DataFrame =
-    latestPerKeyOrdered(df, key, newestFirst.map(_.desc))
 
   /** Two-phase salted aggregation for pathologically skewed keys: phase 1
     * aggregates on (key, hash(row) % S) — the hot key's load spreads over S
@@ -62,9 +61,9 @@ object EtlOps {
     * survivors per event_type, totally ordered.
     *
     * Uses the argmax-aggregating form: `max_by(event_type, struct(ts, event_id))`
-    * runs as a partial+final hash aggregate (map-side combine, no window
-    * sort, skew-tolerant) — the 100 TB plan. `latestPerKey` stays the general
-    * op for whole-row survival.
+    * runs as a partial and a final SortAggregate (map-side combine, a sort
+    * on each side of the exchange), the plan `latestPerKey`'s window gets
+    * too. `latestPerKey` stays the general op for whole-row survival.
     */
   def latestEventPerUser(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)

@@ -105,16 +105,12 @@ object CompactedZone {
     */
   private[graft] def snapshotUpdates(spark: SparkSession, rawDir: String,
       snaps: String*): DataFrame =
-    spark.read.schema(RawZone.pageSchema).json(rawDir)
-      .filter(col("extracted_at").isin(snaps: _*))
-      .select(col("extracted_at"), explode(col("workflow_runs")).as("run"))
-      .select(
-        col("run.id").as("id"),
-        col("run.user.id").as("user_id"),
-        col("run.type").as("event_type"),
-        col("run.value").as("value"),
-        col("extracted_at"),
-        pmod(col("run.id"), lit(NumBuckets)).cast("int").as("bucket"))
+    withBucket(RawZone.flatRuns(spark.read.schema(RawZone.pageSchema).json(rawDir)
+      .filter(col("extracted_at").isin(snaps: _*))))
+
+  /** Flat runs plus their compacted-zone bucket, the last column. */
+  private def withBucket(runs: DataFrame): DataFrame =
+    runs.withColumn("bucket", pmod(col("id"), lit(NumBuckets)).cast("int"))
 
   /** Merge one snapshot into the compacted zone: latest-wins per id against
     * the touched buckets only. Returns the touched bucket ids.
@@ -419,8 +415,8 @@ object CompactedZone {
     // ONE shuffle: repartition by bucket (one file per bucket dir, not
     // tasks × buckets), then latest-per-key on (bucket, id). bucket is a
     // function of id, so the groups are the same rows as keying on id
-    // alone, and the aggregate WindowDedupToMaxBy plans reuses the bucket
-    // partitioning instead of shuffling again.
+    // alone, and the window reuses the bucket partitioning instead of
+    // shuffling again (pinned in PlanShapeSpec).
     val merged = EtlOps.latestPerKey(
       base.fold(aligned)(_.unionByName(aligned, allowMissingColumns = true))
         .repartition(col("bucket")),
@@ -585,17 +581,9 @@ object CompactedZone {
       .schema(RawZone.pageSchema)
       .option("maxFilesPerTrigger", 4)
       .json(rawDir + "/repo=*/extracted_at=*")
-    val updates = pages
+    val updates = withBucket(RawZone.flatRuns(pages
       .withColumn("extracted_at",
-        regexp_extract(col("_metadata.file_path"), "extracted_at=([^/]+)/", 1))
-      .select(col("extracted_at"), explode(col("workflow_runs")).as("run"))
-      .select(
-        col("run.id").as("id"),
-        col("run.user.id").as("user_id"),
-        col("run.type").as("event_type"),
-        col("run.value").as("value"),
-        col("extracted_at"),
-        pmod(col("run.id"), lit(NumBuckets)).cast("int").as("bucket"))
+        regexp_extract(col("_metadata.file_path"), "extracted_at=([^/]+)/", 1))))
     val fold: (DataFrame, Long) => Unit =
       (batch, _) => {
         // allowWidening = false: see the guard in mergeUpdates — this fold

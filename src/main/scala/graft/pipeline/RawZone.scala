@@ -9,7 +9,7 @@ import graft.operators.EtlOps
 
 /** The reference's full pipeline (`/root/reference/main.py:179-185`)
   * re-expressed Spark-first: immutable JSON raw zone → page explode →
-  * latest-snapshot-per-key dedup → nested→flat projection → flat sink.
+  * nested→flat projection → latest-snapshot-per-key dedup → flat sink.
   *
   * Two raw-zone layouts are supported:
   *   1. Hive-partitioned pages (`repo=…/extracted_at=…/part-*.txt`) — the
@@ -49,12 +49,6 @@ object RawZone {
     s"target/rawzone/$sfName"
   }
 
-  /** Build the raw zone from `events`: two extraction snapshots, where the
-    * newer one re-extracts every third run with value bumped by 1000 — so
-    * latest-per-key dedup provably picks snapshot 2 for those keys.
-    * Pages of ≤100 runs per JSON document (reference per_page=100,
-    * `main.py:52`), partitioned by (repo, extracted_at).
-    */
   /** Fingerprint of a source parquet path (file or directory of files):
     * sizes + mtimes. Cached derived zones are keyed on this, so regenerated
     * testdata invalidates them instead of being silently served stale
@@ -124,6 +118,12 @@ object RawZone {
         col("repo"), col("extracted_at"), col("page"))
   }
 
+  /** Build the raw zone from `events`: two extraction snapshots, where the
+    * newer one re-extracts every third run with value bumped by 1000 — so
+    * latest-per-key dedup provably picks snapshot 2 for those keys.
+    * Pages of ≤100 runs per JSON document (reference per_page=100,
+    * `main.py:52`), partitioned by (repo, extracted_at).
+    */
   def buildFromEvents(spark: SparkSession, sfDir: String): String = {
     val dir = rawZoneDir(sfDir)
     // Co-locate each (repo, extracted_at) Hive partition into one task →
@@ -138,23 +138,35 @@ object RawZone {
     dir
   }
 
-  /** The E2E pipeline as one declarative query: JSON page scan (schema
-    * pinned, partition columns discovered) → explode → latest-per-key →
-    * nested→flat projection with rename (`run.user.id` → `user_id`,
-    * reference `main.py:169`), totally ordered.
+  /** A page frame (extracted_at, workflow_runs) exploded to one flat row
+    * per run, with the nested rename (`run.user.id` → `user_id`, reference
+    * `main.py:169`): id, user_id, event_type, value, extracted_at. Every
+    * reader of the raw zone, batch or streaming, flattens through here.
     */
-  def pipelineRuns(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = ensureBuilt(spark, sfDir)
-    val pages = spark.read.schema(pageSchema).json(dir)
-    val runs = pages.select(col("repo"), col("extracted_at"),
-      explode(col("workflow_runs")).as("run"))
-    val latest = EtlOps.latestPerKey(runs, Seq(col("run.id")), Seq(col("extracted_at")))
-    latest.select(
+  private[pipeline] def flatRuns(pages: DataFrame): DataFrame =
+    pages.select(col("extracted_at"), explode(col("workflow_runs")).as("run"))
+      .select(
         col("run.id").as("id"),
         col("run.user.id").as("user_id"),
         col("run.type").as("event_type"),
-        col("run.value").as("value"))
+        col("run.value").as("value"),
+        col("extracted_at"))
+
+  /** The pipeline's tail over [[flatRuns]]: the newest snapshot of each run
+    * id, projected to the contract columns, totally ordered.
+    */
+  private def latestRuns(runs: DataFrame): DataFrame =
+    EtlOps.latestPerKey(runs, Seq(col("id")), Seq(col("extracted_at")))
+      .select(col("id"), col("user_id"), col("event_type"), col("value"))
       .orderBy(col("id"))
+
+  /** The E2E pipeline as one declarative query: JSON page scan (schema
+    * pinned, partition columns discovered) → explode + flatten →
+    * latest-per-key, totally ordered.
+    */
+  def pipelineRuns(spark: SparkSession, sfDir: String): DataFrame = {
+    val dir = ensureBuilt(spark, sfDir)
+    latestRuns(flatRuns(spark.read.schema(pageSchema).json(dir)))
   }
 
   val pipelineRunsSql: String =
@@ -167,27 +179,22 @@ object RawZone {
     * #1-3 as a first-class, oracle-checked path): `PagedJsonSource` yields
     * raw page payloads with file provenance — one InputPartition per page,
     * bounded-retry fetch — and everything downstream is the reference's
-    * `get_pages` → parse → explode → latest-per-key split. The partition
-    * dimensions (repo, extracted_at) are parsed from the provenance path,
-    * since a transport yields bytes, not lake metadata.
+    * `get_pages` → parse → explode → latest-per-key split.
     */
   def pagedConnectorRuns(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = ensureBuilt(spark, sfDir)
-    val pages = spark.read.format("graft.sources.PagedJsonSource").load(dir)
-    val runs = pages.select(
-        from_json(col("value"), pageSchema).as("page"),
-        regexp_extract(col("src_file"), "repo=([^/]+)", 1).as("repo"),
-        regexp_extract(col("src_file"), "extracted_at=([^/]+)", 1).as("extracted_at"))
-      .select(col("repo"), col("extracted_at"),
-        explode(col("page.workflow_runs")).as("run"))
-    val latest = EtlOps.latestPerKey(runs, Seq(col("run.id")), Seq(col("extracted_at")))
-    latest.select(
-        col("run.id").as("id"),
-        col("run.user.id").as("user_id"),
-        col("run.type").as("event_type"),
-        col("run.value").as("value"))
-      .orderBy(col("id"))
+    latestRuns(flatRuns(connectorPages(
+      spark.read.format("graft.sources.PagedJsonSource").load(dir))))
   }
+
+  /** A connector's raw page payloads (value, src_file) as a page frame: the
+    * JSON parsed under the pinned schema, and the snapshot parsed from the
+    * provenance path, since a transport yields bytes, not lake metadata.
+    */
+  private def connectorPages(payloads: DataFrame): DataFrame =
+    payloads.select(
+      regexp_extract(col("src_file"), "extracted_at=([^/]+)", 1).as("extracted_at"),
+      from_json(col("value"), pageSchema).getField("workflow_runs").as("workflow_runs"))
 
   // ---------------------------------------------------------------------
   // Cursor-chained raw zone (the live-pagination twin)
@@ -295,20 +302,8 @@ object RawZone {
     */
   def cursorConnectorRuns(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = ensureCursorZone(spark, sfDir)
-    val pages = spark.read.format("graft.sources.CursorPagedJsonSource").load(dir)
-    val runs = pages.select(
-        from_json(col("value"), pageSchema).as("page"),
-        regexp_extract(col("src_file"), "repo=([^/]+)", 1).as("repo"),
-        regexp_extract(col("src_file"), "extracted_at=([^/]+)", 1).as("extracted_at"))
-      .select(col("repo"), col("extracted_at"),
-        explode(col("page.workflow_runs")).as("run"))
-    val latest = EtlOps.latestPerKey(runs, Seq(col("run.id")), Seq(col("extracted_at")))
-    latest.select(
-        col("run.id").as("id"),
-        col("run.user.id").as("user_id"),
-        col("run.type").as("event_type"),
-        col("run.value").as("value"))
-      .orderBy(col("id"))
+    latestRuns(flatRuns(connectorPages(
+      spark.read.format("graft.sources.CursorPagedJsonSource").load(dir))))
   }
 
   /** CSV source on the scoreboard: a header CSV zone built once per SF from

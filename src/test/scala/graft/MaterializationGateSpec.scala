@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * fails here, and has to come with a reason and an updated bound. The same
   * scan keeps one per-group top-k: Spark's `row_number() <= k` window,
   * which Spark limits per partition before the shuffle, not a typed
-  * aggregator with a Kryo buffer.
+  * aggregator with a Kryo buffer. And the engine plans with Spark's own
+  * optimizer: no custom Catalyst rule rewrites its queries.
   */
 class MaterializationGateSpec extends AnyFunSuite {
 
@@ -66,5 +67,16 @@ class MaterializationGateSpec extends AnyFunSuite {
       case (f, l) if banned.exists(_.findFirstIn(l).nonEmpty) => s"$f: ${l.trim}"
     }
     assert(hits.isEmpty, s"per-group top-k is row_number() <= k; found:\n${hits.mkString("\n")}")
+  }
+
+  test("no custom optimizer rule: no Rule[LogicalPlan], extraOptimizations or " +
+      "injectOptimizerRule in src/main") {
+    val banned = Seq("""Rule\[LogicalPlan\]""", """\bextraOptimizations\b""",
+      """\binjectOptimizerRule\b""").map(_.r)
+    assert(codeLines.nonEmpty, "the scan must see the engine's sources")
+    val hits = codeLines.collect {
+      case (f, l) if banned.exists(_.findFirstIn(l).nonEmpty) => s"$f: ${l.trim}"
+    }
+    assert(hits.isEmpty, s"src/main installs a custom optimizer rule:\n${hits.mkString("\n")}")
   }
 }

@@ -5,9 +5,11 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.window.{WindowGroupLimitExec, Final => FinalLimit,
   Partial => PartialLimit}
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.Relational
+import graft.operators.{EtlOps, Relational}
+import graft.pipeline.{CompactedZone, RawZone}
 
 /** Physical-plan shape assertions for the multi-join queries — the
   * properties that matter at 100 TB, pinned so a refactor cannot silently
@@ -331,6 +333,25 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture with AdaptiveSparkPlan
     // the shuffle carries ≤ k rows per query per partition, never the
     // |Q|·|D| score matrix
     assertTopKLimitedBeforeShuffle("bm25_topk", physicalNoAutoBroadcast(query("bm25_topk")))
+  }
+
+  test("raw-zone pipelines: latest-per-key is limited per partition before its shuffle") {
+    // one row per run id per partition crosses the exchange, not every
+    // snapshot of it
+    Seq("raw_pipeline_runs", "paged_connector_runs", "cursor_connector_runs").foreach { q =>
+      assertTopKLimitedBeforeShuffle(q, query(q).queryExecution.executedPlan)
+    }
+  }
+
+  test("compacted-zone merge: latest-per-key over the bucket repartition " +
+      "plans exactly one shuffle") {
+    val rawDir = RawZone.ensureBuilt(spark, sf0001)
+    val updates = CompactedZone.snapshotUpdates(spark, rawDir,
+      "20240101-000000Z", "20240102-000000Z")
+    val plan = EtlOps.latestPerKey(updates.repartition(col("bucket")),
+      Seq(col("bucket"), col("id")), Seq(col("extracted_at"))).queryExecution.executedPlan
+    val shuffles = collect(plan) { case e: ShuffleExchangeExec => e }
+    assert(shuffles.size === 1, s"the merge must reuse the bucket partitioning:\n$plan")
   }
 
   test("bucketed join: neither fact side shuffles — the bucket layout is consumed") {
