@@ -868,7 +868,7 @@ object Bench {
       if (only.isEmpty) forkPrebuild() else (0.0, 0L)
     val units = buildUnits(selectedNames)
     var board = runForkBoard(units)
-    val sfName = sfDir.replaceAll("/+$", "").split('/').last
+    val sfName = Tables.sfName(sfDir)
     // The anchor the gate evaluates against, None when no gate applies:
     // noop boards are a different protocol; subset totals are partial by
     // construction (unless the rehearsal knob forces an anchor so the

@@ -162,6 +162,11 @@ object Tables {
     "documents" -> documentsSchema,
     "embeddings" -> embeddingsSchema)
 
+  /** An SF directory's name (its last path segment, trailing slashes
+    * ignored) — what every per-SF directory under `target/` is named by.
+    */
+  def sfName(sfDir: String): String = sfDir.replaceAll("/+$", "").split('/').last
+
   /** Read one test table with its pinned schema. */
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     configure(spark)

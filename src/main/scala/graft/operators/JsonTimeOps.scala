@@ -269,7 +269,7 @@ object JsonTimeOps {
     * 2-dp values, sums ≪ the 1e-7 ulp band at this magnitude).
     */
   def corruptRecordStats(spark: SparkSession, sfDir: String): DataFrame = {
-    val sfName = sfDir.replaceAll("/+$", "").split('/').last
+    val sfName = Tables.sfName(sfDir)
     val staged = s"target/jsonl/$sfName/orders"
     val line = to_json(struct(col("o_orderkey"), col("o_custkey"),
       col("o_orderstatus"), col("o_totalprice")))

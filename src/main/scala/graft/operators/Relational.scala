@@ -579,7 +579,7 @@ object Relational {
   }
 
   def bucketedJoinOrders(spark: SparkSession, sfDir: String): DataFrame = {
-    val sfName = sfDir.replaceAll("/+$", "").split('/').last.replaceAll("[^A-Za-z0-9]", "_")
+    val sfName = Tables.sfName(sfDir).replaceAll("[^A-Za-z0-9]", "_")
     val ordersTbl = s"graft_orders_bkt_$sfName"
     val liTbl = s"graft_lineitem_bkt_$sfName"
     resetBucketTable(spark, ordersTbl)

@@ -1266,7 +1266,7 @@ object TextOps {
     // build debris must not outlive the build. Clearing (not deleting at
     // exit) keeps the returned ledger frame readable: it lazily reads the
     // classification parquet until the caller's action runs.
-    val sfName = sfDir.replaceAll("/+$", "").split('/').last
+    val sfName = Tables.sfName(sfDir)
     val work = s"target/neardup-stream/$sfName"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(work))
     // one state relation per micro-batch, partitioned by kind: cls =

@@ -1209,9 +1209,7 @@ object VectorOps {
         slice(col("qv"), col("m") * lit(PqSubDim) + 1, lit(PqSubDim)).as("xv"))
 
   /** Nearest-codebook-entry assignment of every subvector: exact L2,
-    * lowest-code tie-break — the ONE encode rule, shared by [[pqCodes]]
-    * and the Lloyd refinement so the two can never disagree on
-    * assignment semantics. */
+    * lowest-code tie-break — the ONE encode rule of [[pqCodes]]. */
   private def pqAssign(sub: DataFrame, cb: DataFrame): DataFrame =
     sub.join(broadcast(cb.select(col("m"), col("code"), col("sv"))), Seq("m"))
       .withColumn("l2", aggregate(
@@ -1229,64 +1227,6 @@ object VectorOps {
     * 128-entry codebook against a single corpus scan. */
   private[graft] def pqCodes(spark: SparkSession, sfDir: String): DataFrame =
     pqAssign(pqSubvectors(spark, sfDir), pqCodebook(spark, sfDir))
-      .select(col("vec_id"), col("m"), col("code"))
-
-  /** Lloyd iteration count for the REFINED codebook ([[pqCodebookRefined]])
-    * — part of the refined artifacts' zone version. */
-  private[graft] val PqLloydIters = 2
-
-  /** Lloyd-REFINED PQ codebook (VERDICT r11 item 8): the seed codebook
-    * (K lowest-id subvectors) improved by [[PqLloydIters]] k-means steps in
-    * the INTEGER domain — assign every corpus subvector to its nearest
-    * entry (the shared [[pqAssign]] rule), replace each entry with its
-    * members' per-dimension mean ROUNDED to the nearest integer
-    * (floor(mean + 0.5)). Quantizing the mean keeps the whole chain
-    * deterministic across partitionings: member components are
-    * integer-valued doubles, so their sum is EXACT in IEEE double
-    * regardless of aggregation order (< 2^53), the mean is an exact
-    * rational rounded once, and the next assignment pass sees
-    * bit-identical centroids on every run — the property the seed
-    * codebook's DuckDB oracle rests on, preserved through refinement.
-    * An entry that loses all members keeps its previous value (K stays
-    * constant, matching the version geometry).
-    *
-    * OUTCOME (the item-8 experiment, run to completion): recall@5 at
-    * constant shortlist measured WORSE than the seed book — 0.960 seed vs
-    * 0.880 refined at sf0.01 — so NO production query adopted it; the
-    * negative result is pinned in AnnRecallSpec (which re-measures both
-    * books every run and fails if the ordering flips, prompting
-    * re-evaluation) and recorded in BASELINE.md r12. The build and its
-    * zone artifacts stay: they are the measurement apparatus.
-    */
-  private[graft] def pqCodebookRefined(spark: SparkSession, sfDir: String): DataFrame = {
-    val sub = pqSubvectors(spark, sfDir).persist() // every Lloyd pass reads it
-    def step(cb: DataFrame): DataFrame = {
-      val means = pqAssign(sub, cb)
-        .select(col("m"), col("code"), posexplode(col("xv")).as(Seq("pos", "x")))
-        .groupBy(col("m"), col("code"), col("pos"))
-        .agg(floor(avg(col("x")) + lit(0.5)).as("mx"))
-        .groupBy(col("m"), col("code"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("mx")))),
-          s => s.getField("mx")).as("sv_new"))
-      // keep the previous entry when a code loses all members
-      cb.select(col("m"), col("code"), col("sv"))
-        .join(means, Seq("m", "code"), "left")
-        .select(col("m"), col("code"),
-          coalesce(col("sv_new"), col("sv")).as("sv"))
-        .withColumn("cnorm",
-          aggregate(col("sv"), lit(0.0), (a, x) => a + x * x))
-    }
-    val result = Iterator.iterate(pqCodebook(spark, sfDir))(step)
-      .drop(PqLloydIters).next()
-    graft.operators.TextOps.unpersistAfterAction(spark, sub)
-    result
-  }
-
-  /** PQ ENCODE under the refined book — the relation
-    * [[graft.pipeline.AnnZone.ensurePqCodesRefined]] persists. */
-  private[graft] def pqCodesRefined(spark: SparkSession, sfDir: String): DataFrame =
-    pqAssign(pqSubvectors(spark, sfDir),
-        graft.pipeline.AnnZone.ensurePqCodebookRefined(spark, sfDir))
       .select(col("vec_id"), col("m"), col("code"))
 
   /** PQ-compressed ANN — the memory-resident scale path of the similarity
@@ -1372,18 +1312,10 @@ object VectorOps {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  def annPqTopk(spark: SparkSession, sfDir: String): DataFrame =
-    annPqTopkWith(spark, sfDir,
-      graft.pipeline.AnnZone.ensurePqCodes(spark, sfDir),
-      graft.pipeline.AnnZone.ensurePqCodebook(spark, sfDir))
-
-  /** The flat ADC scan under an ARBITRARY (codes, codebook) pair — lets
-    * AnnRecallSpec measure the Lloyd-refined book against the seed book at
-    * constant shortlist (r11 item 8's experiment protocol). */
-  private[graft] def annPqTopkWith(spark: SparkSession, sfDir: String,
-      codes: DataFrame, cb: DataFrame): DataFrame = {
+  def annPqTopk(spark: SparkSession, sfDir: String): DataFrame = {
+    val codes = graft.pipeline.AnnZone.ensurePqCodes(spark, sfDir)
     val q = pqQueryFrame(spark, sfDir)
-    val adc = pqAdcTables(q, cb)
+    val adc = pqAdcTables(q, graft.pipeline.AnnZone.ensurePqCodebook(spark, sfDir))
     val approx = pqAdcScore(
       codes.join(broadcast(adc), Seq("m", "code"))
         .filter(col("vec_id") =!= col("query_id")))
@@ -1500,11 +1432,10 @@ object VectorOps {
     * strictly fewer than the flat scan) are pinned in AnnRecallSpec.
     */
   def annIvfPqTopk(spark: SparkSession, sfDir: String): DataFrame = {
-    // SEED codebook/codes, deliberately: the r11-item-8 Lloyd refinement
-    // experiment MEASURED WORSE (recall@5 at shortlist 100 on sf0.01:
-    // seed 0.960 vs refined 0.880 — integer-rounded means over ~31
-    // members/entry pull entries off the data manifold; the negative
-    // result is pinned in AnnRecallSpec and recorded in BASELINE.md r12)
+    // SEED codebook/codes, deliberately: a Lloyd-refined book MEASURED
+    // WORSE (recall@5 at shortlist 100 on sf0.01: seed 0.960 vs refined
+    // 0.880 — integer-rounded means over ~31 members/entry pull entries off
+    // the data manifold; recorded in BASELINE.md r12)
     val codes = graft.pipeline.AnnZone.ensurePqCodes(spark, sfDir)
     val cb = graft.pipeline.AnnZone.ensurePqCodebook(spark, sfDir)
     val q = pqQueryFrame(spark, sfDir)

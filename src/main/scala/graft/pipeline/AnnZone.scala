@@ -21,10 +21,8 @@ import graft.operators.VectorOps
   */
 object AnnZone {
 
-  def zoneDir(sfDir: String): String = {
-    val sfName = sfDir.replaceAll("/+$", "").split('/').last
-    s"target/annzone/$sfName"
-  }
+  def zoneDir(sfDir: String): String =
+    s"target/annzone/${graft.Tables.sfName(sfDir)}"
 
   private[pipeline] def src(sfDir: String): java.io.File =
     new java.io.File(sfDir, "embeddings.parquet")
@@ -164,29 +162,6 @@ object AnnZone {
     ArtifactZone.ensure(spark, s"${zoneDir(sfDir)}/pq_codes", src(sfDir),
       PqVersion + "+files-v2") { dir =>
       ArtifactZone.write(VectorOps.pqCodes(spark, sfDir)
-        .repartition(spark.sparkContext.defaultParallelism), dir)
-    }
-
-  /** Lloyd-REFINED PQ artifact pair (VERDICT r11 item 8): same geometry,
-    * integer-quantized k-means refinement ([[VectorOps.pqCodebookRefined]]).
-    * Separate dirs + iteration count in the version so seed-book and
-    * refined-book artifacts can never alias — codes are only meaningful
-    * under the book that encoded them. The refined pair backs the IVFADC
-    * query; the seed pair keeps backing `ann_pq_topk`'s exact oracle.
-    */
-  private val PqRefinedVersion =
-    s"$PqVersion+lloyd${VectorOps.PqLloydIters}-intmean-v1"
-
-  def ensurePqCodebookRefined(spark: SparkSession, sfDir: String): DataFrame =
-    ArtifactZone.ensure(spark, s"${zoneDir(sfDir)}/pq_codebook_refined",
-      src(sfDir), PqRefinedVersion) { dir =>
-      ArtifactZone.write(VectorOps.pqCodebookRefined(spark, sfDir), dir)
-    }
-
-  def ensurePqCodesRefined(spark: SparkSession, sfDir: String): DataFrame =
-    ArtifactZone.ensure(spark, s"${zoneDir(sfDir)}/pq_codes_refined",
-      src(sfDir), PqRefinedVersion + "+files-v2") { dir =>
-      ArtifactZone.write(VectorOps.pqCodesRefined(spark, sfDir)
         .repartition(spark.sparkContext.defaultParallelism), dir)
     }
 

@@ -43,14 +43,14 @@ import graft.operators.EtlOps
   * manifest instead. A type-WIDENING rewrite commits at ZONE granularity
   * (one directory swap) because its buckets are not mutually
   * schema-compatible mid-rewrite (see [[mergeUpdates]]). `_GRAFT_MERGED`
-  * records which snapshots are already folded in (temp+rename, same
-  * torn-write defense as the cursor manifest), and a source fingerprint
-  * invalidates the whole zone when the fixture parquet is regenerated
-  * (ADVICE r3 rule, same as [[RawZone]]). `_GRAFT_SCHEMA` is written
-  * before the per-bucket swap (a superset is safe: columns a file lacks
-  * read as null) and, for the widening swap, inside the staged dir so one
-  * rename commits both; a zone without it is stale and rebuilt — there is
-  * no inferring read path.
+  * records which snapshots are already folded in (written to a temp file
+  * and renamed into place, so a crash never leaves a torn list), and a
+  * source fingerprint invalidates the whole zone when the fixture parquet
+  * is regenerated (ADVICE r3 rule, same as [[RawZone]]). `_GRAFT_SCHEMA`
+  * is written before the per-bucket swap (a superset is safe: columns a
+  * file lacks read as null) and, for the widening swap, inside the staged
+  * dir so one rename commits both; a zone without it is stale and
+  * rebuilt — there is no inferring read path.
   *
   * Equivalence contract: after every snapshot is merged, the compacted
   * zone's projection is row-identical to the full recompute
@@ -62,10 +62,8 @@ object CompactedZone {
 
   val NumBuckets = 16
 
-  def compactedDir(sfDir: String): String = {
-    val sfName = sfDir.replaceAll("/+$", "").split('/').last
-    s"target/compactedzone/$sfName"
-  }
+  def compactedDir(sfDir: String): String =
+    s"target/compactedzone/${graft.Tables.sfName(sfDir)}"
 
   private val StateFile = "_GRAFT_MERGED"
 

@@ -52,10 +52,8 @@ import graft.operators.TextOps
   */
 object DedupZone {
 
-  def zoneDir(sfDir: String): String = {
-    val sfName = sfDir.replaceAll("/+$", "").split('/').last
-    s"target/dedupzone/$sfName"
-  }
+  def zoneDir(sfDir: String): String =
+    s"target/dedupzone/${Tables.sfName(sfDir)}"
 
   private[pipeline] def src(sfDir: String): java.io.File =
     new java.io.File(sfDir, "documents.parquet")

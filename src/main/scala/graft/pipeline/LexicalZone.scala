@@ -25,10 +25,8 @@ import graft.operators.TextOps
   */
 object LexicalZone {
 
-  def zoneDir(sfDir: String): String = {
-    val sfName = sfDir.replaceAll("/+$", "").split('/').last
-    s"target/lexicalzone/$sfName"
-  }
+  def zoneDir(sfDir: String): String =
+    s"target/lexicalzone/${graft.Tables.sfName(sfDir)}"
 
   private[pipeline] def src(sfDir: String): java.io.File =
     new java.io.File(sfDir, "documents.parquet")

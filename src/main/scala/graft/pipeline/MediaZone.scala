@@ -24,10 +24,8 @@ import graft.operators.MultimodalOps
   */
 object MediaZone {
 
-  def zoneDir(sfDir: String): String = {
-    val sfName = sfDir.replaceAll("/+$", "").split('/').last
-    s"target/mediazone/$sfName"
-  }
+  def zoneDir(sfDir: String): String =
+    s"target/mediazone/${graft.Tables.sfName(sfDir)}"
 
   private[pipeline] def src(sfDir: String): java.io.File =
     new java.io.File(sfDir, "documents.parquet")

@@ -55,8 +55,6 @@ object Prebuild {
     AnnZone.ensureCorpusLshBuckets(spark, sfDir)
     AnnZone.ensurePqCodebook(spark, sfDir)
     AnnZone.ensurePqCodes(spark, sfDir)
-    AnnZone.ensurePqCodebookRefined(spark, sfDir)
-    AnnZone.ensurePqCodesRefined(spark, sfDir)
     AnnZone.ensureLshBuckets(spark, sfDir)
     // media feature store
     MediaZone.ensureImageFeatures(spark, sfDir)

@@ -44,10 +44,8 @@ object RawZone {
     StructField("extracted_at", StringType)))
 
   /** Deterministic raw-zone location per SF (rebuilt idempotently). */
-  def rawZoneDir(sfDir: String): String = {
-    val sfName = sfDir.replaceAll("/+$", "").split('/').last
-    s"target/rawzone/$sfName"
-  }
+  def rawZoneDir(sfDir: String): String =
+    s"target/rawzone/${Tables.sfName(sfDir)}"
 
   /** Fingerprint of a source parquet path (file or directory of files):
     * sizes + mtimes. Cached derived zones are keyed on this, so regenerated
@@ -200,10 +198,8 @@ object RawZone {
   // Cursor-chained raw zone (the live-pagination twin)
   // ---------------------------------------------------------------------
 
-  def cursorZoneDir(sfDir: String): String = {
-    val sfName = sfDir.replaceAll("/+$", "").split('/').last
-    s"target/cursorzone/$sfName"
-  }
+  def cursorZoneDir(sfDir: String): String =
+    s"target/cursorzone/${Tables.sfName(sfDir)}"
 
   /** Opaque page token: deterministic (chain, page) → name the connector
     * cannot derive — following the Link headers is the ONLY way to
@@ -320,10 +316,8 @@ object RawZone {
     StructField("o_totalprice", DoubleType),
     StructField("o_orderpriority", StringType)))
 
-  def csvZoneDir(sfDir: String): String = {
-    val sfName = sfDir.replaceAll("/+$", "").split('/').last
-    s"target/csvzone/$sfName"
-  }
+  def csvZoneDir(sfDir: String): String =
+    s"target/csvzone/${Tables.sfName(sfDir)}"
 
   def ensureCsvZone(spark: SparkSession, sfDir: String): String = {
     val dir = csvZoneDir(sfDir)
@@ -361,10 +355,8 @@ object RawZone {
     * aggregate on the parquet table, proving the sink+source round-trip
     * value-exact end to end.
     */
-  def orcZoneDir(sfDir: String): String = {
-    val sfName = sfDir.replaceAll("/+$", "").split('/').last
-    s"target/orczone/$sfName"
-  }
+  def orcZoneDir(sfDir: String): String =
+    s"target/orczone/${Tables.sfName(sfDir)}"
 
   def ensureOrcZone(spark: SparkSession, sfDir: String): String = {
     val dir = orcZoneDir(sfDir)

@@ -3,20 +3,13 @@ package graft.sources
 import scala.collection.mutable
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSource V2 connector for CURSOR-FOLLOWING pagination — the executable
   * twin of the reference transport's runtime `Link: rel="next"` walk
-  * (`/root/reference/main.py:90-93`, `resp.links["next"]`), which the
-  * listing-based [[PagedJsonSource]] cannot model: there the page space is
-  * enumerable up front; here each page's successor is KNOWN ONLY from the
-  * page itself, exactly like a live paginated HTTP API.
+  * (`main.py:90-93`, `resp.links["next"]`), which the listing-based
+  * [[PagedJsonSource]] cannot model: there the page space is enumerable up
+  * front; here each page's successor is KNOWN ONLY from the page itself,
+  * exactly like a live paginated HTTP API.
   *
   * Page archive format is an HTTP response capture (status line + headers +
   * blank line + body — the layout crawl archives store), so the "transport"
@@ -27,52 +20,37 @@ import org.apache.spark.unsafe.types.UTF8String
   * page's identity does not exist until the current one is fetched (the
   * reference pays this cost too, one GET at a time). The split that keeps a
   * cluster busy anyway:
-  *   - chain DISCOVERY (driver, `planInputPartitions`): per chain directory,
+  *   - chain DISCOVERY (driver, [[walkChains]]): per chain directory,
   *     follow `Link` headers reading HEADERS ONLY — O(pages) tiny reads,
   *     done concurrently across chains (one endpoint ≙ one chain; a lake
   *     has many);
   *   - page BODIES: one InputPartition per discovered page, fetched in
-  *     parallel by executors with the shared bounded-backoff [[RetryPolicy]].
+  *     parallel by executors with the shared bounded-backoff [[RetryPolicy]]
+  *     through the same reader as the listing source.
   * Cycle/missing-start chains fail loudly at plan time — a silent partial
-  * chain would be dropped data.
+  * chain would be dropped data. Like a live API, the walk writes nothing
+  * back: every plan re-walks, so a re-read always sees the current chain.
   *
   * Usage: `spark.read.format("graft.sources.CursorPagedJsonSource")
   * .load(dir)` where `dir/<chain>/start.json` heads each chain. Output
   * schema matches [[PagedJsonSource]]: (value STRING, src_file STRING).
   */
-class CursorPagedJsonSource extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    PagedJsonSource.schema
+class CursorPagedJsonSource extends PagedJsonSource {
+  override protected def tableKind: String = "cursor_paged_json"
 
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new CursorPagedJsonTable(properties.get("path"))
+  override protected def planPages(fs: FileSystem, root: HPath): Seq[PagePartition] =
+    CursorPagedJsonSource.walkChains(fs, root)
+      .map(f => PagePartition(f.toString, httpCapture = true))
 }
 
 object CursorPagedJsonSource {
   val StartPage = "start.json"
-  val ManifestFile = "_manifest"
   private val LinkHeader = """Link: <([^>]+)>; rel="next"""".r
-
-  /** Plan-time header reads performed by [[nextLink]], cumulative for the
-    * JVM — the observable that lets `SourceAndSkewSpec` prove a manifest-hit
-    * re-read plans with ZERO chain re-walking.
-    */
-  val headerReads = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** A cursor token names a sibling page file and nothing else — a token
     * containing a path separator or `..` would resolve OUTSIDE the chain
     * directory and read unrelated files into the dataset (ADVICE r7:
-    * path traversal via archive content). Leading-underscore names are
-    * RESERVED (ADVICE r8: a hostile chain whose cursor token is `_manifest`
-    * would be walked as a page and then OVERWRITTEN by writeManifest —
-    * destroying archive data; `_` is already the discovery convention for
-    * metadata, mirroring Spark's own `_spark_metadata`/`_SUCCESS`), so both
-    * walkChain and readManifest fail loudly on one. Leading-`#` names are
-    * reserved too (ADVICE r9): `#` opens a manifest HEADER line, so a page
-    * named `#x` would make its own manifest permanently unparseable — every
-    * read would silently re-walk instead of failing; rejecting the token at
-    * walk time keeps the connector fail-loud.
+    * path traversal via archive content).
     */
   private def validateToken(token: String, chainDir: HPath): String = {
     if (token.isEmpty || token == "." || token == ".." ||
@@ -81,58 +59,37 @@ object CursorPagedJsonSource {
         s"CursorPagedJsonSource: cursor token '$token' at $chainDir is not a " +
           "plain sibling file name — refusing a path that could escape the " +
           "chain directory.")
-    if (token.startsWith("_") || token.startsWith("#"))
-      throw new IllegalStateException(
-        s"CursorPagedJsonSource: cursor token '$token' at $chainDir names a " +
-          "reserved metadata file (leading '_' or '#') — refusing a chain " +
-          "that could alias or corrupt the manifest cache.")
     token
   }
 
-  /** Reads the response-capture HEADER block of one page (status line +
-    * headers, up to the blank separator) and returns the raw header lines
-    * plus the next-page token, if any. Reads only the header bytes — body
+  /** Next-page token of one page: reads the response-capture HEADER block
+    * (status line + headers, up to the blank separator) and stops — body
     * size is irrelevant to the walk.
     */
-  private def readHeaderBlock(fs: FileSystem, file: HPath): (Seq[String], Option[String]) = {
-    headerReads.incrementAndGet()
+  private def nextLink(fs: FileSystem, file: HPath): Option[String] = {
     val in = new java.io.BufferedReader(
       new java.io.InputStreamReader(fs.open(file), "UTF-8"))
     try {
-      val hdr = mutable.ArrayBuffer[String]()
       var link: Option[String] = None
       var line = in.readLine()
       require(line != null && line.startsWith("HTTP/"),
         s"$file is not a response capture (missing status line)")
-      hdr += line
       line = in.readLine()
       while (line != null && line.nonEmpty) {
-        hdr += line
         LinkHeader.findFirstMatchIn(line).foreach(m => link = Some(m.group(1)))
         line = in.readLine()
       }
-      (hdr.toSeq, link)
+      link
     } finally in.close()
   }
 
-  /** Next-page token of one page (header-block read). */
-  def nextLink(fs: FileSystem, file: HPath): Option[String] =
-    readHeaderBlock(fs, file)._2
-
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
   /** Follows one chain from `start.json`, failing loudly on a missing head,
     * a dangling link, a traversal-shaped token, or a cycle. Returns page
-    * files in fetch order plus a CONTENT fingerprint of the head's header
-    * block — the exact bytes the walk consumed, hashed for manifest
-    * freshness at no extra I/O (ADVICE r9).
+    * files in fetch order.
     */
-  def walkChainWithFingerprint(fs: FileSystem, chainDir: HPath): (Seq[HPath], String) = {
+  private def walkChain(fs: FileSystem, chainDir: HPath): Seq[HPath] = {
     val pages = mutable.ArrayBuffer[HPath]()
     val seen = mutable.HashSet[String]()
-    var headDigest = ""
     var cur: Option[String] = Some(StartPage)
     while (cur.isDefined) {
       val token = validateToken(cur.get, chainDir)
@@ -146,183 +103,28 @@ object CursorPagedJsonSource {
           s"CursorPagedJsonSource: dangling cursor $chainDir/$token — " +
             "a linked page is missing; refusing to emit a silently " +
             "truncated chain.")
-      val (hdr, next) = readHeaderBlock(fs, file)
       pages += file
-      if (pages.size == 1) headDigest = md5hex(hdr.mkString("\n"))
-      cur = next
+      cur = nextLink(fs, file)
     }
-    (pages.toSeq, headDigest)
+    pages.toSeq
   }
-
-  def walkChain(fs: FileSystem, chainDir: HPath): Seq[HPath] =
-    walkChainWithFingerprint(fs, chainDir)._1
-
-  /** Manifest cache of a chain's walked page order (VERDICT r7 item 7): the
-    * cursor walk is O(pages) tiny header reads on the driver at EVERY plan —
-    * inherent to cursors on first contact, pure waste on re-reads of an
-    * immutable archive. After a successful walk the fetch order is persisted
-    * as `_manifest` (a `#pages=N` count header, then one page name per
-    * line); a later plan that finds it reads ONE small file per chain
-    * instead of re-walking.
-    *
-    * Torn-state defenses (review r8): the write goes to a temp name and
-    * RENAMES into place (atomic on HDFS/posix — a crashed writer leaves a
-    * `_manifest.tmp*`, never a readable prefix), and the reader additionally
-    * requires the count header to match the name list and the names to be
-    * unique — a short/duplicated manifest is treated as ABSENT (re-walk and
-    * rewrite), so it can neither silently truncate the chain nor double-emit
-    * a page (the walk's own cycle guard mirrored onto the cache). A stale
-    * manifest naming a missing page still fails loudly at read time (the
-    * executor's open throws through [[RetryPolicy]]).
-    *
-    * Freshness (ADVICE r8, hardened r10): the manifest records THREE head
-    * fingerprints — `#head=<byte length>`, `#headmtime=<modification ms>`,
-    * and `#headmd5=<md5 of the header block the walk consumed>`. A reader
-    * checks them cheapest-first:
-    *   1. length mismatch ⇒ stale, re-walk (one metadata RPC);
-    *   2. length + mtime match ⇒ fresh, serve the cache (the common
-    *      immutable-archive case — the zero-header-walk re-plan property
-    *      stays pinned at ZERO extra reads);
-    *   3. length matches but mtime doesn't ⇒ the r9-flagged blind spot (a
-    *      same-length head rewrite with all old pages intact): read the
-    *      LIVE head's header block — ONE small read, not a re-walk — and
-    *      compare its md5 to `#headmd5`. Identical bytes ⇒ still fresh
-    *      (manifest is rewritten to refresh the mtime and restore path 2);
-    *      different bytes ⇒ stale, re-walk.
-    * mtime is used only as a NEGATIVE signal (a mismatch escalates to the
-    * content check, never invalidates by itself), so file-source mtime
-    * unreliability costs at most one header read, never correctness. The
-    * residual slip requires a rewrite with identical length AND identical
-    * mtime AND different bytes — below filesystem timestamp granularity;
-    * writers doing in-place surgery should still delete the manifest (same
-    * rule as Spark's own `_spark_metadata`). Leading `_` keeps it out of
-    * chain discovery and Spark file listings by convention.
-    */
-  def readManifest(fs: FileSystem, chainDir: HPath): Option[Seq[HPath]] =
-    try {
-      val mf = new HPath(chainDir, ManifestFile)
-      if (!fs.exists(mf)) None
-      else {
-        val in = new java.io.BufferedReader(
-          new java.io.InputStreamReader(fs.open(mf), "UTF-8"))
-        val parsed =
-          try {
-            val lines = Iterator.continually(in.readLine()).takeWhile(_ != null)
-              .map(_.trim).filter(_.nonEmpty).toSeq
-            val (headers, names) = lines.span(_.startsWith("#"))
-            def header(key: String): Option[String] = headers
-              .find(_.startsWith(s"#$key="))
-              .map(_.stripPrefix(s"#$key="))
-            (header("pages").flatMap(_.toLongOption),
-              header("head").flatMap(_.toLongOption),
-              header("headmtime").flatMap(_.toLongOption),
-              header("headmd5"), names)
-          } finally in.close()
-        val (declared, headLen, headMtime, headMd5, names) = parsed
-        val headStatus =
-          try Some(fs.getFileStatus(new HPath(chainDir, StartPage)))
-          catch { case _: java.io.IOException => None }
-        val structurallyIntact = declared.contains(names.size.toLong) &&
-          names.nonEmpty && names.distinct.size == names.size &&
-          headLen.isDefined && headMd5.isDefined &&
-          headStatus.exists(_.getLen == headLen.get)
-        val fresh = structurallyIntact && {
-          if (headMtime.exists(m => headStatus.exists(_.getModificationTime == m)))
-            true // fast path: nothing about the head changed
-          else {
-            // same length, different (or unrecorded) mtime: verify CONTENT
-            val live = md5hex(readHeaderBlock(
-              fs, new HPath(chainDir, StartPage))._1.mkString("\n"))
-            val same = live == headMd5.get
-            // a true match re-caches with the current mtime so the NEXT
-            // plan takes the metadata-only fast path again
-            if (same) writeManifest(fs, chainDir,
-              names.map(n => new HPath(chainDir, n)), live)
-            same
-          }
-        }
-        if (!fresh) None // short/duplicated/headerless/stale ⇒ re-walk
-        else Some(names.map(n => new HPath(chainDir, validateToken(n, chainDir))))
-      }
-    } catch {
-      // an unreadable cache (torn write, checksum mismatch) is the same as
-      // no cache: fall back to the walk, which rewrites it
-      case _: java.io.IOException => None
-    }
-
-  /** Best-effort atomic write (read-only archives simply keep paying the
-    * walk; a failed rename leaves at most a temp file, never a torn cache).
-    */
-  def writeManifest(fs: FileSystem, chainDir: HPath, pages: Seq[HPath],
-      headDigest: String): Unit =
-    try {
-      // fingerprint the head AFTER the walk read it: if a writer replaced
-      // start.json mid-walk, the recorded status disagrees with the bytes the
-      // walk saw at worst once — the next reader re-checks and heals the cache
-      val st = fs.getFileStatus(new HPath(chainDir, StartPage))
-      val tmp = new HPath(chainDir,
-        ManifestFile + ".tmp-" + java.util.UUID.randomUUID().toString)
-      val out = fs.create(tmp, true)
-      try out.write(
-        (s"#pages=${pages.size}\n#head=${st.getLen}\n" +
-          s"#headmtime=${st.getModificationTime}\n#headmd5=$headDigest\n" +
-          pages.map(_.getName).mkString("", "\n", "\n"))
-          .getBytes("UTF-8"))
-      finally out.close()
-      val dst = new HPath(chainDir, ManifestFile)
-      // HDFS rename refuses an existing destination (posix replaces):
-      // delete-then-rename repairs a corrupt manifest there too — a reader
-      // landing in the gap just sees "no manifest" and walks, which is safe
-      val renamed = fs.rename(tmp, dst) || {
-        fs.delete(dst, false); fs.rename(tmp, dst)
-      }
-      if (!renamed) fs.delete(tmp, false)
-    } catch { case _: java.io.IOException => () }
-
-  /** One chain's page list: manifest hit, or walk-then-cache. */
-  def chainPages(fs: FileSystem, chainDir: HPath): Seq[HPath] =
-    readManifest(fs, chainDir).getOrElse {
-      val (pages, headDigest) = walkChainWithFingerprint(fs, chainDir)
-      writeManifest(fs, chainDir, pages, headDigest)
-      pages
-    }
-}
-
-class CursorPagedJsonTable(path: String) extends Table with SupportsRead {
-  require(path != null && path.nonEmpty,
-    "CursorPagedJsonSource requires .load(<path>)")
-  override def name(): String = s"cursor_paged_json:`$path`"
-  override def schema(): StructType = PagedJsonSource.schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder { override def build(): Scan = new CursorPagedJsonScan(path) }
-}
-
-class CursorPagedJsonScan(path: String) extends Scan with Batch {
-  override def readSchema(): StructType = PagedJsonSource.schema
-  override def toBatch: Batch = this
 
   /** Chain dirs = directories containing a `start.json` head (any depth of
     * partition-style nesting above them); each is walked by link-following —
     * the page list is NOT obtainable by listing, the tokens are opaque.
     */
-  override def planInputPartitions(): Array[InputPartition] = {
-    val conf = org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration
-    val root = new HPath(path)
-    val fs = root.getFileSystem(conf)
+  private def walkChains(fs: FileSystem, root: HPath): Seq[HPath] = {
     val chains = mutable.ArrayBuffer[HPath]()
     def findChains(dir: HPath): Unit = {
       val entries = fs.listStatus(dir)
-      if (entries.exists(e => e.isFile &&
-          e.getPath.getName == CursorPagedJsonSource.StartPage)) chains += dir
+      if (entries.exists(e => e.isFile && e.getPath.getName == StartPage)) chains += dir
       entries.filter(_.isDirectory)
         .filterNot(e => e.getPath.getName.startsWith("_"))
         .foreach(e => findChains(e.getPath))
     }
     findChains(root)
     require(chains.nonEmpty,
-      s"CursorPagedJsonSource: no chain heads (${CursorPagedJsonSource.StartPage}) under $path")
+      s"CursorPagedJsonSource: no chain heads ($StartPage) under $root")
     // Each chain's walk is inherently sequential (that is what a cursor IS),
     // but chains are independent — walk them CONCURRENTLY so discovery
     // latency is max(chain length), not sum. Bounded pool: header reads are
@@ -334,7 +136,7 @@ class CursorPagedJsonScan(path: String) extends Scan with Batch {
     try {
       val futures = sorted.map(c => pool.submit(
         new java.util.concurrent.Callable[Seq[HPath]] {
-          override def call(): Seq[HPath] = CursorPagedJsonSource.chainPages(fs, c)
+          override def call(): Seq[HPath] = walkChain(fs, c)
         }))
       futures.flatMap { f =>
         try f.get()
@@ -347,52 +149,6 @@ class CursorPagedJsonScan(path: String) extends Scan with Batch {
             throw Option(e.getCause).getOrElse(e)
         }
       }
-        .map(f => CursorPagePartition(f.toString): InputPartition)
-        .toArray
     } finally pool.shutdown()
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new CursorPageReaderFactory(SerializableHadoopConf.fromSession())
-}
-
-case class CursorPagePartition(file: String) extends InputPartition
-
-class CursorPageReaderFactory(confHolder: SerializableHadoopConf)
-    extends PartitionReaderFactory {
-  // the DRIVER's Hadoop conf, serialized with the factory (ADVICE r7) —
-  // one instance per executor, so the conf still deserializes once per
-  // factory, not per partition
-  private def conf = confHolder.value
-
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val file = partition.asInstanceOf[CursorPagePartition].file
-    new PartitionReader[InternalRow] {
-      // one atomic "fetch" per page, retried whole (same contract as
-      // PageFileReaderFactory); the header block is skipped — it already
-      // served its purpose during the plan-time walk
-      private lazy val lines: Iterator[String] = {
-        val p = new HPath(file)
-        RetryPolicy.withRetry() { () =>
-          val in = new java.io.BufferedReader(
-            new java.io.InputStreamReader(p.getFileSystem(conf).open(p), "UTF-8"))
-          try {
-            var line = in.readLine() // status line
-            line = in.readLine()
-            while (line != null && line.nonEmpty) line = in.readLine() // headers
-            val buf = scala.collection.mutable.ArrayBuffer[String]()
-            line = in.readLine()
-            while (line != null) { buf += line; line = in.readLine() }
-            buf.iterator
-          } finally in.close()
-        }
-      }
-      private var line: String = _
-      override def next(): Boolean =
-        if (lines.hasNext) { line = lines.next(); true } else false
-      override def get(): InternalRow =
-        InternalRow(UTF8String.fromString(line), UTF8String.fromString(file))
-      override def close(): Unit = ()
-    }
   }
 }

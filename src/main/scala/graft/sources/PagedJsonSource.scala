@@ -1,8 +1,7 @@
 package graft.sources
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -10,6 +9,7 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** DataSource V2 connector for the reference's paginated-source semantics
   * (SURVEY §2.1 ops #1-3, `main.py:85-115`): the transport yields raw PAGES;
@@ -23,45 +23,21 @@ import org.apache.spark.unsafe.types.UTF8String
   * prior extract archived; a live-HTTP variant would swap the reader's
   * byte source and keep every interface the same.
   *
+  * One connector, two ways to find pages: this provider LISTS the page
+  * files; [[CursorPagedJsonSource]] overrides only [[planPages]] to walk
+  * `Link: rel="next"` headers. Both share the table, scan, partition and
+  * reader below, and planning only reads the archive, never writes to it.
+  *
   * Usage: `spark.read.format("graft.sources.PagedJsonSource").load(dir)`
   * → rows (value: STRING page payload, src_file: STRING provenance).
   */
 class PagedJsonSource extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    PagedJsonSource.schema
+  protected def tableKind: String = "paged_json"
 
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
-    new PagedJsonTable(properties.get("path"))
-}
-
-object PagedJsonSource {
-  val schema: StructType = StructType(Seq(
-    StructField("value", StringType),
-    StructField("src_file", StringType)))
-}
-
-class PagedJsonTable(path: String) extends Table with SupportsRead {
-  require(path != null && path.nonEmpty, "PagedJsonSource requires .load(<path>)")
-  override def name(): String = s"paged_json:`$path`"
-  override def schema(): StructType = PagedJsonSource.schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder { override def build(): Scan = new PagedJsonScan(path) }
-}
-
-class PagedJsonScan(path: String) extends Scan with Batch {
-  override def readSchema(): StructType = PagedJsonSource.schema
-  override def toBatch: Batch = this
-
-  /** One partition per page file — the pagination cursor space IS the
-    * parallelism dimension.
+  /** The pages under `root`, one partition each, in read order: here every
+    * file whose name does not start with `.` or `_` (checksums, markers).
     */
-  override def planInputPartitions(): Array[InputPartition] = {
-    val conf = org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration
-    val root = new HPath(path)
-    val fs = root.getFileSystem(conf)
+  protected def planPages(fs: FileSystem, root: HPath): Seq[PagePartition] = {
     val it = fs.listFiles(root, /* recursive = */ true)
     val files = scala.collection.mutable.ArrayBuffer[String]()
     while (it.hasNext) {
@@ -70,14 +46,63 @@ class PagedJsonScan(path: String) extends Scan with Batch {
       if (f.isFile && !n.startsWith(".") && !n.startsWith("_"))
         files += f.getPath.toString
     }
-    files.sorted.map(PageFilePartition(_): InputPartition).toArray
+    files.sorted.map(PagePartition(_, httpCapture = false)).toSeq
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new PageFileReaderFactory(SerializableHadoopConf.fromSession())
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    PagedJsonSource.schema
+
+  override def getTable(schema: StructType, partitioning: Array[Transform],
+      properties: java.util.Map[String, String]): Table =
+    new PagedJsonTable(tableKind, properties.get("path"), planPages)
 }
 
-case class PageFilePartition(file: String) extends InputPartition
+object PagedJsonSource {
+  val schema: StructType = StructType(Seq(
+    StructField("value", StringType),
+    StructField("src_file", StringType)))
+}
+
+/** One page to fetch. An `httpCapture` page opens with an HTTP status line
+  * and header block, which the reader skips — decided by the provider that
+  * planned it, never by a user option.
+  */
+case class PagePartition(file: String, httpCapture: Boolean) extends InputPartition
+
+class PagedJsonTable(kind: String, path: String,
+    planPages: (FileSystem, HPath) => Seq[PagePartition])
+    extends Table with SupportsRead {
+  require(path != null && path.nonEmpty, s"$kind source requires .load(<path>)")
+  override def name(): String = s"$kind:`$path`"
+  override def schema(): StructType = PagedJsonSource.schema
+  override def capabilities(): java.util.Set[TableCapability] =
+    java.util.EnumSet.of(TableCapability.BATCH_READ)
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    new ScanBuilder { override def build(): Scan = new PagedJsonScan(path, planPages) }
+}
+
+class PagedJsonScan(path: String, planPages: (FileSystem, HPath) => Seq[PagePartition])
+    extends Scan with Batch {
+  override def readSchema(): StructType = PagedJsonSource.schema
+  override def toBatch: Batch = this
+
+  private def hadoopConf = SparkSession.active.sparkContext.hadoopConfiguration
+
+  /** One partition per page — the pagination cursor space IS the
+    * parallelism dimension.
+    */
+  override def planInputPartitions(): Array[InputPartition] = {
+    val root = new HPath(path)
+    planPages(root.getFileSystem(hadoopConf), root).toArray
+  }
+
+  /** Executors read with the driver's Hadoop conf (credentials, custom
+    * filesystem schemes), serialized once with the factory, not per
+    * partition.
+    */
+  override def createReaderFactory(): PartitionReaderFactory =
+    new PageReaderFactory(new SerializableConfiguration(hadoopConf))
+}
 
 /** Bounded exponential-backoff retry, mirroring the reference transport's
   * `SessionWithRetry` contract (`main.py:55-82`): at most `maxRetries`
@@ -133,55 +158,27 @@ object RetryPolicy {
   }
 }
 
-/** Java-serializable Hadoop-conf carrier (ADVICE r7): the reader factories
-  * used to construct a bare `new Configuration()` on executors, silently
-  * dropping every setting applied to `spark.hadoopConfiguration` —
-  * credentials, custom filesystem schemes — while plan-time discovery used
-  * the session's conf, an inconsistency on any non-local FS. Spark's own
-  * `SerializableConfiguration` is `private[spark]`; this is the same
-  * write/readFields shim. Factories are built on the driver and serialized
-  * once per executor, so the conf still parses once per factory instance,
-  * not per partition.
-  */
-class SerializableHadoopConf(@transient var value: org.apache.hadoop.conf.Configuration)
-    extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    value.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new org.apache.hadoop.conf.Configuration(false)
-    value.readFields(in)
-  }
-}
-
-object SerializableHadoopConf {
-  /** The active session's Hadoop conf, wrapped — call on the driver. */
-  def fromSession(): SerializableHadoopConf =
-    new SerializableHadoopConf(
-      org.apache.spark.sql.SparkSession.active.sparkContext.hadoopConfiguration)
-}
-
-class PageFileReaderFactory(confHolder: SerializableHadoopConf)
-    extends PartitionReaderFactory {
-  private def conf = confHolder.value
-
+class PageReaderFactory(conf: SerializableConfiguration) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val file = partition.asInstanceOf[PageFilePartition].file
+    val page = partition.asInstanceOf[PagePartition]
     new PartitionReader[InternalRow] {
       // A "fetch" is atomic per page (like one HTTP GET): on failure the
       // WHOLE page is re-fetched — never resumed mid-stream, which could
       // silently drop or duplicate rows. Pages are bounded (per_page=100,
       // reference main.py:52), so buffering one page is O(page), not O(task).
       private lazy val lines: Iterator[String] = {
-        val p = new HPath(file)
+        val p = new HPath(page.file)
         RetryPolicy.withRetry() { () =>
           val in = new java.io.BufferedReader(
-            new java.io.InputStreamReader(p.getFileSystem(conf).open(p), "UTF-8"))
+            new java.io.InputStreamReader(p.getFileSystem(conf.value).open(p), "UTF-8"))
           try {
-            val buf = scala.collection.mutable.ArrayBuffer[String]()
             var line = in.readLine()
+            // a capture's status line and headers served the plan-time walk
+            if (page.httpCapture) {
+              while (line != null && line.nonEmpty) line = in.readLine()
+              line = in.readLine()
+            }
+            val buf = scala.collection.mutable.ArrayBuffer[String]()
             while (line != null) { buf += line; line = in.readLine() }
             buf.iterator
           } finally in.close()
@@ -192,7 +189,7 @@ class PageFileReaderFactory(confHolder: SerializableHadoopConf)
         if (lines.hasNext) { line = lines.next(); true } else false
       }
       override def get(): InternalRow =
-        InternalRow(UTF8String.fromString(line), UTF8String.fromString(file))
+        InternalRow(UTF8String.fromString(line), UTF8String.fromString(page.file))
       override def close(): Unit = ()
     }
   }

@@ -160,34 +160,6 @@ class AnnRecallSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
-  test("Lloyd-refined PQ codebook vs seed book: recall@5 at constant shortlist " +
-      "(VERDICT r11 item 8 — result recorded either way)") {
-    val sfDir = sf001
-    val exact = VectorOps.annCosineTopk(spark, sfDir).collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
-    def recallOf(rows: Array[org.apache.spark.sql.Row]): Double = {
-      val s = rows.map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
-      exact.intersect(s).size.toDouble / exact.size
-    }
-    val seed = recallOf(VectorOps.annPqTopk(spark, sfDir).collect())
-    val refined = recallOf(VectorOps.annPqTopkWith(spark, sfDir,
-      graft.pipeline.AnnZone.ensurePqCodesRefined(spark, sfDir),
-      graft.pipeline.AnnZone.ensurePqCodebookRefined(spark, sfDir)).collect())
-    info(f"PQ recall@5 at shortlist ${VectorOps.PqShortlist}: seed $seed%.3f, " +
-      f"Lloyd-refined $refined%.3f")
-    // NEGATIVE RESULT, recorded as measured (BASELINE.md r12): the
-    // integer-quantized Lloyd refinement LOWERS recall on this corpus
-    // (0.960 → 0.880 at sf0.01) — K=16 entries over ~31 members each means
-    // the rounded means drift off the data manifold, where the seed
-    // entries ARE data points. The production queries therefore keep the
-    // SEED book. If this assert ever flips (new corpus/geometry), the
-    // refined book earned adoption — re-evaluate, don't just relax it.
-    assert(seed >= 0.9, "the adopted (seed) book must clear the envelope bar")
-    assert(refined <= seed,
-      "refinement measured worse when recorded; it now measures better — " +
-        "re-run the item-8 adoption decision (see annIvfPqTopk's scaladoc)")
-  }
-
   /** Exact batch→corpus oracle shared by the incremental-ANN tests: the
     * arriving-batch membership recomputed from first principles (MD5
     * salted bucket, independent of the engine's Splits code) and the

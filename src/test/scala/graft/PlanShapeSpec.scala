@@ -465,9 +465,7 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture with AdaptiveSparkPlan
         () => graft.operators.TextOps.trainingManifestStats(spark, sf0001)),
       // GraphOps.cachedPairs' count: the census joins are sized from the
       // filled cache
-      ("graphRankStats", 1, () => graft.operators.GraphOps.graphRankStats(spark, sf0001)),
-      ("pqCodebookRefined", 0,
-        () => graft.operators.VectorOps.pqCodebookRefined(spark, sf0001))
+      ("graphRankStats", 1, () => graft.operators.GraphOps.graphRankStats(spark, sf0001))
     ).foreach { case (name, budget, build) =>
       val (df, eagerDuringBuild) = countEagerActions(build())
       assert(eagerDuringBuild === budget,

@@ -122,31 +122,8 @@ class SourceAndSkewSpec extends AnyFunSuite with SparkFixture {
     }
     assert(dangErr.getMessage.contains("dangling") ||
       Option(dangErr.getCause).exists(_.getMessage.contains("dangling")))
-  }
 
-  test("cursor re-read plans from the chain manifests — zero header re-walks " +
-      "(VERDICT r7 item 7)") {
-    import graft.sources.CursorPagedJsonSource
-    val dir = RawZone.ensureCursorZone(spark, sf0001)
-    // drop any manifests earlier tests cached, so the first read pays the walk
-    def rmManifests(f: java.io.File): Unit =
-      Option(f.listFiles()).foreach(_.foreach { c =>
-        if (c.isDirectory) rmManifests(c)
-        else if (c.getName == CursorPagedJsonSource.ManifestFile) c.delete()
-      })
-    rmManifests(new java.io.File(dir))
-    def readAll(): Long =
-      spark.read.format("graft.sources.CursorPagedJsonSource").load(dir).count()
-    val t0 = CursorPagedJsonSource.headerReads.get()
-    val n1 = readAll()
-    val t1 = CursorPagedJsonSource.headerReads.get()
-    assert(t1 > t0, "a manifest-less read must walk the chains")
-    val n2 = readAll()
-    val t2 = CursorPagedJsonSource.headerReads.get()
-    assert(t2 === t1, "a manifest-hit re-read must not re-open any page header")
-    assert(n1 === n2, "manifest planning must reproduce the walked page set")
-
-    // a traversal-shaped cursor token is rejected, not resolved (ADVICE r7)
+    // ... and a traversal-shaped cursor token is rejected, not resolved (ADVICE r7)
     val esc = new java.io.File("target/tmp/cursor_escape/chain")
     esc.mkdirs()
     java.nio.file.Files.write(new java.io.File(esc, "start.json").toPath,
@@ -161,93 +138,27 @@ class SourceAndSkewSpec extends AnyFunSuite with SparkFixture {
     assert(mentionsEscape(escErr))
   }
 
-  test("a torn or duplicated chain manifest is ignored — re-walk, correct data, cache repaired") {
-    import graft.sources.CursorPagedJsonSource
-    val dir = RawZone.ensureCursorZone(spark, sf0001)
-    def readAll(): Long =
-      spark.read.format("graft.sources.CursorPagedJsonSource").load(dir).count()
-    val truth = readAll() // healthy manifests in place after this
-    // find a chain dir and corrupt its manifest two ways
-    def chainDirs(f: java.io.File): Seq[java.io.File] =
-      Option(f.listFiles()).toSeq.flatten.flatMap { c =>
-        if (c.isDirectory) chainDirs(c)
-        else if (c.getName == CursorPagedJsonSource.StartPage) Seq(f) else Nil
+  test("reading the cursor zone leaves the archive unchanged") {
+    // rebuilt first, so no earlier read can have left files in it
+    org.apache.commons.io.FileUtils.deleteQuietly(
+      new java.io.File(RawZone.cursorZoneDir(sf0001)))
+    val dir = new java.io.File(RawZone.ensureCursorZone(spark, sf0001))
+    def listing(): Seq[(String, Long, Long)] = {
+      val it = org.apache.commons.io.FileUtils.iterateFiles(dir, null, true)
+      val files = scala.collection.mutable.ArrayBuffer[(String, Long, Long)]()
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((dir.toPath.relativize(f.toPath).toString, f.length(), f.lastModified()))
       }
-    val chain = chainDirs(new java.io.File(dir)).head
-    val mf = new java.io.File(chain, CursorPagedJsonSource.ManifestFile)
-    val healthy = new String(java.nio.file.Files.readAllBytes(mf.toPath), "UTF-8")
-    val lines = healthy.trim.split('\n').toSeq
-    // direct writes bypass Hadoop's LocalFS checksum sidecar — drop it so
-    // the reader exercises the count/uniqueness VALIDATION, not just the
-    // unreadable-file fallback (which readManifest also treats as absent)
-    def dropCrc(): Unit =
-      new java.io.File(chain, "." + CursorPagedJsonSource.ManifestFile + ".crc").delete()
-
-    // (a) torn prefix: count header says N but only N-1 names survive
-    java.nio.file.Files.write(mf.toPath,
-      (lines.init.mkString("\n") + "\n").getBytes("UTF-8"))
-    dropCrc()
-    val w0 = CursorPagedJsonSource.headerReads.get()
-    assert(readAll() === truth, "torn manifest must not truncate the dataset")
-    assert(CursorPagedJsonSource.headerReads.get() > w0,
-      "torn manifest must force a re-walk")
-
-    // (b) duplicated page name with a consistent count header
-    val dup = lines.head + "\n" + (lines.drop(1) :+ lines.last).mkString("\n") + "\n"
-    java.nio.file.Files.write(mf.toPath,
-      dup.replaceFirst("#pages=\\d+", s"#pages=${lines.size}").getBytes("UTF-8"))
-    dropCrc()
-    assert(readAll() === truth, "duplicated manifest entry must not double-emit a page")
+      files.sorted.toSeq
+    }
+    val before = listing()
+    assert(spark.read.format("graft.sources.CursorPagedJsonSource").load(dir.toString)
+      .count() > 0)
+    assert(listing() === before, "planning and reading must not write into the archive")
   }
 
-  test("a reserved-name cursor token fails loudly instead of aliasing the manifest " +
-      "(ADVICE r8)") {
-    // a hostile chain whose cursor token is `_manifest` would otherwise be
-    // walked as a page and then OVERWRITTEN by the manifest cache write —
-    // destroying archive bytes on a source that promises read-only planning
-    val dir = new java.io.File("target/tmp/cursor_reserved/chain")
-    dir.mkdirs()
-    java.nio.file.Files.write(new java.io.File(dir, "start.json").toPath,
-      "HTTP/1.1 200 OK\nLink: <_manifest>; rel=\"next\"\n\n{\"workflow_runs\": []}\n"
-        .getBytes("UTF-8"))
-    java.nio.file.Files.write(new java.io.File(dir, "_manifest").toPath,
-      "HTTP/1.1 200 OK\n\n{\"workflow_runs\": []}\n".getBytes("UTF-8"))
-    val err = intercept[Exception] {
-      spark.read.format("graft.sources.CursorPagedJsonSource")
-        .load("target/tmp/cursor_reserved").count()
-    }
-    def mentionsReserved(t: Throwable): Boolean = t != null &&
-      (Option(t.getMessage).exists(_.contains("reserved")) || mentionsReserved(t.getCause))
-    assert(mentionsReserved(err))
-    // and the hostile "_manifest" page's bytes were NOT overwritten
-    val bytes = new String(java.nio.file.Files.readAllBytes(
-      new java.io.File(dir, "_manifest").toPath), "UTF-8")
-    assert(bytes.startsWith("HTTP/1.1 200 OK"),
-      "planning a hostile chain must not clobber archive files")
-
-    // VERDICT r10 item 7: the other reserved class — a '#'-leading page
-    // name would parse as a manifest HEADER line, making the chain's own
-    // manifest permanently unreadable (every read silently re-walking);
-    // validateToken must convert that silent cache-miss into fail-loud
-    val hashDir = new java.io.File("target/tmp/cursor_hash/chain")
-    hashDir.mkdirs()
-    java.nio.file.Files.write(new java.io.File(hashDir, "start.json").toPath,
-      "HTTP/1.1 200 OK\nLink: <#page2>; rel=\"next\"\n\n{\"workflow_runs\": []}\n"
-        .getBytes("UTF-8"))
-    java.nio.file.Files.write(new java.io.File(hashDir, "#page2").toPath,
-      "HTTP/1.1 200 OK\n\n{\"workflow_runs\": []}\n".getBytes("UTF-8"))
-    val hashErr = intercept[Exception] {
-      spark.read.format("graft.sources.CursorPagedJsonSource")
-        .load("target/tmp/cursor_hash").count()
-    }
-    assert(mentionsReserved(hashErr),
-      "a '#'-leading cursor token must fail loudly, never silently " +
-        "degrade the manifest cache")
-  }
-
-  test("a rewritten chain head invalidates the manifest — stale cache re-walks " +
-      "(ADVICE r8)") {
-    import graft.sources.CursorPagedJsonSource
+  test("a rewritten chain head: a re-read returns the current chain") {
     val root = new java.io.File("target/tmp/cursor_fresh")
     val dir = new java.io.File(root, "chain")
     org.apache.commons.io.FileUtils.deleteQuietly(root)
@@ -262,18 +173,17 @@ class SourceAndSkewSpec extends AnyFunSuite with SparkFixture {
     page("p2.json", None, rows = 2)
     def readAll(): Long =
       spark.read.format("graft.sources.CursorPagedJsonSource").load(root.toString).count()
-    assert(readAll() === 4L) // walk + manifest write
+    assert(readAll() === 4L)
     // extend the chain AT THE HEAD: start.json now links to a new page; a
-    // reader trusting the stale manifest would silently truncate the dataset
+    // reader serving a remembered page list would silently truncate the dataset
     page("start.json", Some("p1b.json"), rows = 2)
     page("p1b.json", Some("p2.json"), rows = 3)
     assert(readAll() === 7L,
-      "a stale manifest must not silently serve the old page list")
+      "a re-read must not serve the old page list")
   }
 
-  test("a SAME-LENGTH head rewrite with all old pages intact still invalidates " +
-      "the manifest (VERDICT r9 item 3)") {
-    import graft.sources.CursorPagedJsonSource
+  test("a same-length head rewrite with all old pages intact: a re-read returns " +
+      "the current chain") {
     val root = new java.io.File("target/tmp/cursor_samelen")
     val dir = new java.io.File(root, "chain")
     org.apache.commons.io.FileUtils.deleteQuietly(root)
@@ -290,11 +200,11 @@ class SourceAndSkewSpec extends AnyFunSuite with SparkFixture {
       spark.read.format("graft.sources.CursorPagedJsonSource").load(root.toString).count()
     val head = page("start.json", Some("pa.json"), rows = 2)
     page("pa.json", None, rows = 2)
-    assert(readAll() === 4L) // walk + manifest write
+    assert(readAll() === 4L)
     val lenBefore = head.length()
-    // the r9-flagged blind spot: redirect the head to a DIFFERENT page while
-    // keeping start.json byte-length identical ("pa" -> "pb") and leaving the
-    // old page in place — the old length-only fingerprint accepted this
+    // redirect the head to a DIFFERENT page while keeping start.json
+    // byte-length identical ("pa" -> "pb") and leaving the old page in place
+    // — a cache keyed on the head's length alone would accept this
     page("pb.json", None, rows = 3)
     page("start.json", Some("pb.json"), rows = 2)
     assert(head.length() === lenBefore, "fixture must reproduce a same-length rewrite")
@@ -303,21 +213,12 @@ class SourceAndSkewSpec extends AnyFunSuite with SparkFixture {
     // within a fast test)
     head.setLastModified(head.lastModified() + 2000)
     assert(readAll() === 5L,
-      "a same-length head rewrite must re-walk, not serve the stale page list")
+      "a same-length head rewrite must not serve the stale page list")
 
-    // byte-identical head rewrite with a bumped mtime: content check must
-    // ACCEPT the cache (one header read, no re-walk) and refresh the manifest
-    val walks0 = CursorPagedJsonSource.headerReads.get()
+    // byte-identical head rewrite with a bumped mtime: same chain, same rows
     head.setLastModified(head.lastModified() + 2000)
     assert(readAll() === 5L)
-    val reads = CursorPagedJsonSource.headerReads.get() - walks0
-    assert(reads === 1L,
-      s"an mtime-only change must cost exactly one head header read, saw $reads")
-    // manifest now carries the new mtime: next plan is metadata-only again
-    val walks1 = CursorPagedJsonSource.headerReads.get()
     assert(readAll() === 5L)
-    assert(CursorPagedJsonSource.headerReads.get() === walks1,
-      "refreshed manifest must restore the zero-header-read fast path")
   }
 
   test("salted two-phase aggregation equals direct aggregation under heavy skew") {

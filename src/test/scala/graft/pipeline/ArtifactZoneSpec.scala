@@ -384,9 +384,7 @@ class ArtifactZoneSpec extends AnyFunSuite with SparkFixture {
       built(az, "lsh_buckets")(AnnZone.ensureLshBuckets(spark, sf0001)),
       built(az, "lsh_buckets_corpus")(AnnZone.ensureCorpusLshBuckets(spark, sf0001)),
       built(az, "pq_codebook")(AnnZone.ensurePqCodebook(spark, sf0001)),
-      built(az, "pq_codes")(AnnZone.ensurePqCodes(spark, sf0001)),
-      built(az, "pq_codebook_refined")(AnnZone.ensurePqCodebookRefined(spark, sf0001)),
-      built(az, "pq_codes_refined")(AnnZone.ensurePqCodesRefined(spark, sf0001)))
+      built(az, "pq_codes")(AnnZone.ensurePqCodes(spark, sf0001)))
     versions.foreach { v =>
       val stored = ZoneSchema.committed(v)
       val inferred = spark.read.parquet(v).schema

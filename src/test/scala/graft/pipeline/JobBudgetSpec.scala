@@ -56,11 +56,7 @@ class JobBudgetSpec extends AnyFunSuite with SparkFixture {
     "AnnZone.ensureCorpusLshBuckets" ->
       (() => AnnZone.ensureCorpusLshBuckets(spark, sf0001)),
     "AnnZone.ensurePqCodebook" -> (() => AnnZone.ensurePqCodebook(spark, sf0001)),
-    "AnnZone.ensurePqCodes" -> (() => AnnZone.ensurePqCodes(spark, sf0001)),
-    "AnnZone.ensurePqCodebookRefined" ->
-      (() => AnnZone.ensurePqCodebookRefined(spark, sf0001)),
-    "AnnZone.ensurePqCodesRefined" ->
-      (() => AnnZone.ensurePqCodesRefined(spark, sf0001)))
+    "AnnZone.ensurePqCodes" -> (() => AnnZone.ensurePqCodes(spark, sf0001)))
 
   test("a fresh ensure of every DedupZone/AnnZone artifact runs 0 Spark jobs") {
     ensures.foreach { case (_, ensure) => ensure() } // build whatever is stale
